@@ -1,10 +1,12 @@
 package graft.expr
 
 import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature as ONE native expression over the token array.
@@ -286,80 +288,153 @@ object SortedInterCount {
   }
 }
 
-/** The whole prefix-Jaccard VERIFY stage as one allocation-free
-  * expression over the two sorted token-hash arrays: the generalized
-  * pair-prefix filter (PPJoin+'s suffix-side lemma) and the exact
-  * intersection count with the standard early-abort bound
-  * (inter_so_far + min(remaining) < α ⇒ the pair cannot reach
-  * Jaccard ≥ τ). Replaces `arrays_overlap(slice(a,…), slice(b,…))` +
-  * intersect — the two slice() calls allocated copies of both prefix
-  * arrays per candidate pair (~6.35M pairs × ~KB at sf0.1).
+/** The prefix-Jaccard pair generator of `SimJoin.prefixJaccardJoin`
+  * (q412): one input row is one block pair of one prefix token's posting
+  * list; the output is each document pair of the row whose Jaccard
+  * reaches τ, emitted exactly once across the whole join.
   *
-  * Result contract: for pairs with Jaccard ≥ τ the return value is the
-  * EXACT intersection size (the abort bound can only fire when the true
-  * count is provably below α ≤ ⌈τ/(1+τ)·(n_a+n_b)⌉, and the prefix
-  * filter is the standard no-false-negative lemma); pairs below τ
-  * return a value whose implied Jaccard is also below τ (0 on filter/
-  * abort), so a downstream `jaccard ≥ τ` filter keeps an identical row
-  * set with identical `inter` values — SimJoinSpec's oracle parity and
-  * the q412 hash gate both pin this. α replays the Column-side float
-  * program bit-for-bit: ceil((n_a+n_b)·(τ/(1+τ)) − 1e-9), the 1e-9
-  * slack keeping float dust from ever over-pruning. */
-case class PrefixJaccardInter(left: Expression, right: Expression,
-    tau: Double) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "prefix_jaccard_inter"
+  * `postings` is an array of struct(id, sz, pos, blk, r): document id
+  * (any orderable type), distinct-token count, 1-based position of this
+  * token in the document's rank-sorted prefix, block, and the full
+  * token-rank array ascending. When `same` is false the row's two blocks
+  * differ and only cross-block pairs are tried (a within-block pair
+  * belongs to its block's own row). Each pair (x, y), id_x < id_y, runs:
+  *  1. length: min(|x|,|y|) ≥ τ·max(|x|,|y|);
+  *  2. PPJoin positional bound: 1 + min(px−1, py−1) + min(|x|−px,
+  *     |y|−py) ≥ τ/(1+τ)·(|x|+|y|) − 1e-9 (the slack keeps float dust
+  *     from over-pruning);
+  *  3. emit once: skip when the documents share a rank below this token
+  *     — it is a shared prefix token too, and the pair belongs to the
+  *     row of the smallest one. At that token no shared rank lies below,
+  *     so the overlap is ≤ 1 + min(|x|−px, |y|−py) and filter 2 cannot
+  *     drop a result pair there;
+  *  4. exact merge intersection of the ranks past this token (filter 3
+  *     proved those below disjoint), aborted once count + min(remaining)
+  *     < α = ⌈(|x|+|y|)·τ/(1+τ) − 1e-9⌉.
+  * Rows: a, b, sz_a, sz_b, inter, jaccard = inter / (sz_a + sz_b −
+  * inter), only jaccard ≥ τ — or, with `keepAll`, every pair that
+  * reached filter 4 (inter 0 where it aborted), the candidate gate's
+  * count. */
+case class PrefixPairs(same: Expression, postings: Expression, tau: Double,
+    keepAll: Boolean) extends BinaryExpression with Generator
+    with CodegenFallback {
+  override def left: Expression = same
+  override def right: Expression = postings
+  override def prettyName: String = "prefix_pairs"
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PrefixJaccardInter.compute(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData], tau)
+  private def idType: DataType = postings.dataType.asInstanceOf[ArrayType]
+    .elementType.asInstanceOf[StructType].fields(0).dataType
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expr.PrefixJaccardInter.compute($a, $b, $tau);")
+  @transient private lazy val idOrd = PhysicalDataType.ordering(idType)
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("a", idType, nullable = false),
+    StructField("b", idType, nullable = false),
+    StructField("sz_a", LongType, nullable = false),
+    StructField("sz_b", LongType, nullable = false),
+    StructField("inter", LongType, nullable = false),
+    StructField("jaccard", DoubleType, nullable = false)))
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val p = postings.eval(input).asInstanceOf[ArrayData]
+    if (p == null) Iterator.empty
+    else new PrefixPairs.Pairs(same.eval(input) == true, p, idType, idOrd,
+      tau, keepAll)
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): PrefixJaccardInter =
-    copy(left = newLeft, right = newRight)
+      newRight: Expression): PrefixPairs =
+    copy(same = newLeft, postings = newRight)
 }
 
-object PrefixJaccardInter {
-  def compute(a: ArrayData, b: ArrayData, tau: Double): Long = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    // identical float program to the Column-side alpha: sizes summed as
-    // ints, one double multiply by the precomputed tau/(1+tau), 1e-9
-    // slack, ceil
-    val aCeil = math.ceil((na + nb).toDouble * (tau / (1.0 + tau)) - 1e-9)
-      .toInt
-    val la = math.max(1, na - aCeil + 1)
-    val lb = math.max(1, nb - aCeil + 1)
-    // pair-prefix filter: the first la/lb elements (shared hash order)
-    // must intersect for overlap >= aCeil to be possible
-    var i = 0
-    var j = 0
-    var seen = false
-    while (!seen && i < la && j < lb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) seen = true
-      else if (x < y) i += 1
-      else j += 1
+object PrefixPairs {
+  /** Lazy pair iterator over one posting row: a hot row holds up to B²
+    * pairs, so survivors stream out instead of being buffered. */
+  private class Pairs(same: Boolean, p: ArrayData, idType: DataType,
+      ord: Ordering[Any], tau: Double, keepAll: Boolean)
+      extends Iterator[InternalRow] {
+    private val n = p.numElements()
+    private val ids = new Array[Any](n)
+    private val sz = new Array[Int](n)
+    private val pos = new Array[Int](n)
+    private val blk = new Array[Int](n)
+    private val rk = new Array[Array[Long]](n)
+    locally {
+      var k = 0
+      while (k < n) {
+        val e = p.getStruct(k, 5)
+        ids(k) = InternalRow.copyValue(e.get(0, idType))
+        sz(k) = e.getInt(1)
+        pos(k) = e.getInt(2)
+        blk(k) = e.getInt(3)
+        rk(k) = e.getArray(4).toLongArray()
+        k += 1
+      }
     }
-    if (!seen) return 0L
-    // exact merge count with the early-abort bound
-    var n = 0L
-    i = 0
-    j = 0
-    while (i < na && j < nb) {
-      if (n + math.min(na - i, nb - j) < aCeil) return 0L
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { n += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
+    // the float program of the positional bound and of α
+    private val c = tau / (1.0 + tau)
+    private var i = 0
+    private var j = 0
+    private var pending: InternalRow = null
+
+    override def hasNext: Boolean = {
+      while (pending == null && i < n) {
+        j += 1
+        if (j >= n) { i += 1; j = i }
+        else pending = verify(i, j)
+      }
+      pending != null
     }
-    n
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("prefix_pairs")
+      val r = pending
+      pending = null
+      r
+    }
+
+    private def verify(u: Int, v: Int): InternalRow = {
+      if (!same && blk(u) == blk(v)) return null
+      val cmp = ord.compare(ids(u), ids(v))
+      if (cmp == 0) return null
+      val x = if (cmp < 0) u else v
+      val y = if (cmp < 0) v else u
+      val sa = sz(x)
+      val sb = sz(y)
+      if (!(math.min(sa, sb).toDouble >= tau * math.max(sa, sb).toDouble))
+        return null
+      val px = pos(x)
+      val py = pos(y)
+      val ub = 1 + math.min(px - 1, py - 1) + math.min(sa - px, sb - py)
+      if (!(ub.toDouble >= c * (sa + sb).toDouble - 1e-9)) return null
+      val ra = rk(x)
+      val rb = rk(y)
+      // emit once: the ranks below this token are ra[0, px−1), rb[0, py−1)
+      var ia = 0
+      var ib = 0
+      while (ia < px - 1 && ib < py - 1) {
+        val d = java.lang.Long.compare(ra(ia), rb(ib))
+        if (d == 0) return null
+        if (d < 0) ia += 1 else ib += 1
+      }
+      val alpha = math.ceil((sa + sb).toDouble * c - 1e-9).toInt
+      var inter = 1L // this token
+      ia = px
+      ib = py
+      while (ia < sa && ib < sb) {
+        if (inter + math.min(sa - ia, sb - ib) < alpha) { inter = 0L; ia = sa }
+        else {
+          val d = java.lang.Long.compare(ra(ia), rb(ib))
+          if (d == 0) { inter += 1; ia += 1; ib += 1 }
+          else if (d < 0) ia += 1
+          else ib += 1
+        }
+      }
+      val jac = inter.toDouble / (sa.toLong + sb - inter).toDouble
+      if (!keepAll && !(jac >= tau)) null
+      else new GenericInternalRow(Array[Any](ids(x), ids(y), sa.toLong,
+        sb.toLong, inter, jac))
+    }
   }
 }
 

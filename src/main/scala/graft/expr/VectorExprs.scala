@@ -468,8 +468,6 @@ object GraftFunctions {
       CdcChunks(es(0), litInt(es(1)), litInt(es(2)), litInt(es(3)))),
     "hash56_md5" -> (es => Hash56(es(0))),
     "sorted_inter_count" -> (es => SortedInterCount(es(0), es(1))),
-    "prefix_jaccard_inter" -> (es => PrefixJaccardInter(es(0), es(1),
-      es(2).eval().asInstanceOf[Number].doubleValue())),
     "winnow_fp" -> (es => Winnow(es(0), litInt(es(1)), litInt(es(2)))),
     "jaro_winkler" -> (es => JaroWinkler(es(0), es(1))))
 

@@ -12,37 +12,49 @@ import org.apache.spark.sql.functions._
   * Jaccard ≥ τ can avoid sharing a prefix token), so this is the
   * verify-stage engine for dedup audits.
   *
-  * Scale: candidate generation joins only the PREFIX inverted index —
-  * each document contributes ⌊(1−τ)·|d|⌋+1 rarest tokens, so the pair
-  * work is Σ_prefix-token df², orders of magnitude below the full
-  * Σ df² of a naive token join; the global token ranking rides the
-  * df-band bucketed device (core.bandedRowNumber — its only
-  * unpartitioned window is the df histogram). Verification joins
-  * the full token sets of the candidates only.
+  * Scale: pairs come only from the PREFIX postings — each document
+  * contributes its |d|−⌈τ·|d|⌉+1 rarest tokens, so the pair work is
+  * Σ_prefix-token df², orders of magnitude below the full Σ df² of a
+  * naive token join. The global token ranking rides the df-band
+  * bucketed device (core.bandedRowNumber — its only unpartitioned
+  * window is the df histogram). The prefix postings are grouped by
+  * (token, block pair) and one Catalyst generator
+  * (graft.expr.PrefixPairs) filters, verifies and emits each pair once
+  * at its smallest shared prefix token: no checkpoint, no dedup
+  * exchange, no verify join. Hot tokens split into ⌈df/B⌉ blocks so a
+  * generator row holds ~B² pairs at most.
   *
   * Determinism: token sets are exact; sizes, intersections and ranks
-  * are integers; Jaccard is one integer-ratio division. */
+  * are integers; every pair is emitted exactly once whatever the block
+  * size; Jaccard is one integer-ratio division. */
 object SimJoin {
 
-  /** Token-hash + candidate-pair stage of [[prefixJaccardJoin]], exposed
-    * (package-private) so the candidate-count gate can measure the pair
-    * frame the verify stage will see (r12 verdict item 1): a prefix- or
-    * positional-filter regression shows up as a candidate blowup — the
-    * memory-pressure cliff behind q412's 7→54 s loaded-host spreads —
-    * long before it shows up as bench variance. Returns (tokens frame
-    * `_id|_tok`, deduplicated candidate-pair frame `a|b`). */
-  private[graft] def prefixCandidates(docs: DataFrame, idCol: String,
-      textCol: String, tau: Double): (DataFrame, DataFrame) = {
-    // tokens travel as 56-bit md5 hashes (longs): 3× less shuffle than
-    // UTF8 strings through the candidate join and O(1) comparisons in
-    // the array verify — the 2^56 collision odds are far below the 4dp
-    // hash-compare tolerance everywhere else in the engine
+  /** All pairs with token-set Jaccard ≥ τ via prefix filtering.
+    * Output: a, b (idCol values, a < b), sz_a, sz_b, inter, jaccard. */
+  def prefixJaccardJoin(docs: DataFrame, idCol: String, textCol: String,
+      tau: Double): DataFrame =
+    prefixPairs(docs, idCol, textCol, tau, keepAll = false)
+
+  /** Number of pairs that reach the exact intersection inside the pair
+    * generator (every filter passed, emitted once) — the candidate-count
+    * gate's measure (r12 verdict item 1): a prefix-, length-, positional-
+    * or emit-once regression shows up here as a candidate blowup long
+    * before it shows up as bench variance. */
+  private[graft] def prefixVerifiedPairs(docs: DataFrame, idCol: String,
+      textCol: String, tau: Double): Long =
+    prefixPairs(docs, idCol, textCol, tau, keepAll = true).count()
+
+  private def prefixPairs(docs: DataFrame, idCol: String, textCol: String,
+      tau: Double, keepAll: Boolean): DataFrame = {
+    require(tau > 0 && tau < 1, s"0 < tau < 1: $tau")
+    // tokens travel as 56-bit md5 hashes (longs): O(1) comparisons and a
+    // total tie order for the rarity rank — the 2^56 collision odds are
+    // far below the 4dp hash-compare tolerance everywhere else
     val tok = docs
       .select(col(idCol).as("_id"),
         explode(array_distinct(tokens(col(textCol)))).as("_ts"))
       .where(col("_ts") =!= "")
       .select(col("_id"), graft.text.TextOps.hash56(col("_ts")).as("_tok"))
-    val sizes = tok.groupBy(col("_id")).agg(count(lit(1)).as("_sz"))
     // global rarity rank (df asc, token asc) via the df-band bucketed
     // device: the only unpartitioned window rides the df HISTOGRAM
     // (distinct df values — ~hundreds even at corpus scale), never the
@@ -51,142 +63,59 @@ object SimJoin {
       tok.groupBy(col("_tok")).agg(count(lit(1)).as("_df")),
       band = col("_df"), bandAsc = true, tie = Seq(col("_tok").asc),
       out = "_rk")
-      .select(col("_tok"), col("_rk"))
-    val pfx = tok.join(rank, "_tok").join(sizes, "_id")
-      .withColumn("_pos", row_number().over(
-        Window.partitionBy(col("_id")).orderBy(col("_rk").asc)))
-      // prefix length |d| − ⌈τ·|d|⌉ + 1
-      .where(col("_pos") <=
-        col("_sz") - ceil(lit(tau) * col("_sz").cast("double")) + 1)
-      .select(col("_id"), col("_tok"), col("_sz"), col("_pos"))
-    // PPJoin positional filter (r10/r11 verdict item 3): a match on a
-    // prefix token at rank-ordered positions (px, py) bounds the
-    // overlap at 1 + min(px−1, py−1) + min(|x|−px, |y|−py); Jaccard ≥ τ
-    // needs overlap ≥ α = ⌈τ/(1+τ)·(|x|+|y|)⌉. The bound is applied
-    // PER MATCH ROW inside the join (prunes before the pair shuffle),
-    // then tightened to the min over a pair's matches — every match's
-    // bound is valid, so the tightest decides. A 1e-9 slack keeps the
-    // float α from ever over-pruning (verify is exact anyway).
-    val ub = lit(1) +
-      least(col("x._pos") - 1, col("y._pos") - 1) +
-      least(col("x._sz") - col("x._pos"), col("y._sz") - col("y._pos"))
-    val alpha = lit(tau / (1.0 + tau)) *
-      (col("sz_a") + col("sz_b")).cast("double") - lit(1e-9)
-    // hot-token block split (r13; guide §2.5 "salt the key" adapted to
-    // a self-join): on a template-heavy corpus one prefix token can
-    // carry df ≈ all docs (measured 3.8k of 5k at sf0.1), and a plain
-    // equi-join generates that token's df²/2 matches in ONE sort-merge
-    // task — the single-task straggler/spill behind the 7→50 s spreads.
-    // Splitting each token's postings into ⌈df/B⌉ deterministic blocks
-    // and joining on (token, blk_x, blk_y) — x replicated over blk_y,
-    // y over blk_x — yields every pair exactly once (each pair matches
-    // on the unique key (tok, blk(x), blk(y))) while bounding a join
-    // key's matches at B². Cold tokens have one block: no replication.
+    // one row per doc: its token ranks ascending (`_r`, the merge input
+    // of the generator) with each rank's df (block sizing below)
+    val byDoc = tok.join(rank, "_tok").groupBy(col("_id"))
+      .agg(array_sort(collect_list(struct(col("_rk"), col("_df")))).as("_rd"))
+      .select(col("_id"), size(col("_rd")).as("_sz"),
+        col("_rd._rk").as("_r"), col("_rd"))
+    // hot-token block split (r13; guide §2.5 "salt the key" adapted to a
+    // self-join): on a template-heavy corpus one prefix token can carry
+    // df ≈ all docs (measured 3.8k of 5k at sf0.1), and one generator row
+    // per token would own its df²/2 pairs in ONE task. Each token's
+    // postings split into g = ⌈df/B⌉ deterministic md5 blocks (corpus df
+    // bounds the prefix posting count, so no prefix-df pass), and an
+    // entry of block k joins the rows keyed (min(k, j), max(k, j)),
+    // j ∈ [0, g): every pair meets in exactly one row, the one of its
+    // two blocks, and a row holds ≤ 2 blocks — ~B² pairs. Cold tokens
+    // have one block: no replication.
     val blockB = docs.sparkSession.conf
       .getOption("spark.graft.simjoin.blockSize").map(_.toLong)
       .getOrElse(1024L)
-    val pdf = pfx.groupBy(col("_tok")).agg(count(lit(1)).as("_pdf"))
-    // materialize the blocked prefix index ONCE (prefix-sized:
-    // Σ ⌊(1−τ)|d|⌋+1 rows) — both join sides below consume it, and
-    // without the checkpoint each side re-ran the whole tok→rank→
-    // window→pdf chain (probe: ~1.2 s per side of q412's 7.4 s at
-    // sf0.1; exchange reuse only sometimes collapsed them). Eager and
-    // GC-cleaned (guide §5).
-    val pfxB = pfx.join(pdf, "_tok")
+    val postings = byDoc
+      // prefix length |d| − ⌈τ·|d|⌉ + 1: no pair with Jaccard ≥ τ can
+      // avoid sharing a prefix token
+      .select(col("_id"), col("_sz"), col("_r"), posexplode(slice(col("_rd"),
+        lit(1), (col("_sz") - ceil(lit(tau) * col("_sz").cast("double")) + 1)
+          .cast("int"))).as(Seq("_p0", "_e")))
       .withColumn("_g",
-        ceil(col("_pdf").cast("double") / blockB.toDouble).cast("int"))
+        ceil(col("_e._df").cast("double") / blockB.toDouble).cast("int"))
       .withColumn("_blk", pmod(graft.text.TextOps.hash56(
         col("_id").cast("string")), col("_g").cast("long")).cast("int"))
-      .localCheckpoint(true)
-    val xSide = pfxB
-      .withColumn("_bx", col("_blk"))
-      .withColumn("_by", explode(sequence(lit(0), col("_g") - 1)))
-      .drop("_pdf", "_g", "_blk")
-    val ySide = pfxB
-      .withColumn("_by", col("_blk"))
-      .withColumn("_bx", explode(sequence(lit(0), col("_g") - 1)))
-      .drop("_pdf", "_g", "_blk")
-    // shuffled HASH join, not sort-merge (guide §3.1): the join key
-    // (token, blk_x, blk_y) is block-bounded — any key's build rows ≤ B
-    // — and the build side is the prefix index (the small fraction
-    // (1−τ) of each doc's tokens), so per-partition hash maps stay
-    // partition-sized at any scale while SMJ paid two full sorts of the
-    // replicated index. Probe at sf0.1: the SMJ join step was ~3 s of
-    // the 7.4 s candidate stage.
-    val cand = xSide.as("x").hint("shuffle_hash").join(ySide.as("y"),
-        col("x._tok") === col("y._tok") &&
-          col("x._bx") === col("y._bx") && col("x._by") === col("y._by") &&
-          col("x._id") < col("y._id"))
-      .select(col("x._id").as("a"), col("y._id").as("b"),
-        col("x._sz").as("sz_a"), col("y._sz").as("sz_b"),
-        ub.cast("double").as("_ub"))
-      .where(least(col("sz_a"), col("sz_b")).cast("double") >=
-        lit(tau) * greatest(col("sz_a"), col("sz_b")).cast("double") &&
-        col("_ub") >= alpha)
-      // the pair-key exchange below ships ONLY the 16-byte (a, b) key
-      // (r14, guide §2.3 / r13 verdict item 1): sizes are functionally
-      // dependent on the ids and re-derive for free at verify
-      // (size(_arr) on the token arrays the verify joins anyway), and
-      // the r13 min(_ub) "tightening" was provably dead — every match
-      // row surviving the per-row `_ub >= alpha` filter above has
-      // _ub >= alpha, so the min over survivors always passed the
-      // post-agg recheck. Both drops cut the match-stream exchange from
-      // 44 to 16 bytes/row (~28.7M rows at sf0.1) without changing the
-      // surviving pair set.
-      .select(col("a"), col("b"))
-      // pair-key banding (r12 verdict item 1): hash-repartition the raw
-      // match stream on the pair key BEFORE the dedup aggregation.
-      // Without it every partial-agg task's hash map holds each distinct
-      // pair whose shared prefix tokens land in that task — on a
-      // template-heavy corpus that approaches ALL pairs per task, and the
-      // spill-to-sort fallback under host memory pressure is the 7→54 s
-      // load cliff. Partitioned on (a,b) — which satisfies the agg's
-      // clustered distribution, so no second exchange — each task's map
-      // is bounded by pairs/shufflePartitions. The exchange moves the
-      // un-combined match stream, but match rows per pair are few
-      // (shared prefix tokens only), so the forgone map-side combine is
-      // noise next to the bounded-memory guarantee.
-      .repartition(col("a"), col("b"))
-      .distinct()
-    (tok, cand)
-  }
-
-  /** All pairs with token-set Jaccard ≥ τ via prefix filtering.
-    * Output: a, b (idCol values, a < b), sz_a, sz_b, inter, jaccard. */
-  def prefixJaccardJoin(docs: DataFrame, idCol: String, textCol: String,
-      tau: Double): DataFrame = {
-    require(tau > 0 && tau < 1, s"0 < tau < 1: $tau")
-    graft.expr.GraftFunctions.register(docs.sparkSession)
-    val (tok, cand) = prefixCandidates(docs, idCol, textCol, tau)
-    // verify on packed token ARRAYS, not an exploded token join — the
-    // join-based verify expands every candidate pair by its full token
-    // list (measured 40 s at sf0.1 on ~1M near-identical candidates);
-    // array_intersect keeps each pair one row and runs in codegen
-    val arrs = tok.groupBy(col("_id"))
-      .agg(array_sort(collect_list(col("_tok"))).as("_arr"))
-    // whole verify as ONE codegen'd allocation-free expression
-    // (graft.expr.PrefixJaccardInter): the PPJoin+ pair-prefix filter
-    // (Chaudhuri et al.'s lemma in the shared hash order) and the exact
-    // merge intersection with the early-abort bound fused per pair —
-    // the previous slice+arrays_overlap+array_intersect chain allocated
-    // two prefix copies and a hash set per candidate (~6.35M pairs at
-    // sf0.1). Pairs the filter/bound rejects return inter = 0 →
-    // jaccard 0 < τ, so the kept rows and their inter values are
-    // IDENTICAL (only pairs provably below α are cut short).
-    cand
-      .join(arrs.select(col("_id").as("a"), col("_arr").as("_aa")), "a")
-      .join(arrs.select(col("_id").as("b"), col("_arr").as("_ab")), "b")
-      // sizes re-derived from the joined arrays (identical values: _arr
-      // is exactly the distinct-token set _sz counted), so the candidate
-      // exchange above ships bare (a, b) pair keys
-      .withColumn("sz_a", size(col("_aa")).cast("long"))
-      .withColumn("sz_b", size(col("_ab")).cast("long"))
-      .withColumn("inter", call_function("prefix_jaccard_inter",
-        col("_aa"), col("_ab"), lit(tau)))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-      .where(col("jaccard") >= tau)
-      .select("a", "b", "sz_a", "sz_b", "inter", "jaccard")
+      .withColumn("_j", explode(sequence(lit(0), col("_g") - 1)))
+      .select(col("_id"), col("_sz"), col("_r"), col("_p0"), col("_blk"),
+        col("_e._rk").as("_tk"), least(col("_blk"), col("_j")).as("_bx"),
+        greatest(col("_blk"), col("_j")).as("_by"))
+      // spread the rows over a FIXED task count: AQE sizes partitions by
+      // bytes, and the posting stream is small (~1.75 MB at sf0.1) while
+      // the generator's cost is its pairs, so a coalesced exchange — or
+      // none, behind a single-partition rank window — left the whole
+      // pair loop in one task. Hash-partitioned on the group key, the
+      // aggregation below needs no second exchange.
+      .repartition(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        .toInt, col("_tk"), col("_bx"), col("_by"))
+      .groupBy(col("_tk"), col("_bx"), col("_by"))
+      .agg(collect_list(struct(col("_id"), col("_sz"),
+        (col("_p0") + 1).as("_pos"), col("_blk"), col("_r"))).as("_p"))
+    // one generator pass: length, positional, emit-once and exact
+    // intersection per pair (graft.expr.PrefixPairs) — each pair leaves
+    // exactly once, so no dedup exchange and no verify join follow
+    postings.select(org.apache.spark.sql.GraftColumnBridge.column(
+      graft.expr.PrefixPairs(
+        org.apache.spark.sql.GraftColumnBridge.expression(
+          col("_bx") === col("_by")),
+        org.apache.spark.sql.GraftColumnBridge.expression(col("_p")),
+        tau, keepAll)))
   }
 
   /** Exact TF-IDF cosine top-k neighbors per document via the shared-

@@ -230,13 +230,14 @@ class Round12Spec extends SparkSpec {
   test("prefixJaccardJoin: positional + pair-prefix filters preserve the exact result") {
     import spark.implicits._
     // brute-force oracle on a small tie-heavy corpus
-    val docs = (0 until 60).map { i =>
-      val words = (0 until 8).map(j => s"w${(i * (j + 3) + j) % 23}")
-      (i.toLong, words.mkString(" "))
-    }.toDF("doc_id", "text")
-    val got = graft.sim.SimJoin.prefixJaccardJoin(docs, "doc_id", "text", 0.5)
+    val docs = SimJoinSpec.tieHeavyDocs(spark)
+    val rows = graft.sim.SimJoin.prefixJaccardJoin(docs, "doc_id", "text", 0.5)
       .select("a", "b", "jaccard").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    // the Set compare below hides duplicates: each pair must be one row
+    assert(rows.length == rows.map(r => (r._1, r._2)).distinct.length,
+      s"duplicate pairs: ${rows.length} rows")
+    val got = rows.toSet
     val toks = docs.collect().map(r => r.getLong(0) ->
       r.getString(1).split(" ").toSet).toMap
     val want = (for {
