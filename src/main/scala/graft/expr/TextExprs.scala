@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature as ONE native expression over the token array.
@@ -203,6 +203,119 @@ object JaroWinkler {
     val maxP = math.min(4, math.min(l1, l2))
     while (prefix < maxP && a(prefix) == b(prefix)) prefix += 1
     sim + prefix * 0.1 * (1.0 - sim)
+  }
+}
+
+/** `levenshtein(left, right) <= k` as one codegen'd predicate that stops
+  * as soon as the answer is known — the pair test of
+  * `TextOps.entityResolve`. Spark's `levenshtein` fills the whole n·m
+  * matrix for every pair; this kernel, in order:
+  *  1. length gate: |n − m| > k code points can never pass;
+  *  2. trims the common prefix and suffix (they never change the
+  *     distance), so identical strings cost one O(len) scan;
+  *  3. fills only Ukkonen's band |i − j| ≤ k of what is left and returns
+  *     false as soon as every cell of a row exceeds k: costs never
+  *     decrease along a path, and a cell outside the band costs more than
+  *     k already, so no later row can come back under k.
+  * A band cell whose true cost is ≤ k has its whole optimal path inside
+  * the band, so the banded value is exact wherever it matters.
+  *
+  * Characters are Spark's: code points cut by the UTF-8 first-byte
+  * length (`UTF8String.numBytesForFirstByte`), equal iff their bytes are
+  * equal. An all-ASCII string is taken byte by byte; others are cut into
+  * code points, each packed into one int (the first byte fixes the
+  * length, so packing is one-to-one). LevenshteinWithinSpec pins
+  * equality with `UTF8String.levenshteinDistance(other) <= k`. Null in,
+  * null out. */
+case class LevenshteinWithin(left: Expression, right: Expression, k: Int)
+    extends BinaryExpression {
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "levenshtein_within"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    LevenshteinWithin.compute(a.asInstanceOf[UTF8String],
+      b.asInstanceOf[UTF8String], k)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expr.LevenshteinWithin.compute($a, $b, $k);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): LevenshteinWithin =
+    copy(left = newLeft, right = newRight)
+}
+
+object LevenshteinWithin {
+  def compute(sa: UTF8String, sb: UTF8String, k: Int): Boolean = {
+    val n = sa.numChars()
+    val m = sb.numChars()
+    if (math.abs(n - m) > k) return false
+    val a = units(sa, n)
+    val b = units(sb, m)
+    var lo = 0
+    while (lo < n && lo < m && a(lo) == b(lo)) lo += 1
+    var ea = n
+    var eb = m
+    while (ea > lo && eb > lo && a(ea - 1) == b(eb - 1)) { ea -= 1; eb -= 1 }
+    if (ea <= eb) banded(a, lo, ea, b, eb, k)
+    else banded(b, lo, eb, a, ea, k)
+  }
+
+  /** The n characters of `s` as comparable ints: its bytes when every
+    * character is one byte, else one packed code point each. */
+  private def units(s: UTF8String, n: Int): Array[Int] = {
+    val out = new Array[Int](n)
+    val nb = s.numBytes()
+    var i = 0
+    if (n == nb) {
+      while (i < n) { out(i) = s.getByte(i); i += 1 }
+    } else {
+      var p = 0
+      while (i < n) {
+        val end = math.min(nb, p + UTF8String.numBytesForFirstByte(s.getByte(p)))
+        var u = 0
+        while (p < end) { u = (u << 8) | (s.getByte(p) & 0xff); p += 1 }
+        out(i) = u
+        i += 1
+      }
+    }
+    out
+  }
+
+  /** Whether s[lo, se) and t[lo, te) are within k edits, for
+    * se − lo ≤ te − lo ≤ se − lo + k: one column per character of t over
+    * the band of rows i of s with |i − j| ≤ k. */
+  private def banded(s: Array[Int], lo: Int, se: Int, t: Array[Int],
+      te: Int, k: Int): Boolean = {
+    val n = se - lo
+    val m = te - lo
+    if (n == 0) return m <= k
+    val big = Int.MaxValue / 2
+    var p = new Array[Int](n + 1)
+    var d = new Array[Int](n + 1)
+    var i = 0
+    while (i <= n) { p(i) = if (i <= k) i else big; i += 1 }
+    var j = 1
+    while (j <= m) {
+      val c = t(lo + j - 1)
+      val from = math.max(1, j - k)
+      val to = math.min(n, j + k)
+      d(from - 1) = if (from == 1) j else big
+      var rowMin = d(from - 1)
+      i = from
+      while (i <= to) {
+        val diag = if (s(lo + i - 1) == c) p(i - 1) else p(i - 1) + 1
+        val v = math.min(diag, math.min(d(i - 1), p(i)) + 1)
+        d(i) = v
+        if (v < rowMin) rowMin = v
+        i += 1
+      }
+      if (to < n) d(to + 1) = big
+      if (rowMin > k) return false
+      val sw = p; p = d; d = sw
+      j += 1
+    }
+    p(n) <= k
   }
 }
 

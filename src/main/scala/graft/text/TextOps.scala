@@ -255,40 +255,41 @@ object TextOps {
     * produces on boilerplate). Each round shuffles only the edge list,
     * never document content. Output: id, cluster. */
   def dupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 20, maxLocalEdges: Int = 1 << 20): DataFrame = {
-    val edges = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-    // near-dup edge lists are tiny relative to the corpus: up to
-    // maxLocalEdges the components resolve by driver-side union-find in
-    // one pass (no iterative jobs), like the sample-based model fits —
-    // the label-propagation loop below is the >1M-edge fallback
-    val head = edges.limit(maxLocalEdges + 1).collect()
-    if (head.length <= maxLocalEdges) {
-      val parent = collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      head.foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra != rb) { // union by min id = the survivor rule
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val spark = docs.sparkSession
-      import spark.implicits._
-      val labels = parent.keys.map(x => (x, find(x))).toSeq
-        .toDF("id", "cluster")
-      return docs.select(col(idCol).cast("long").as("id"))
-        .join(broadcast(labels.where(col("id") =!= col("cluster"))), Seq("id"), "left")
-        .withColumn("cluster", coalesce(col("cluster"), col("id")))
-    }
-    val labels = ccLargeSmallStar(edges, maxIter)
+      maxIter: Int = 20, maxLocalEdges: Int = 1 << 20): DataFrame =
     docs.select(col(idCol).cast("long").as("id"))
-      .join(labels, Seq("id"), "left")
+      .join(componentLabels(pairs, maxIter, maxLocalEdges), Seq("id"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col("id")))
+
+  /** Component labels of the (a, b) edge list, label = min id: (id,
+    * cluster) rows for the pair-connected nodes; a node with no row is
+    * its own label (callers left-join and coalesce). Up to
+    * `maxLocalEdges` edges (near-dup edge lists are tiny next to the
+    * corpus) this is one collect and a driver-side union-find, returned
+    * as a broadcast frame of the non-root nodes — no iterative jobs;
+    * past it, [[ccLargeSmallStar]]. */
+  private def componentLabels(pairs: DataFrame, maxIter: Int,
+      maxLocalEdges: Int): DataFrame = {
+    val edges = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+    val head = edges.limit(maxLocalEdges + 1).collect()
+    if (head.length > maxLocalEdges) return ccLargeSmallStar(edges, maxIter)
+    val parent = collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    head.foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (ra != rb) { // union by min id = the survivor rule
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    broadcast(parent.keys.map(x => (x, find(x))).toSeq.toDF("id", "cluster")
+      .where(col("id") =!= col("cluster")))
   }
 
   /** Distributed connected components by alternating large-star /
@@ -425,7 +426,8 @@ object TextOps {
     * `maxDist` Levenshtein edits are the same entity; transitive closure
     * groups them into clusters labeled by min id — the record-linkage
     * complement of the shingle-based near-dup family (catches
-    * small-typo / OCR-noise duplicates that shift every shingle).
+    * small-typo / OCR-noise duplicates that shift every shingle). A doc
+    * with a null text matches nothing and is its own cluster.
     *
     * Determinism: Levenshtein distance is an exact integer with one
     * classic definition — both engines agree symbol-for-symbol — and
@@ -435,42 +437,45 @@ object TextOps {
     *
     * Scale: exact-duplicate texts collapse FIRST (one hash aggregate to
     * a min-id representative — lev 0 pairs cluster trivially, and at
-    * corpus scale exact copies are the dominant mass, so running the
-    * O(len²) distance over them is pure waste: the naive form measured
-    * 16× super-linear on a copy-heavy probe, this form is flat). The
-    * distance then only runs between DISTINCT strings inside blocks
-    * (equi-join on the prefix key) behind a length-difference prefilter
-    * (|len a − len b| > maxDist can never pass — the standard cheap
-    * bound), so pair work is Σ distinct-block²; the closure is
-    * [[dupClusters]] (driver union-find under `maxLocalEdges`,
-    * large-star/small-star above), and labels broadcast back through
-    * the text groups. Component label = min doc id (rep ids are per-text
-    * minima, so the rep-level min IS the doc-level min). */
+    * corpus scale exact copies are the dominant mass: the naive form
+    * measured 16× super-linear on a copy-heavy probe, this form is
+    * flat). Distinct texts then pair inside blocks (equi-join on the
+    * prefix key), and the whole pair test is the join condition, cheap
+    * conjuncts first: rid order, then the length-difference gate
+    * (|len a − len b| > maxDist never passes), then the distance. A
+    * `.where` on the distance would be pushed into the join condition
+    * AHEAD of them (PushPredicateThroughJoin), running it on every
+    * block match — both orientations and each text against itself. The
+    * distance is [[graft.expr.LevenshteinWithin]], which trims common
+    * affixes and fills only the k-band with an early exit, so even a
+    * reordered self-match costs O(len). The closure is the
+    * [[dupClusters]] union-find over rep ids (driver-side under
+    * `maxLocalEdges`, large-star/small-star above); its labels broadcast
+    * back onto the docs through each doc's rep id, the min id of its
+    * text (rep ids are per-text minima, so the rep-level min IS the
+    * doc-level min). One lazy plan: the only job before the action is
+    * the edge collect. */
   def entityResolve(docs: DataFrame, idCol: String, textCol: String,
       blockChars: Int = 16, maxDist: Int = 20): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     val ids = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-    // reps feeds FOUR subtrees (both self-join sides, the cluster seed,
-    // the label join-back): persist — NOT localCheckpoint — because the
-    // InMemoryRelation's size statistics drive the blocked self-join's
-    // broadcast strategy (a stats-less checkpoint leaf measured q211 at
-    // ~7 s vs ~2 s, r14). The cache lifecycle is bounded by
-    // materializing the doc-sized result below and unpersisting in
-    // `finally` — no retained CacheManager entry outlives the call.
-    val reps = ids.groupBy("t").agg(min("id").as("rid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val d = reps.withColumn("blk", substring(col("t"), 1, blockChars))
-      val pairs = d.as("x").join(d.as("y"),
-          col("x.blk") === col("y.blk") && col("x.rid") < col("y.rid") &&
-            abs(length(col("x.t")) - length(col("y.t"))) <= maxDist)
-        .where(levenshtein(col("x.t"), col("y.t")) <= maxDist)
-        .select(col("x.rid").as("a"), col("y.rid").as("b"))
-      val repClusters = dupClusters(reps.select(col("rid").as("id")), "id", pairs)
-        .withColumnRenamed("id", "rid")
-      ids.join(reps, "t").join(repClusters, "rid")
-        .select(col("id"), col("cluster"))
-        .localCheckpoint(true)
-    } finally reps.unpersist(false)
+    val reps = ids.where(col("t").isNotNull).groupBy("t").agg(min("id").as("rid"))
+      .select(col("rid"), col("t"), length(col("t")).as("len"),
+        substring(col("t"), 1, blockChars).as("blk"))
+    val pairs = reps.as("x").join(reps.as("y"),
+        col("x.blk") === col("y.blk") && col("x.rid") < col("y.rid") &&
+          abs(col("x.len") - col("y.len")) <= maxDist &&
+          column(graft.expr.LevenshteinWithin(
+            expression(col("x.t")), expression(col("y.t")), maxDist)))
+      .select(col("x.rid").as("a"), col("y.rid").as("b"))
+    // each doc's rep id as a min-id window over its text: one exchange,
+    // where a join back to `reps` measured slower and one job more
+    val rid = when(col("t").isNull, col("id"))
+      .otherwise(min("id").over(Window.partitionBy("t")))
+    ids.select(col("id").as("doc"), rid.as("id"))
+      .join(componentLabels(pairs, maxIter = 20, maxLocalEdges = 1 << 20),
+        Seq("id"), "left")
+      .select(col("doc").as("id"), coalesce(col("cluster"), col("id")).as("cluster"))
   }
 
   /** Flesch reading-ease (Flesch '48): 206.835 − 1.015·(words/sentences)
@@ -562,12 +567,13 @@ object TextOps {
     val ids = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
     val reps = ids.groupBy("t").agg(min("id").as("rid"))
     val d = reps.withColumn("blk", substring(col("t"), 1, blockChars))
+    val jw = graft.expr.GraftFunctions.jaroWinkler(spark, col("x.t"), col("y.t"))
+    // the similarity goes LAST in the join condition: a `.where` on it
+    // would be pushed in ahead of the rid test and score every block
+    // match, self-matches and both orientations included
     d.as("x").join(d.as("y"),
-        col("x.blk") === col("y.blk") && col("x.rid") < col("y.rid"))
-      .withColumn("jw",
-        graft.expr.GraftFunctions.jaroWinkler(spark, col("x.t"), col("y.t")))
-      .where(col("jw") >= minSim)
-      .select(col("x.rid").as("a"), col("y.rid").as("b"), col("jw"))
+        col("x.blk") === col("y.blk") && col("x.rid") < col("y.rid") && jw >= minSim)
+      .select(col("x.rid").as("a"), col("y.rid").as("b"), jw.as("jw"))
   }
 
   /** Sorted-neighborhood entity-resolution blocking (Hernández & Stolfo

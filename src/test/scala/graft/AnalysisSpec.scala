@@ -274,6 +274,31 @@ class AnalysisSpec extends SparkSpec {
     assert(out(4L) == 4L, "unrelated doc is a singleton")
   }
 
+  test("entity resolve: null texts are singleton clusters, never merged") {
+    // the oracle's transitive closure seeds every doc, so a doc whose text
+    // is null is its own cluster — null matches nothing, not even null
+    val docs = Seq[(Long, Option[String])](
+      (1L, Some("the quick brown fox jumps")),
+      (2L, None),
+      (3L, None),
+      (4L, Some("the quick brown fox jumps")), // exact dup of 1
+      (5L, Some("the quick brown fox jumped")), // 2 edits from 1
+      (6L, Some("an unrelated sentence here")))
+      .toDF("doc_id", "text")
+    val out = TextOps.entityResolve(docs, "doc_id", "text",
+      blockChars = 16, maxDist = 2)
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
+    assert(out == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L, 5L -> 1L, 6L -> 6L),
+      s"clusters: $out")
+  }
+
+  test("entity resolve: empty input gives an empty (id, cluster) frame") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val out = TextOps.entityResolve(empty, "doc_id", "text")
+    assert(out.columns.toSeq == Seq("id", "cluster"))
+    assert(out.count() == 0L)
+  }
+
   test("conformal p-value: exact rank ratio, ties share p, guarantee bound") {
     val cal = (1 to 9).map(i => ("k", i.toDouble)).toDF("g", "s")
     val dat = Seq(("k", 1L, 9.5), ("k", 2L, 5.0), ("k", 3L, 0.5), ("k", 4L, 5.0))

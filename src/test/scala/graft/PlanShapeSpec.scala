@@ -313,4 +313,64 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"centroid dim join must broadcast (model-sized sides):\n$p")
     assert(p.contains("partial_sum"), "component sums must map-side combine")
   }
+
+  test("jw pairs: the similarity is not the first non-equi join conjunct") {
+    // a `.where` on the score is pushed into the join condition AHEAD of
+    // the rid test, and then scores every block match — self-matches and
+    // both orientations included
+    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.functions._
+    val d = core.table(spark, sfDir, "documents")
+      .select(col("doc_id"), substring(col("text"), 1, 64).as("name"))
+    val conds = graft.text.TextOps.jwPairs(d, "doc_id", "name",
+        blockChars = 8, minSim = 0.8)
+      .queryExecution.optimizedPlan.collect { case j: Join => j.condition }.flatten
+    assert(conds.length == 1, s"one pair join: $conds")
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case o => Seq(o)
+    }
+    def scores(e: Expression) = e.exists(_.isInstanceOf[graft.expr.JaroWinkler])
+    val nonEqui = conjuncts(conds.head).filterNot(_.isInstanceOf[EqualTo])
+    assert(nonEqui.exists(scores), s"the score is a join conjunct: ${conds.head}")
+    assert(!scores(nonEqui.head), s"the score runs first: ${conds.head}")
+  }
+
+  test("entity resolve: one lazy plan — no persisted or cached state, at most 3 build jobs") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // start from no state (what earlier specs left is not this query's)
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(true))
+    def assertNoState(when: String): Unit = {
+      assert(sc.getPersistentRDDs.isEmpty, s"persisted RDDs $when")
+      val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      assert(cm.isEmpty, s"cached relations $when")
+    }
+    val phase = "graft.spec.phase"
+    val buildJobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(phase) == "build")
+          buildJobs.incrementAndGet()
+    }
+    val docs = core.table(spark, sfDir01, "documents")
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(phase, "build")
+      val er = try graft.text.TextOps.entityResolve(docs, "doc_id", "text",
+          blockChars = 16, maxDist = 20)
+        finally sc.setLocalProperty(phase, null)
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      assertNoState("after the frame is built")
+      assert(er.count() == docs.count())
+      assertNoState("after count()")
+      assert(buildJobs.get >= 1 && buildJobs.get <= 3,
+        s"${buildJobs.get} jobs started while building the frame (the lazy " +
+          "plan's only eager step is the edge collect)")
+    } finally sc.removeSparkListener(listener)
+  }
 }
