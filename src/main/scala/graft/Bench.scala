@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A warm-up action runs first so the first timed
   * query doesn't absorb JVM/codegen/parquet-footer start-up cost; queries
@@ -11,41 +9,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    // ERROR, not WARN: the graph-fixture `lead` windows alone emit
-    // thousands of "WARN WindowExec: No Partition Defined" lines, which
-    // drowned the driver's 2 KB stdout tail and blew the bench budget
-    // (BENCH_r10/r11 unparseable/timed out — r11 verdict item 2)
-    spark.sparkContext.setLogLevel("ERROR")
-    // warm-up: touch every table + exercise codegen once
-    Seq("events", "lineitem", "documents", "embeddings")
-      .foreach(t => core.table(spark, sfDir, t).count())
-    // untimed JVM/Janino warmup (r12 verdict item 2): one throwaway plan
-    // exercising whole-stage codegen, hash aggregation, a shuffle
-    // exchange, a broadcast join and a window — the table counts above
-    // never invoke the Janino compiler, so its classloader start-up cost
-    // otherwise lands in q01–q09 on BOTH passes (the cold-per-query
-    // protocol recompiles plans but only pays compiler *infra* start-up
-    // once per JVM) and reads as a false 2× regression vs r1.
-    locally {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val d = spark.range(10000).select(col("id"), (col("id") % 7).as("k"))
-      val dim = spark.range(7).select(col("id").as("k"), (col("id") * 2).as("w"))
-      d.join(broadcast(dim), "k")
-        .groupBy(col("k")).agg(sum(col("id")).as("s"), avg(col("w")).as("a"))
-        .withColumn("rn",
-          row_number().over(Window.partitionBy(col("k")).orderBy(col("s"))))
-        .count(): Unit
-      spark.catalog.clearCache()
-    }
+    val spark = tools.Session()
+    tools.Session.warmUp(spark, sfDir)
     // A failing query must not hide as a (fast) time: record it, keep
     // going, and surface an error count + names in the output so a
     // regression can't read as a speedup.
@@ -77,21 +42,7 @@ object Bench {
               System.err.println(s"BENCH ERROR $rowName: ${t.getClass.getName}: ${t.getMessage}")
           }
           val dt = (System.nanoTime() - t0) / 1e9
-          // several operators retain a documented cache for their lazy
-          // result (bm25/nb/lm/signature); across 250+ queries those
-          // accumulate into GC pressure that bleeds into NEIGHBORS'
-          // numbers (the q46-class variance of rounds 6-7). Drop them
-          // outside the timed region so every query is measured with only
-          // its own caches.
-          spark.catalog.clearCache()
-          // r14: clearCache only drops catalog-managed InMemoryRelations;
-          // localCheckpoint blocks (this round's bounded replacement for
-          // unpersist-less persists) are GC-managed and otherwise linger
-          // until collection, pressuring NEIGHBORS' storage exactly like
-          // the retained caches above. Same protocol intent, same
-          // untimed region — additions-only measurement hygiene.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(false))
+          tools.Session.cleanUp(spark): Unit
           rowName -> dt
         }
         if (name == "q46_iforest")

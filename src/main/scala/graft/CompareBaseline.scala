@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Reference-shape vs engine throughput comparison.
@@ -17,17 +16,10 @@ import org.apache.spark.sql.functions._
 object CompareBaseline {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // size scan splits to the core count (SCALING.md §7): the 128 MB
-      // default yields ~3 tasks for a few-hundred-MB input on 32 cores
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = tools.Session()
+    // size scan splits to the core count (SCALING.md §7): the 128 MB
+    // default yields ~3 tasks for a few-hundred-MB input on 32 cores
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
     val sc = spark.sparkContext
 
     // one-time: events as CSV, the reference's input format, scaled
