@@ -85,8 +85,11 @@ object Bench {
     // and the dropped third full pass is what pushed the driver past its
     // timeout (r11 rc=124). Report per-query MIN as the headline;
     // per-pass spreads self-describe in bench_full.json.
-    // SPARK_GRAFT_BENCH_RUNS overrides the full-pass count.
-    val nRuns = math.max(2, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
+    // SPARK_GRAFT_BENCH_RUNS overrides the full-pass count: any value
+    // >= 1 runs exactly that many passes (1 pass has no spread, so no
+    // selective third pass either); a value below 1 is an error.
+    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
+    require(nRuns >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $nRuns")
     val fullPasses: Seq[Seq[(String, Double)]] =
       (1 to nRuns).map(_ => pass(_ => true) ++ annSplit())
     val names = fullPasses.head.map(_._1)

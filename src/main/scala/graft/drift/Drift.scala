@@ -785,40 +785,47 @@ object Drift {
       .where(col("value").isNotNull)
       .as[(String, Long, Double)]
     pts.groupByKey(_._1).flatMapGroups { (k, it) =>
-      val sorted = it.toArray.sortBy(_._2)
-      val n = sorted.length
-      // exact 4dp prefix sums over the FULL series (oracle mirrors);
-      // window arithmetic subtracts the pre-window prefix
-      val q = new Array[Long](n + 1)
-      var i = 0
-      while (i < n) {
-        val v = sorted(i)._3
-        val f = if (v >= 0) math.floor(v * 1e4 + 0.5)
-          else -math.floor(-v * 1e4 + 0.5)
-        q(i + 1) = q(i) + f.toLong
-        i += 1
-      }
-      var ws = 1L
-      Iterator.tabulate(n) { j =>
-        val rn = (j + 1).toLong
-        var drift = false
-        if (rn > ws) {
-          var c = ws
-          while (!drift && c <= rn - 1) {
-            val n1 = (c - ws + 1).toDouble
-            val n2 = (rn - c).toDouble
-            val m1 = ((q(c.toInt) - q((ws - 1).toInt)).toDouble / 10000.0) / n1
-            val m2 = ((q(rn.toInt) - q(c.toInt)).toDouble / 10000.0) / n2
-            val w = (rn - ws + 1).toDouble
-            val eps = r * math.sqrt(
-              ((1.0 / n1 + 1.0 / n2) / 2.0) * math.log(4.0 * w / delta))
-            if (math.abs(m1 - m2) > eps) drift = true
-            c += 1
-          }
-          if (drift) ws = rn
-        }
-        AdwinOut(k, sorted(j)._2, sorted(j)._3, ws, drift)
+      var st = AdwinState()
+      it.toArray.sortBy(_._2).iterator.map { case (_, seq, v) =>
+        val (next, drift) = adwinStep(delta, r)(st, v)
+        st = next
+        AdwinOut(k, seq, v, st.winStart, drift)
       }
     }
+  }
+
+  /** ADWIN state: the exact 4dp prefix sums of the window since the
+    * last drift (`prefix(0)` = 0, one entry per window row after it)
+    * and the key's rows seen so far. */
+  case class AdwinState(prefix: Array[Long] = Array(0L), nSeen: Long = 0L) {
+    /** 1-based row at which the current window starts. */
+    def winStart: Long = nSeen - prefix.length + 2
+  }
+
+  /** One ADWIN step on the next value: (state, v) → (state, drift). The
+    * window's local prefix differences equal the full-series ones
+    * exactly (long addition is associative), so every mean and bound is
+    * the same double wherever the window starts. The streaming twin
+    * steps the same function. */
+  def adwinStep(delta: Double, r: Double)(st: AdwinState,
+      v: Double): (AdwinState, Boolean) = {
+    val f = (if (v >= 0) math.floor(v * 1e4 + 0.5)
+      else -math.floor(-v * 1e4 + 0.5)).toLong
+    val w = st.prefix.length // window length with v
+    val q = java.util.Arrays.copyOf(st.prefix, w + 1)
+    q(w) = q(w - 1) + f
+    val lnW = math.log(4.0 * w.toDouble / delta)
+    var drift = false
+    var c = 1
+    while (!drift && c <= w - 1) {
+      val n1 = c.toDouble
+      val n2 = (w - c).toDouble
+      val m1 = (q(c).toDouble / 10000.0) / n1
+      val m2 = ((q(w) - q(c)).toDouble / 10000.0) / n2
+      val eps = r * math.sqrt(((1.0 / n1 + 1.0 / n2) / 2.0) * lnW)
+      if (math.abs(m1 - m2) > eps) drift = true
+      c += 1
+    }
+    (AdwinState(if (drift) Array(0L, f) else q, st.nSeen + 1), drift)
   }
 }

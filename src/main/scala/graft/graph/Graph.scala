@@ -729,6 +729,21 @@ object Graph {
     require(maxDepth >= 1 && maxDepth <= 4,
       s"maxDepth 1..4 (12/d stays integral): $maxDepth")
     require(sources >= 1, s"sources >= 1: $sources")
+    sampledDistances(edges, srcCol, dstCol, sources, maxDepth)
+      .where(col("d") > 0)
+      .groupBy(col("node"))
+      .agg(count(lit(1)).as("reached"),
+        sum((lit(12) / col("d")).cast("long")).as("_h12"))
+      .withColumn("harmonic", col("_h12").cast("double") / 12.0)
+      .select("node", "reached", "harmonic")
+  }
+
+  /** (source, node, d) shortest distances from the `sources`
+    * md5-smallest nodes by `maxDepth` min-plus relaxation rounds, each
+    * round one edge join + group-min checkpointed to cut the lineage —
+    * the BFS frame of [[harmonicCentrality]] and [[closenessCentrality]]. */
+  private def sampledDistances(edges: DataFrame, srcCol: String,
+      dstCol: String, sources: Int, maxDepth: Int): DataFrame = {
     val e = edges.select(col(srcCol).cast("string").as("src"),
       col(dstCol).cast("string").as("dst")).distinct()
       .repartition(col("src")).localCheckpoint(true)
@@ -746,14 +761,7 @@ object Graph {
       dist = dist.union(ext).groupBy(col("source"), col("node"))
         .agg(min(col("d")).as("d")).localCheckpoint(true)
     }
-    val out = dist.where(col("d") > 0)
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("reached"),
-        sum((lit(12) / col("d")).cast("long")).as("_h12"))
-      .withColumn("harmonic", col("_h12").cast("double") / 12.0)
-      .select("node", "reached", "harmonic")
-    e.unpersist()
-    out
+    dist
   }
 
   /** Sampled closeness centrality + eccentricity from ONE min-plus BFS
@@ -765,24 +773,8 @@ object Graph {
   def closenessCentrality(edges: DataFrame, srcCol: String, dstCol: String,
       sources: Int = 8, maxDepth: Int = 4): DataFrame = {
     require(maxDepth >= 1 && sources >= 1, s"bad args: $sources, $maxDepth")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .repartition(col("src")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val srcs = nodes.orderBy(md5(col("node")), col("node"))
-      .limit(sources)
-      .select(col("node").as("source"))
-    var dist = srcs.select(col("source"), col("source").as("node"),
-      lit(0).as("d")).localCheckpoint(true)
-    (1 to maxDepth).foreach { _ =>
-      val ext = dist.join(e, dist("node") === e("src"))
-        .select(col("source"), col("dst").as("node"),
-          (col("d") + 1).as("d"))
-      dist = dist.union(ext).groupBy(col("source"), col("node"))
-        .agg(min(col("d")).as("d")).localCheckpoint(true)
-    }
-    val out = dist.where(col("d") > 0)
+    sampledDistances(edges, srcCol, dstCol, sources, maxDepth)
+      .where(col("d") > 0)
       .groupBy(col("node"))
       .agg(count(lit(1)).as("reached"),
         sum(col("d").cast("long")).as("sum_d"),
@@ -790,8 +782,6 @@ object Graph {
       .withColumn("closeness",
         col("reached").cast("double") / col("sum_d").cast("double"))
       .select("node", "reached", "sum_d", "closeness", "ecc")
-    e.unpersist()
-    out
   }
 
   /** Katz centrality with the dyadic attenuation α = 1/16 and unit base:
@@ -818,10 +808,7 @@ object Graph {
             .cast("long") + 1000000L).as("x"))
         .localCheckpoint(true)
     }
-    // the final x is an eager localCheckpoint, so the edge cache can go
-    val out = x.select(col("node"), (col("x").cast("double") / 1e6).as("katz"))
-    e.unpersist()
-    out
+    x.select(col("node"), (col("x").cast("double") / 1e6).as("katz"))
   }
 
   /** Directed-graph reciprocity: the fraction of edges whose reverse
@@ -902,11 +889,9 @@ object Graph {
         .localCheckpoint(true)
       parts += cur
     }
-    val out = parts.reduce(_ unionByName _)
+    parts.reduce(_ unionByName _)
       .groupBy(col("node"))
       .agg((sum(col("dl8")).cast("double") / 1e8).as("betweenness"))
-    e.unpersist()
-    out
   }
   /** Eigenvector centrality (Bonacich 1972): the dominant left
     * eigenvector of the adjacency matrix by power iteration, max-

@@ -684,9 +684,6 @@ object Assoc {
         .select(col("key"), col("_v").as(c + "med"))
     }
     val w = Window.partitionBy(col("key")).orderBy(col("_o").asc)
-    val fp6 = (c: Column) =>
-      when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-        .cast("long")
     val b = base.join(broadcast(med("_x")), "key")
       .join(broadcast(med("_y")), "key")
       .withColumn("_xb", (col("_x") > col("_xmed")).cast("int"))
@@ -707,10 +704,10 @@ object Assoc {
       .join(c2b, Seq("key", "_yb", "_y1"))
       .join(c1, Seq("key", "_y1"))
       .join(broadcast(nn), "key")
-      .withColumn("_t", fp6(col("c3").cast("double") /
+      .withColumn("_t", fixedPointLong(col("c3").cast("double") /
         col("n").cast("double") *
         log(col("c3").cast("double") * col("c1").cast("double") /
-          (col("c2a").cast("double") * col("c2b").cast("double")))))
+          (col("c2a").cast("double") * col("c2b").cast("double"))), 6))
       .groupBy(col("key"))
       .agg(max(col("n")).as("n"),
         (sum(col("_t")).cast("double") / 1e6).as("te"))
@@ -847,9 +844,6 @@ object Assoc {
     import org.apache.spark.sql.expressions.Window
     val key = concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
     def dec(c: Column) = c.cast("decimal(38,0)")
-    def fp6(c: Column): Column =
-      when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-        .cast("long")
     val base = data.where(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(key.as("key"), col(xCol).cast("long").as("_x"),
         graft.core.fixedPointLong(col(yCol).cast("double"), 4).as("_y4"))
@@ -890,10 +884,10 @@ object Assoc {
         .groupBy(col("key")).agg(min(col("_v")).as("_mad4"))
       val wtd = r.join(broadcast(med), "key")
         .withColumn("_s", lit(1.4826) * col("_mad4").cast("double") / 1e4)
-        .withColumn("_w6", fp6(
+        .withColumn("_w6", fixedPointLong(
           when(col("_e4") === 0, lit(1.0))
             .otherwise(least(lit(1.0), lit(1.345) * col("_s") /
-              (abs(col("_e4")).cast("double") / 1e4)))))
+              (abs(col("_e4")).cast("double") / 1e4))), 6))
       val ws = wtd.groupBy(col("key"))
         .agg(max(col("n")).as("n"), max(col("_s")).as("_sc"),
           sum(dec(col("_w6"))).as("w0"),

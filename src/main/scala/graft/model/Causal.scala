@@ -13,9 +13,6 @@ import org.apache.spark.sql.functions._
 object Causal {
 
   private def fp(c: Column): Column = graft.core.fixedPointLong(c, 4)
-  private def fp6(c: Column): Column =
-    when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-      .cast("long")
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** 2×2 difference-in-differences: DiD = (ȳ_t,post − ȳ_t,pre) −
@@ -39,11 +36,11 @@ object Causal {
     val agg = cells
       .withColumn("_m", m).withColumn("_vn", v / nD)
       .agg(sum(col("_n")).as("n"),
-        sum(fp6(when(col("_t") && col("_p"), col("_m"))
+        sum(fixedPointLong(when(col("_t") && col("_p"), col("_m"))
           .when(col("_t") && !col("_p"), -col("_m"))
           .when(!col("_t") && col("_p"), -col("_m"))
-          .otherwise(col("_m")))).as("_didfp"),
-        sum(fp6(col("_vn"))).as("_sefp"),
+          .otherwise(col("_m")), 6)).as("_didfp"),
+        sum(fixedPointLong(col("_vn"), 6)).as("_sefp"),
         count(lit(1)).as("_k"))
       .where(col("_k") === 4)
     agg
@@ -84,9 +81,9 @@ object Causal {
     val (m0, v0) = mv("_s0", "_q0", "_n0")
     val wgt = col("_ns").cast("double") / col("_nt").cast("double")
     s.crossJoin(broadcast(tot))
-      .withColumn("_atep", fp6(wgt * (m1 - m0)))
-      .withColumn("_sep", fp6(wgt * wgt *
-        (v1 / col("_n1").cast("double") + v0 / col("_n0").cast("double"))))
+      .withColumn("_atep", fixedPointLong(wgt * (m1 - m0), 6))
+      .withColumn("_sep", fixedPointLong(wgt * wgt *
+        (v1 / col("_n1").cast("double") + v0 / col("_n0").cast("double")), 6))
       .agg(sum(col("_ns")).as("n"), count(lit(1)).as("n_strata"),
         sum(col("_atep")).as("_a"), sum(col("_sep")).as("_se2"))
       .select(col("n"), col("n_strata"),

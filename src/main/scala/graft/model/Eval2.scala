@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.core.fixedPointLong
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,10 +25,6 @@ import org.apache.spark.sql.functions._
   * unpartitioned data-sized window anywhere. */
 object Eval2 {
 
-  private def fp6(c: Column): Column =
-    when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-      .cast("long")
-
   /** NDCG@k per query: rank candidates by (score desc, id asc), DCG@k =
     * Σ rel_i / log2(i+1) (6dp fixed-point terms), IDCG@k likewise over
     * the ideal (rel desc, id asc) order. One exchange on the query key,
@@ -41,7 +38,7 @@ object Eval2 {
       .withColumn("_ri", row_number().over(
         Window.partitionBy(col("query")).orderBy(col("_rel").desc, col("_id").asc)))
     val gain = (rel: Column, pos: Column) =>
-      fp6(rel.cast("double") / (log(lit(2.0) + pos.cast("double") - 1) / log(lit(2.0))))
+      fixedPointLong(rel.cast("double") / (log(lit(2.0) + pos.cast("double") - 1) / log(lit(2.0))), 6)
     base.groupBy(col("query"))
       .agg(count(lit(1)).as("n_cand"),
         (sum(when(col("_rn") <= k, gain(col("_rel"), col("_rn")))
@@ -68,7 +65,7 @@ object Eval2 {
       .groupBy(col("query"))
       .agg(sum(col("_y")).as("n_rel"),
         sum(when(col("_rn") <= k && col("_y") === 1L,
-          fp6(col("_cum").cast("double") / col("_rn").cast("double")))
+          fixedPointLong(col("_cum").cast("double") / col("_rn").cast("double"), 6))
           .otherwise(0L)).as("_apfp"))
       .select(col("query"), col("n_rel"),
         when(col("n_rel") > 0,
@@ -218,9 +215,9 @@ object Eval2 {
     val relSum = nk * (fbar - obar) * (fbar - obar)
     perBin
       .agg(sum("nk").as("n"), sum("ok").as("_o"),
-        sum(fp6(bsSum)).as("_bsfp"),
-        sum(fp6(relSum)).as("_relfp"),
-        sum(fp6(nk * obar * obar)).as("_ressfp"))
+        sum(fixedPointLong(bsSum, 6)).as("_bsfp"),
+        sum(fixedPointLong(relSum, 6)).as("_relfp"),
+        sum(fixedPointLong(nk * obar * obar, 6)).as("_ressfp"))
       .withColumn("_obar", col("_o").cast("double") / col("n").cast("double"))
       .select(col("n"),
         (col("_bsfp").cast("double") / 1e6 / col("n").cast("double")).as("bs"),
@@ -333,8 +330,8 @@ object Eval2 {
     // within-item disagreeing ordered pairs = m² − Σc²; weight 1/(m−1)
     val doSum = items.agg(
       sum("m").as("n_values"), count(lit(1)).as("n_items"),
-      sum(fp6((col("m") * col("m") - col("s2")).cast("double") /
-        (col("m") - 1).cast("double"))).as("_dofp"))
+      sum(fixedPointLong((col("m") * col("m") - col("s2")).cast("double") /
+        (col("m") - 1).cast("double"), 6)).as("_dofp"))
     val catTot = cnt.join(items.select(col("_it")), "_it")
       .groupBy(col("_cat")).agg(sum("c").as("tc"))
     val deSum = catTot.agg(sum(col("tc")).as("_n"),

@@ -104,20 +104,28 @@ object Preference {
       init: Double = 1000.0): Dataset[EloOut] = {
     val spark = matches.sparkSession
     import spark.implicits._
-    val ln10 = math.log(10.0)
-    matches.groupByKey(_.league).flatMapGroups { (lg, it) =>
-      val ms = it.toArray.sortBy(_.ord)
-      val r = collection.mutable.Map.empty[String, Double]
-      ms.iterator.map { m =>
-        val rw = r.getOrElse(m.winner, init)
-        val rl = r.getOrElse(m.loser, init)
-        val e = 1.0 / (1.0 + math.exp(((rl - rw) / 400.0) * ln10))
-        val nw = rw + k * (1.0 - e)
-        val nl = rl - k * (1.0 - e)
-        r(m.winner) = nw
-        r(m.loser) = nl
-        EloOut(lg, m.ord, m.winner, m.loser, nw, nl)
+    matches.groupByKey(_.league).flatMapGroups { (_, it) =>
+      var ratings = Map.empty[String, Double]
+      it.toArray.sortBy(_.ord).iterator.map { m =>
+        val (next, out) = eloStep(k, init)(ratings, m)
+        ratings = next
+        out
       }
     }
+  }
+
+  private val ln10 = math.log(10.0)
+
+  /** One Elo match: (ratings, match) → (ratings, post-match row). The
+    * streaming twin steps the same function over its stored ratings. */
+  def eloStep(k: Double, init: Double)(r: Map[String, Double],
+      m: EloMatch): (Map[String, Double], EloOut) = {
+    val rw = r.getOrElse(m.winner, init)
+    val rl = r.getOrElse(m.loser, init)
+    val e = 1.0 / (1.0 + math.exp(((rl - rw) / 400.0) * ln10))
+    val nw = rw + k * (1.0 - e)
+    val nl = rl - k * (1.0 - e)
+    (r.updated(m.winner, nw).updated(m.loser, nl),
+      EloOut(m.league, m.ord, m.winner, m.loser, nw, nl))
   }
 }

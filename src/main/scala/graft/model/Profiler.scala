@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.core.fixedPointLong
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -120,17 +121,14 @@ object Profiler {
     val c = df.groupBy((quasiCols.map(col) :+
         col(sensitiveCol).as("_sv")): _*)
       .agg(count(lit(1)).as("_c"))
-    val fp6 = (x: Column) =>
-      when(x >= 0, floor(x * 1e6 + 0.5)).otherwise(-floor(-x * 1e6 + 0.5))
-        .cast("long")
     val g = c.groupBy(quasiCols.map(col): _*)
       .agg(sum(col("_c")).as("n"), count(lit(1)).as("l_distinct"))
     val withN = c.join(g.select((quasiCols.map(col) :+ col("n")): _*),
       quasiCols)
     val ent = withN
-      .withColumn("_t", fp6((col("_c").cast("double") /
+      .withColumn("_t", fixedPointLong((col("_c").cast("double") /
         col("n").cast("double")) *
-        log(col("_c").cast("double") / col("n").cast("double"))))
+        log(col("_c").cast("double") / col("n").cast("double")), 6))
       .groupBy(quasiCols.map(col): _*)
       .agg(sum(col("_t")).as("_efp"))
     g.join(ent, quasiCols)

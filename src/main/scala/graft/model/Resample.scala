@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.core.fixedPointLong
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +15,6 @@ object Resample {
 
   private def fp(c: Column): Column = graft.core.fixedPointLong(c, 4)
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
-  private def fp6(c: Column): Column =
-    when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-      .cast("long")
 
   /** Delete-one-block jackknife SE of the per-key mean: blocks from an
     * integer block column; θ̂₋ᵦ = (S − s_b)/(n − n_b), SE² =
@@ -40,13 +38,13 @@ object Resample {
         (col("n") - col("_nb")).cast("double") / 1e4)
     // θ̄ = mean of the leave-out means (6dp-quantized fold, B-sized)
     val bar = j.groupBy(col("key"))
-      .agg(sum(fp6(col("_lo"))).as("_lsum"), count(lit(1)).as("_bb"))
+      .agg(sum(fixedPointLong(col("_lo"), 6)).as("_lsum"), count(lit(1)).as("_bb"))
       .select(col("key"),
         (col("_lsum").cast("double") / 1e6 / col("_bb").cast("double"))
           .as("_bar"))
     j.join(bar, "key")
-      .withColumn("_d6", fp6((col("_lo") - col("_bar")) *
-        (col("_lo") - col("_bar"))))
+      .withColumn("_d6", fixedPointLong((col("_lo") - col("_bar")) *
+        (col("_lo") - col("_bar")), 6))
       .groupBy(col("key"))
       .agg(max(col("n")).as("n"), max(col("n_blocks")).as("n_blocks"),
         max(col("_s")).as("_s2"), sum(col("_d6")).as("_dev"))

@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.core.fixedPointLong
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -151,9 +152,6 @@ object Survival {
       cause1Col: String, cause2Col: String): DataFrame = {
     val e1 = col(cause1Col).cast("boolean")
     val e2 = col(cause2Col).cast("boolean")
-    val fp6 = (c: Column) =>
-      when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-        .cast("long")
     val h = subjects.where(col(durationCol).isNotNull)
       .select(col(durationCol).cast("long").as("t"),
         e1.as("_e1"), e2.as("_e2"))
@@ -177,11 +175,11 @@ object Survival {
         .over(Window.orderBy(col("t").asc)
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0))))
     base
-      .withColumn("cif1", sum(fp6(col("_sprev") *
-        (col("d1").cast("double") / col("n_risk").cast("double"))))
+      .withColumn("cif1", sum(fixedPointLong(col("_sprev") *
+        (col("d1").cast("double") / col("n_risk").cast("double")), 6))
         .over(w).cast("double") / 1e6)
-      .withColumn("cif2", sum(fp6(col("_sprev") *
-        (col("d2").cast("double") / col("n_risk").cast("double"))))
+      .withColumn("cif2", sum(fixedPointLong(col("_sprev") *
+        (col("d2").cast("double") / col("n_risk").cast("double")), 6))
         .over(w).cast("double") / 1e6)
       .select("t", "n_risk", "d1", "d2", "c", "cif1", "cif2")
   }
@@ -195,9 +193,6 @@ object Survival {
       tau: Long): DataFrame = {
     val km = kaplanMeier(subjects, durationCol, eventCol)
     val w = Window.orderBy(col("t").asc)
-    val fp6 = (c: Column) =>
-      when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-        .cast("long")
     km
       .withColumn("_next", coalesce(lead(col("t"), 1).over(w), lit(tau)))
       .withColumn("_lo", least(col("t"), lit(tau)))
@@ -207,8 +202,8 @@ object Survival {
           .otherwise(lit(0L)))
       .agg(sum(col("d") + col("c")).as("n"),
         (max(col("_head")).cast("double") +
-          sum(fp6(col("survival") *
-            (col("_hi") - col("_lo")).cast("double"))).cast("double") / 1e6)
+          sum(fixedPointLong(col("survival") *
+            (col("_hi") - col("_lo")).cast("double"), 6)).cast("double") / 1e6)
           .as("rmst"))
       .select(col("n"), lit(tau).as("tau"), col("rmst"))
   }

@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.core.fixedPointLong
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,9 +26,6 @@ import org.apache.spark.sql.functions._
 object Tests2 {
 
   private def fp(c: Column): Column = graft.core.fixedPointLong(c, 4)
-  private def fp6(c: Column): Column =
-    when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-      .cast("long")
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Brunner–Munzel test (two-sample stochastic equality, unequal
@@ -133,11 +131,11 @@ object Tests2 {
     val agg = r.agg(
       max(col("_na")).as("n_a"), max(col("_n") - col("_na")).as("n_b"),
       // AB statistic: Σ ca·s/ct, 6dp-quantized per distinct value
-      sum(fp6(col("ca").cast("double") * col("_s").cast("double") /
-        col("ct").cast("double"))).as("abfp"),
+      sum(fixedPointLong(col("ca").cast("double") * col("_s").cast("double") /
+        col("ct").cast("double"), 6)).as("abfp"),
       sum(col("_s")).as("ssum"), // Σ over observations of a(v), exact
-      sum(fp6(col("_s").cast("double") * col("_s").cast("double") /
-        col("ct").cast("double"))).as("s2fp"))
+      sum(fixedPointLong(col("_s").cast("double") * col("_s").cast("double") /
+        col("ct").cast("double"), 6)).as("s2fp"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     val nn = na + nb
     val abar = col("ssum").cast("double") / nn
@@ -245,9 +243,9 @@ object Tests2 {
       (nk * nk * (nk - 1))
     val sums = cells.agg(count(lit(1)).as("k"),
       sum(col("a")).as("asum"),
-      sum(fp6(ek)).as("efp"), sum(fp6(vk)).as("vfp"),
-      sum(fp6(aD * dD / nk)).as("adfp"),
-      sum(fp6(bD * cD / nk)).as("bcfp"))
+      sum(fixedPointLong(ek, 6)).as("efp"), sum(fixedPointLong(vk, 6)).as("vfp"),
+      sum(fixedPointLong(aD * dD / nk, 6)).as("adfp"),
+      sum(fixedPointLong(bD * cD / nk, 6)).as("bcfp"))
     val orMh = (col("adfp").cast("double") / 1e6) /
       (col("bcfp").cast("double") / 1e6)
     val withOr = cells.crossJoin(broadcast(sums.select(
@@ -271,7 +269,7 @@ object Tests2 {
     val varA = lit(1.0) / (lit(1.0) / root + lit(1.0) / (m1 - root) +
       lit(1.0) / (n1 - root) + lit(1.0) / (n0 - m1 + root))
     val bd = withOr.agg(
-      sum(fp6((aD - root) * (aD - root) / varA)).as("bdfp"))
+      sum(fixedPointLong((aD - root) * (aD - root) / varA, 6)).as("bdfp"))
     sums.crossJoin(broadcast(bd))
       .withColumn("or_mh", orMh)
       .withColumn("cmh_chi2",
@@ -413,7 +411,7 @@ object Tests2 {
         (fp(y).cast("double") / 1e4).as("_y"))
       .join(broadcast(coef), "key")
       .withColumn("_e", col("_y") - (col("icept") + col("slope") * col("_x")))
-      .withColumn("_u6", fp6(col("_e") * col("_e")))
+      .withColumn("_u6", fixedPointLong(col("_e") * col("_e"), 6))
     val s = rows.groupBy(col("key"))
       .agg(count(lit(1)).as("n"),
         sum(col("_x")).as("sx"),

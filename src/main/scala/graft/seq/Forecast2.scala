@@ -1,6 +1,7 @@
 package graft.seq
 
-import graft.seq.SeriesKernels.{run, SScore}
+import graft.core.fixedPointLong
+import graft.seq.SeriesKernels.{scan, SScore}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,10 +28,6 @@ object Forecast2 {
     (if (x >= 0) math.floor(x * 1e4 + 0.5)
      else -math.floor(-x * 1e4 + 0.5)).toLong
 
-  private def fp6(c: Column): Column =
-    when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-      .cast("long")
-
   /** Theta(2) one-step-ahead scorer: pred_t = SES_{t−1} + b_{t−1}/2
     * where SES is a ½-smoothed level and b the running OLS slope over
     * all prior points — slope from exact fixed-point sums, so the
@@ -38,70 +35,44 @@ object Forecast2 {
     * prior-residual std (the OSA/Holt normalization; first two points
     * are the fit window). */
   def thetaForecast(data: DataFrame, keyCols: Seq[String], seqCol: String,
-      valCol: String): org.apache.spark.sql.Dataset[SScore] = {
-    run(data, keyCols, seqCol, valCol) { (k, pts) =>
-      val n = pts.length
-      val scores = new Array[Double](n)
-      if (n >= 3) {
-        // absorb points 0 and 1 (1-based t = 1, 2)
-        var l = pts(0).value
-        l = 0.5 * pts(1).value + 0.5 * l
-        var st = 3L; var stt = 5L
-        var sy = fpL(pts(0).value) + fpL(pts(1).value)
-        var sty = fpL(pts(0).value) + 2L * fpL(pts(1).value)
-        var rsum = 0.0; var rsq = 0.0; var rn = 0
-        var i = 2
-        while (i < n) {
-          val x = pts(i).value
-          val m = i.toDouble // points absorbed so far
-          val b = (m * sty - st.toDouble * sy) /
-            (m * stt - st.toDouble * st) / 1e4
-          val pred = l + b / 2.0
-          val resid = x - pred
-          val std =
-            if (rn > 1) math.sqrt((rsq - rsum * rsum / rn) / (rn - 1)) else 0.0
-          scores(i) = if (std > 0) math.abs(resid) / std else 0.0
-          rsum += resid; rsq += resid * resid; rn += 1
-          val t = (i + 1).toLong
-          st += t; stt += t * t; sy += fpL(x); sty += t * fpL(x)
-          l = 0.5 * x + 0.5 * l
-          i += 1
-        }
-      }
-      Iterator.tabulate(n)(i => SScore(k, pts(i).seq, pts(i).value, scores(i)))
+      valCol: String): org.apache.spark.sql.Dataset[SScore] =
+    scan(data, keyCols, seqCol, valCol)(ThetaState())(thetaStep)
+
+  /** Theta state after `seen` points (1-based t = 1..seen): the SES
+    * level, the exact sums Σt, Σt², Σy, Σt·y (y as 4dp longs) and the
+    * prior-residual accumulators. */
+  case class ThetaState(seen: Long = 0L, level: Double = 0.0, st: Long = 0L,
+      stt: Long = 0L, sy: Long = 0L, sty: Long = 0L, rsum: Double = 0.0,
+      rsq: Double = 0.0, rn: Long = 0L)
+
+  /** One Theta step on the next value: (state, x) → (state, score). The
+    * streaming twin steps the same function. */
+  def thetaStep(s: ThetaState, x: Double): (ThetaState, Double) =
+    if (s.seen == 0L) (ThetaState(1L, x, 1L, 1L, fpL(x), fpL(x)), 0.0)
+    else if (s.seen == 1L)
+      (ThetaState(2L, 0.5 * x + 0.5 * s.level, 3L, 5L, s.sy + fpL(x),
+        s.sty + 2L * fpL(x)), 0.0)
+    else {
+      val m = s.seen.toDouble // points absorbed so far
+      val b = (m * s.sty - s.st.toDouble * s.sy) /
+        (m * s.stt - s.st.toDouble * s.st) / 1e4
+      val pred = s.level + b / 2.0
+      val resid = x - pred
+      val std = SeriesKernels.priorStd(s.rsum, s.rsq, s.rn)
+      val t = s.seen + 1
+      (ThetaState(t, 0.5 * x + 0.5 * s.level, s.st + t, s.stt + t * t,
+        s.sy + fpL(x), s.sty + t * fpL(x), s.rsum + resid,
+        s.rsq + resid * resid, s.rn + 1),
+        if (std > 0) math.abs(resid) / std else 0.0)
     }
-  }
 
   /** Damped-trend Holt scorer (Gardner–McKenzie): pred = level + φ·trend,
     * trend' = β(level'−level) + (1−β)·φ·trend with dyadic α=½, β=¼,
-    * φ=⅞. Same residual-std score as [[SeriesKernels.holtForecast]]. */
+    * φ=⅞. The [[SeriesKernels.holtStep]] recursion with φ. */
   def dampedHolt(data: DataFrame, keyCols: Seq[String], seqCol: String,
-      valCol: String, phi: Double = 0.875): org.apache.spark.sql.Dataset[SScore] = {
-    run(data, keyCols, seqCol, valCol) { (k, pts) =>
-      val n = pts.length
-      val scores = new Array[Double](n)
-      if (n >= 3) {
-        var level = pts(1).value
-        var trend = pts(1).value - pts(0).value
-        var rsum = 0.0; var rsq = 0.0; var rn = 0
-        var i = 2
-        while (i < n) {
-          val x = pts(i).value
-          val pred = level + phi * trend
-          val resid = x - pred
-          val std =
-            if (rn > 1) math.sqrt((rsq - rsum * rsum / rn) / (rn - 1)) else 0.0
-          scores(i) = if (std > 0) math.abs(resid) / std else 0.0
-          rsum += resid; rsq += resid * resid; rn += 1
-          val l2 = 0.5 * x + 0.5 * pred
-          trend = 0.25 * (l2 - level) + 0.75 * (phi * trend)
-          level = l2
-          i += 1
-        }
-      }
-      Iterator.tabulate(n)(i => SScore(k, pts(i).seq, pts(i).value, scores(i)))
-    }
-  }
+      valCol: String, phi: Double = 0.875): org.apache.spark.sql.Dataset[SScore] =
+    scan(data, keyCols, seqCol, valCol)(SeriesKernels.HoltState())(
+      SeriesKernels.holtStep(0.5, 0.25, phi))
 
   /** Croston's intermittent-demand estimator: on each nonzero demand d
     * after gap q, size z' = ½d + ½z and interval p' = ½q + ½p; every
@@ -109,29 +80,24 @@ object Forecast2 {
     * first nonzero). The spare-parts / sparse-event twin of the SES
     * family. */
   def croston(data: DataFrame, keyCols: Seq[String], seqCol: String,
-      valCol: String): org.apache.spark.sql.Dataset[SScore] = {
-    run(data, keyCols, seqCol, valCol) { (k, pts) =>
-      val n = pts.length
-      val out = new Array[Double](n)
-      var z = Double.NaN; var p = Double.NaN; var last = 0L
-      var i = 0
-      while (i < n) {
-        val d = pts(i).value
-        val r = (i + 1).toLong
-        if (d > 0) {
-          if (z.isNaN) { z = d; p = r.toDouble; last = r }
-          else {
-            val q = (r - last).toDouble
-            z = 0.5 * d + 0.5 * z
-            p = 0.5 * q + 0.5 * p
-            last = r
-          }
-        }
-        out(i) = if (z.isNaN) 0.0 else z / p
-        i += 1
-      }
-      Iterator.tabulate(n)(i => SScore(k, pts(i).seq, pts(i).value, out(i)))
-    }
+      valCol: String): org.apache.spark.sql.Dataset[SScore] =
+    scan(data, keyCols, seqCol, valCol)(CrostonState())(crostonStep)
+
+  /** Croston state: size SES z, interval SES p (NaN before the first
+    * nonzero), 1-based row of the last nonzero, rows seen. */
+  case class CrostonState(z: Double = Double.NaN, p: Double = Double.NaN,
+      last: Long = 0L, seen: Long = 0L)
+
+  /** One Croston step on the next demand: (state, d) → (state, z/p).
+    * The streaming twin steps the same function. */
+  def crostonStep(s: CrostonState, d: Double): (CrostonState, Double) = {
+    val r = s.seen + 1
+    val next =
+      if (!(d > 0)) s.copy(seen = r)
+      else if (s.z.isNaN) CrostonState(d, r.toDouble, r, r)
+      else CrostonState(0.5 * d + 0.5 * s.z, 0.5 * (r - s.last).toDouble + 0.5 * s.p,
+        r, r)
+    (next, if (next.z.isNaN) 0.0 else next.z / next.p)
   }
 
   /** Lomb–Scargle periodogram over unevenly sampled per-key series:
@@ -164,12 +130,12 @@ object Forecast2 {
       .withColumn("_s", sin(col("_w") * col("_t")))
       .groupBy(col("key"), col("period"))
       .agg(count(lit(1)).as("n"),
-        sum(fp6(col("_e") * col("_c"))).as("ec"),
-        sum(fp6(col("_e") * col("_s"))).as("es"),
-        sum(fp6(col("_c") * col("_c"))).as("cc"),
-        sum(fp6(col("_s") * col("_s"))).as("ss"),
-        sum(fp6(col("_c") * col("_s"))).as("cs"),
-        sum(fp6(col("_e") * col("_e"))).as("ee"))
+        sum(fixedPointLong(col("_e") * col("_c"), 6)).as("ec"),
+        sum(fixedPointLong(col("_e") * col("_s"), 6)).as("es"),
+        sum(fixedPointLong(col("_c") * col("_c"), 6)).as("cc"),
+        sum(fixedPointLong(col("_s") * col("_s"), 6)).as("ss"),
+        sum(fixedPointLong(col("_c") * col("_s"), 6)).as("cs"),
+        sum(fixedPointLong(col("_e") * col("_e"), 6)).as("ee"))
     val cD = col("ec").cast("double") / 1e6
     val sD = col("es").cast("double") / 1e6
     val ccD = col("cc").cast("double") / 1e6

@@ -1104,13 +1104,10 @@ object SeqOps {
     val byM = ranked.groupBy(col("_m")).agg(count(lit(1)).as("_c"))
     val ks = data.sparkSession.range(1, depth + 1)
       .select(col("id").as("_k"))
-    val fp6 = (c: Column) =>
-      when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-        .cast("long")
     ks.join(byM, col("_m") <= col("_k"), "left")
       .groupBy(col("_k")).agg(sum(coalesce(col("_c"), lit(0L))).as("_xk"))
-      .withColumn("_t", fp6(pow(lit(p), col("_k").cast("double") - 1) *
-        col("_xk").cast("double") / col("_k").cast("double")))
+      .withColumn("_t", fixedPointLong(pow(lit(p), col("_k").cast("double") - 1) *
+        col("_xk").cast("double") / col("_k").cast("double"), 6))
       .agg((lit(1.0 - p) * (sum(col("_t")).cast("double") / 1e6)).as("rbo"))
       .select(lit(depth).as("d"), col("rbo"))
   }

@@ -34,6 +34,23 @@ object SeriesKernels {
     }
   }
 
+  /** [[run]] for a sequential recursion: folds `step` over each key's
+    * sorted values from `init`, one score per point. */
+  private[seq] def scan[S](data: DataFrame, keyCols: Seq[String], seqCol: String,
+      valCol: String)(init: S)(step: (S, Double) => (S, Double)): Dataset[SScore] =
+    run(data, keyCols, seqCol, valCol)((k, pts) => scanSeries(k, pts, init)(step))
+
+  /** One key's fold of `step` over its sorted points. */
+  private[seq] def scanSeries[S](k: String, pts: Array[SPoint], init: S)(
+      step: (S, Double) => (S, Double)): Iterator[SScore] = {
+    var st = init
+    pts.iterator.map { p =>
+      val (next, score) = step(st, p.value)
+      st = next
+      SScore(k, p.seq, p.value, score)
+    }
+  }
+
   // ---------- spectral residue (seq/SpectralResiduePredictor.scala:37-155) ----------
 
   /** Saliency-map anomaly score per point (spectral-residual saliency,
@@ -451,32 +468,37 @@ object SeriesKernels {
     */
   def holtForecast(
       data: DataFrame, keyCols: Seq[String], seqCol: String, valCol: String,
-      alpha: Double = 0.5, beta: Double = 0.25): Dataset[SScore] = {
-    run(data, keyCols, seqCol, valCol) { (k, pts) =>
-      val n = pts.length
-      val scores = new Array[Double](n)
-      if (n >= 3) {
-        var level = pts(1).value
-        var trend = pts(1).value - pts(0).value
-        var rsum = 0.0; var rsq = 0.0; var rn = 0
-        var i = 2
-        while (i < n) {
-          val x = pts(i).value
-          val pred = level + trend
-          val resid = x - pred
-          val std =
-            if (rn > 1) math.sqrt((rsq - rsum * rsum / rn) / (rn - 1)) else 0.0
-          scores(i) = if (std > 0) math.abs(resid) / std else 0.0
-          rsum += resid; rsq += resid * resid; rn += 1
-          val l2 = alpha * x + (1 - alpha) * pred
-          trend = beta * (l2 - level) + (1 - beta) * trend
-          level = l2
-          i += 1
-        }
-      }
-      Iterator.tabulate(n)(i => SScore(k, pts(i).seq, pts(i).value, scores(i)))
+      alpha: Double = 0.5, beta: Double = 0.25): Dataset[SScore] =
+    scan(data, keyCols, seqCol, valCol)(HoltState())(holtStep(alpha, beta, 1.0))
+
+  /** Holt state after `seen` rows: 0 → nothing, 1 → x1 held, ≥ 2 →
+    * (level, trend) anchored and recursing, with the prior-residual
+    * accumulators. */
+  case class HoltState(seen: Long = 0L, x1: Double = 0.0, level: Double = 0.0,
+      trend: Double = 0.0, rsum: Double = 0.0, rsq: Double = 0.0, rn: Long = 0L)
+
+  /** One Holt step on the next value: (state, x) → (state, score). `phi`
+    * damps the trend ([[Forecast2.dampedHolt]]); at φ = 1.0,
+    * `level + 1.0·trend` and `(1−β)·(1.0·trend)` are the undamped forms
+    * bit for bit. The streaming twin steps the same function. */
+  def holtStep(alpha: Double, beta: Double, phi: Double)(st: HoltState,
+      x: Double): (HoltState, Double) =
+    if (st.seen == 0L) (st.copy(seen = 1L, x1 = x), 0.0)
+    else if (st.seen == 1L) (st.copy(seen = 2L, level = x, trend = x - st.x1), 0.0)
+    else {
+      val pred = st.level + phi * st.trend
+      val resid = x - pred
+      val std = priorStd(st.rsum, st.rsq, st.rn)
+      val l2 = alpha * x + (1 - alpha) * pred
+      (HoltState(st.seen + 1, st.x1, l2,
+        beta * (l2 - st.level) + (1 - beta) * (phi * st.trend),
+        st.rsum + resid, st.rsq + resid * resid, st.rn + 1),
+        if (std > 0) math.abs(resid) / std else 0.0)
     }
-  }
+
+  /** Sample std of the `rn` prior residuals from their running sums. */
+  private[seq] def priorStd(rsum: Double, rsq: Double, rn: Long): Double =
+    if (rn > 1) math.sqrt((rsq - rsum * rsum / rn) / (rn - 1)) else 0.0
 
   /** Holt–Winters additive seasonal forecast scorer (engine addition) —
     * extends [[holtForecast]] with a length-`period` seasonal component:

@@ -3,7 +3,7 @@ package graft.seq
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.seq.SeriesKernels.{SScore, run}
+import graft.seq.SeriesKernels.{SPoint, SScore, run, scanSeries}
 
 /** State-space smoothing kernels (engine additions). The local-level
   * Kalman filter is the probabilistically-weighted cousin of the
@@ -29,39 +29,45 @@ object StateSpace {
     * √S with S the predictive variance; row 1 scores 0 (level anchors
     * there). Keys with < 3 points or zero variance score 0 throughout. */
   def kalmanFilter(data: DataFrame, keyCols: Seq[String], seqCol: String,
-      valCol: String): Dataset[SScore] = {
+      valCol: String): Dataset[SScore] =
     run(data, keyCols, seqCol, valCol) { (k, pts) =>
-      val n = pts.length
-      val scores = new Array[Double](n)
-      if (n >= 3) {
-        // exact fixed-point variance (matches the fx-sum oracle)
-        def fp(x: Double): Long =
-          (if (x >= 0) math.floor(x * 1e4 + 0.5)
-           else -math.floor(-x * 1e4 + 0.5)).toLong
-        var s = 0L; var q2 = 0L
-        var i = 0
-        while (i < n) { val f = fp(pts(i).value); s += f; q2 += f * f; i += 1 }
-        val nD = n.toDouble
-        val r = (q2.toDouble - s.toDouble * s.toDouble / nD) / (nD - 1) / 1e8
-        if (r > 0) {
-          val q = r * 0.0625
-          var level = pts(0).value
-          var p = r
-          i = 1
-          while (i < n) {
-            val pp = p + q
-            val ss = pp + r
-            val innov = pts(i).value - level
-            scores(i) = math.abs(innov) / math.sqrt(ss)
-            val kGain = pp / ss
-            level = level + kGain * innov
-            p = (1.0 - kGain) * pp
-            i += 1
-          }
-        }
-      }
-      Iterator.tabulate(n)(i => SScore(k, pts(i).seq, pts(i).value, scores(i)))
+      val (s, q2) = fixedSums(pts)
+      val nD = pts.length.toDouble
+      // exact fixed-point variance (matches the fx-sum oracle)
+      val r = (q2.toDouble - s.toDouble * s.toDouble / nD) / (nD - 1) / 1e8
+      scanSeries(k, pts, KalmanState())(kalmanStep(r, pts.length))
     }
+
+  /** Filter state: rows absorbed (0 → the next row anchors the level),
+    * level, level variance. */
+  case class KalmanState(seen: Long = 0L, level: Double = 0.0, p: Double = 0.0)
+
+  /** One filter step on the next value under the key's model (r = series
+    * variance, n = series length): (state, x) → (state, score). Keys with
+    * n < 3 or r ≤ 0 score 0 and keep their state. The streaming twin
+    * steps the same function with (r, n) from the batch fit. */
+  def kalmanStep(r: Double, n: Long)(st: KalmanState,
+      x: Double): (KalmanState, Double) =
+    if (n < 3 || !(r > 0)) (st, 0.0)
+    else if (st.seen == 0L) (KalmanState(1L, x, r), 0.0)
+    else {
+      val pp = st.p + r * 0.0625
+      val ss = pp + r
+      val innov = x - st.level
+      val kGain = pp / ss
+      (KalmanState(st.seen + 1, st.level + kGain * innov, (1.0 - kGain) * pp),
+        math.abs(innov) / math.sqrt(ss))
+    }
+
+  /** (Σf, Σf²) over the series' 4dp fixed-point values — exact longs. */
+  private def fixedSums(pts: Array[SPoint]): (Long, Long) = {
+    var s = 0L; var q2 = 0L
+    pts.foreach { p =>
+      val f = (if (p.value >= 0) math.floor(p.value * 1e4 + 0.5)
+        else -math.floor(-p.value * 1e4 + 0.5)).toLong
+      s += f; q2 += f * f
+    }
+    (s, q2)
   }
 
   /** Normalized spectral entropy of each key's leading `window` points:
@@ -127,38 +133,31 @@ object StateSpace {
     * by the exactly-representable 0.5625. score = |e_t − μ| / limit_t
     * (>1 ⇒ out of control). μ, σ from exact 4dp fixed-point sums. */
   def ewmaChart(data: DataFrame, keyCols: Seq[String], seqCol: String,
-      valCol: String, lambda: Double = 0.25): Dataset[SScore] = {
+      valCol: String, lambda: Double = 0.25): Dataset[SScore] =
     run(data, keyCols, seqCol, valCol) { (k, pts) =>
-      val n = pts.length
-      val scores = new Array[Double](n)
-      if (n >= 2) {
-        def fp(x: Double): Long =
-          (if (x >= 0) math.floor(x * 1e4 + 0.5)
-           else -math.floor(-x * 1e4 + 0.5)).toLong
-        var s = 0L; var q2 = 0L
-        var i = 0
-        while (i < n) { val f = fp(pts(i).value); s += f; q2 += f * f; i += 1 }
-        val nD = n.toDouble
-        val mu = s.toDouble / nD / 1e4
-        val sd = math.sqrt(
-          (q2.toDouble - s.toDouble * s.toDouble / nD) / (nD - 1)) / 1e4
-        if (sd > 0) {
-          val om = 1.0 - lambda
-          val om2 = om * om
-          var e = mu
-          var f2t = 1.0
-          i = 0
-          while (i < n) {
-            e = lambda * pts(i).value + om * e
-            f2t = f2t * om2
-            val limit = 3.0 * sd *
-              math.sqrt(lambda / (2.0 - lambda) * (1.0 - f2t))
-            scores(i) = math.abs(e - mu) / limit
-            i += 1
-          }
-        }
-      }
-      Iterator.tabulate(n)(i => SScore(k, pts(i).seq, pts(i).value, scores(i)))
+      val (s, q2) = fixedSums(pts)
+      val nD = pts.length.toDouble
+      val mu = s.toDouble / nD / 1e4
+      val sd = math.sqrt(
+        (q2.toDouble - s.toDouble * s.toDouble / nD) / (nD - 1)) / 1e4
+      scanSeries(k, pts, EwmaState(mu))(ewmaStep(lambda, mu, sd, pts.length))
     }
-  }
+
+  /** Chart state: the EWMA e (anchored at μ) and (1−λ)^{2t}. */
+  case class EwmaState(e: Double, f2t: Double = 1.0)
+
+  /** One chart step on the next value under the key's model (μ, σ, n):
+    * (state, x) → (state, score). Keys with n < 2 or σ ≤ 0 score 0 and
+    * keep their state. The streaming twin steps the same function with
+    * (μ, σ, n) from the batch fit. */
+  def ewmaStep(lambda: Double, mu: Double, sd: Double, n: Long)(st: EwmaState,
+      x: Double): (EwmaState, Double) =
+    if (n < 2 || !(sd > 0)) (st, 0.0)
+    else {
+      val om = 1.0 - lambda
+      val e = lambda * x + om * st.e
+      val f2t = st.f2t * (om * om)
+      val limit = 3.0 * sd * math.sqrt(lambda / (2.0 - lambda) * (1.0 - f2t))
+      (EwmaState(e, f2t), math.abs(e - mu) / limit)
+    }
 }

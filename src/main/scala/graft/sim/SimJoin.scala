@@ -192,9 +192,7 @@ object SimJoin {
     val h = k2(col("x1"), col("x2")) + k2(col("y1"), col("y2")) -
       k2(col("x1"), col("y2")) - k2(col("x2"), col("y1"))
     quad
-      .withColumn("_h6",
-        when(h >= 0, floor(h * 1e6 + 0.5)).otherwise(-floor(-h * 1e6 + 0.5))
-          .cast("long"))
+      .withColumn("_h6", graft.core.fixedPointLong(h, 6))
       .agg(count(lit(1)).as("m_pairs"),
         (sum(col("_h6")).cast("double") / 1e6 /
           count(lit(1)).cast("double")).as("mmd2"))

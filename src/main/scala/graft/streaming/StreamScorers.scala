@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.seq.{Forecast2, SeriesKernels, StateSpace}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -207,6 +208,46 @@ object StreamScorers {
     stream.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(idCols)
 
+  /** The per-entity envelope of every event-at-a-time scorer below: events
+    * group by `key`; each micro-batch's events for one entity run sorted
+    * by `order` through `step(entity)` from the stored state (`init` on
+    * first sight), each emitting the rows its step returns, and the last
+    * state is stored back. Append output, no timeout. Executed as a batch
+    * query it is one exchange on the key and one fold per entity — the
+    * batch kernel's shape. */
+  private def perEntity[E, T: Ordering, S: Encoder, O: Encoder](
+      events: Dataset[E])(key: E => String, order: E => T, init: String => S)(
+      step: String => (S, E) => (S, IterableOnce[O])): Dataset[O] =
+    events.groupByKey(key)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+        (entity: String, it: Iterator[E], gs: GroupState[S]) => {
+          val next = step(entity)
+          var st = gs.getOption.getOrElse(init(entity))
+          val out = it.toSeq.sortBy(order).flatMap { e =>
+            val (s, rows) = next(st, e)
+            st = s
+            rows
+          }
+          gs.update(st)
+          out.iterator
+        })
+
+  /** A batch kernel's step over each entity's values as its streaming
+    * twin: sorted by (seq, value) as [[graft.seq.SeriesKernels.run]]
+    * sorts a series, one score per event. */
+  private def twin[S: Encoder](events: Dataset[ValueEvent])(init: String => S)(
+      step: String => (S, Double) => (S, Double)): Dataset[HoltOut] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    perEntity(events)(_.entity, e => (e.seq, e.value), init) { entity =>
+      val scoreNext = step(entity)
+      (st, e) => {
+        val (s, score) = scoreNext(st, e.value)
+        (s, Some(HoltOut(entity, e.seq, e.value, score)))
+      }
+    }
+  }
+
   case class ValueEvent(entity: String, seq: Long, value: Double)
   case class EntropyScore(entity: String, seq: Long, value: Double, score: Double)
   case class HistState(counts: Map[Long, Long], total: Long)
@@ -224,52 +265,17 @@ object StreamScorers {
         val p = c.toDouble / total
         acc - p * math.log(p)
       }
-    events.groupByKey(_.entity)
-      .flatMapGroups { (entity, it) =>
-        var st = HistState(Map.empty, 0L)
-        it.toSeq.sortBy(_.seq).iterator.map { e =>
-          val b = math.floor(e.value / bucketWidth).toLong
-          val withB = st.counts.updated(b, st.counts.getOrElse(b, 0L) + 1)
-          val before = entropy(st.counts.values, st.total)
-          val after = entropy(withB.values, st.total + 1)
-          val score =
-            if (st.total < minCount || before <= 0) 0.0
-            else math.max(0.0, (after - before) / before)
-          st = HistState(withB, st.total + 1)
-          EntropyScore(entity, e.seq, e.value, score)
-        }
-      }
-  }
-
-  /** Streaming variant with explicit GroupState (same math, incremental
-    * across micro-batches). */
-  def entropyIncreaseStreaming(events: Dataset[ValueEvent], bucketWidth: Double,
-      minCount: Long): Dataset[EntropyScore] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    def entropy(counts: Iterable[Long], total: Long): Double =
-      counts.foldLeft(0.0) { (acc, c) =>
-        val p = c.toDouble / total
-        acc - p * math.log(p)
-      }
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[HistState]) => {
-          var st = gs.getOption.getOrElse(HistState(Map.empty, 0L))
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            val b = math.floor(e.value / bucketWidth).toLong
-            val withB = st.counts.updated(b, st.counts.getOrElse(b, 0L) + 1)
-            val before = entropy(st.counts.values, st.total)
-            val after = entropy(withB.values, st.total + 1)
-            val score =
-              if (st.total < minCount || before <= 0) 0.0
-              else math.max(0.0, (after - before) / before)
-            st = HistState(withB, st.total + 1)
-            EntropyScore(entity, e.seq, e.value, score)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    perEntity(events)(_.entity, _.seq, _ => HistState(Map.empty, 0L)) {
+      entity => (st, e) =>
+        val b = math.floor(e.value / bucketWidth).toLong
+        val withB = st.counts.updated(b, st.counts.getOrElse(b, 0L) + 1)
+        val before = entropy(st.counts.values, st.total)
+        val after = entropy(withB.values, st.total + 1)
+        val score =
+          if (st.total < minCount || before <= 0) 0.0
+          else math.max(0.0, (after - before) / before)
+        (HistState(withB, st.total + 1), Some(EntropyScore(entity, e.seq, e.value, score)))
+    }
   }
 
   case class PairHit(a: Long, b: Long, band: Int)
@@ -503,32 +509,25 @@ object StreamScorers {
   def ddmStream(events: Dataset[ErrEvent]): Dataset[DdmOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ErrEvent], gs: GroupState[DdmState]) => {
-          var st = gs.getOption.getOrElse(
-            DdmState(0L, 0.0, Double.MaxValue, Double.MaxValue))
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            val n = st.n + 1
-            val errs = st.errs + e.err
-            val p = errs / n
-            val s = math.sqrt(p * (1.0 - p) / n)
-            val ps = p + s
-            val (minPS, sAtMin) =
-              if (ps < st.minPS || (ps == st.minPS && s < st.sAtMin)) (ps, s)
-              else (st.minPS, st.sAtMin)
-            st = DdmState(n, errs, minPS, sAtMin)
-            val pAtMin = minPS - sAtMin
-            val level =
-              if (n < 30) "stable"
-              else if (ps > pAtMin + 3.0 * sAtMin) "drift"
-              else if (ps > pAtMin + 2.0 * sAtMin) "warn"
-              else "stable"
-            DdmOut(entity, e.seq, e.err, p, s, level)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    perEntity(events)(_.entity, _.seq,
+        _ => DdmState(0L, 0.0, Double.MaxValue, Double.MaxValue)) {
+      entity => (st, e) =>
+        val n = st.n + 1
+        val errs = st.errs + e.err
+        val p = errs / n
+        val s = math.sqrt(p * (1.0 - p) / n)
+        val ps = p + s
+        val (minPS, sAtMin) =
+          if (ps < st.minPS || (ps == st.minPS && s < st.sAtMin)) (ps, s)
+          else (st.minPS, st.sAtMin)
+        val pAtMin = minPS - sAtMin
+        val level =
+          if (n < 30) "stable"
+          else if (ps > pAtMin + 3.0 * sAtMin) "drift"
+          else if (ps > pAtMin + 2.0 * sAtMin) "warn"
+          else "stable"
+        (DdmState(n, errs, minPS, sAtMin), Some(DdmOut(entity, e.seq, e.err, p, s, level)))
+    }
   }
 
   case class CusumOut(entity: String, seq: Long, value: Double,
@@ -557,42 +556,42 @@ object StreamScorers {
     // the oracle's rounding arithmetic (floor of the float product),
     // NOT BigDecimal HALF_UP — they disagree on half-boundary floats
     def r6(x: Double): Double = graft.text.TextOps.round6(x)
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[CusumSt]) => {
-          var st = gs.getOption.getOrElse(
-            CusumSt(Nil, frozen = false, 0.0, 0.0, 0L, 0L, 0L))
-          val out = collection.mutable.Buffer[CusumOut]()
-          def fp6(x: Double): Long = (if (x >= 0) math.floor(x * 1e6 + 0.5)
-            else -math.floor(-x * 1e6 + 0.5)).toLong
-          def step(seq: Long, v: Double): Unit = {
-            val z = (v - st.mu0) / math.max(st.sd0, 1e-9)
-            val gp = math.max(0L, st.gPos + fp6(z - slack))
-            val gn = math.max(0L, st.gNeg + fp6(-z - slack))
-            val n = st.n + 1
-            st = st.copy(gPos = gp, gNeg = gn, n = n)
-            out += CusumOut(entity, seq, v, gp.toDouble / 1e6, gn.toDouble / 1e6,
-              n > warmup && (gp.toDouble / 1e6 > h || gn.toDouble / 1e6 > h))
-          }
-          it.toSeq.sortBy(_.seq).foreach { e =>
-            if (st.frozen) step(e.seq, e.value)
-            else {
-              val buf = st.buf :+ (e.seq, e.value)
-              if (buf.size < warmup) st = st.copy(buf = buf)
-              else {
-                val vs = buf.map(_._2)
-                val mean = vs.sum / vs.size
-                val sd = if (vs.size > 1)
-                  math.sqrt(vs.map(v => (v - mean) * (v - mean)).sum / (vs.size - 1))
-                else 0.0
-                st = CusumSt(Nil, frozen = true, r6(mean), r6(sd), 0L, 0L, 0L)
-                buf.foreach { case (s, v) => step(s, v) }
-              }
+    def fp6(x: Double): Long = (if (x >= 0) math.floor(x * 1e6 + 0.5)
+      else -math.floor(-x * 1e6 + 0.5)).toLong
+    perEntity(events)(_.entity, _.seq,
+        _ => CusumSt(Nil, frozen = false, 0.0, 0.0, 0L, 0L, 0L)) { entity =>
+      def step(st: CusumSt, seq: Long, v: Double): (CusumSt, CusumOut) = {
+        val z = (v - st.mu0) / math.max(st.sd0, 1e-9)
+        val gp = math.max(0L, st.gPos + fp6(z - slack))
+        val gn = math.max(0L, st.gNeg + fp6(-z - slack))
+        val n = st.n + 1
+        (st.copy(gPos = gp, gNeg = gn, n = n),
+          CusumOut(entity, seq, v, gp.toDouble / 1e6, gn.toDouble / 1e6,
+            n > warmup && (gp.toDouble / 1e6 > h || gn.toDouble / 1e6 > h)))
+      }
+      (st, e) =>
+        if (st.frozen) {
+          val (next, row) = step(st, e.seq, e.value)
+          (next, Some(row))
+        } else {
+          val buf = st.buf :+ (e.seq, e.value)
+          if (buf.size < warmup) (st.copy(buf = buf), None)
+          else {
+            val vs = buf.map(_._2)
+            val mean = vs.sum / vs.size
+            val sd = if (vs.size > 1)
+              math.sqrt(vs.map(v => (v - mean) * (v - mean)).sum / (vs.size - 1))
+            else 0.0
+            var next = CusumSt(Nil, frozen = true, r6(mean), r6(sd), 0L, 0L, 0L)
+            val rows = buf.map { case (seq, v) =>
+              val (s, row) = step(next, seq, v)
+              next = s
+              row
             }
+            (next, rows)
           }
-          gs.update(st)
-          out.iterator
-        })
+        }
+    }
   }
 
   case class PhOut(entity: String, seq: Long, value: Double,
@@ -614,241 +613,102 @@ object StreamScorers {
       lambda: Double, minInstances: Int = 30): Dataset[PhOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[PhSt]) => {
-          val deltaL = math.round(delta * 1e6)
-          var st = gs.getOption.getOrElse(
-            PhSt(0L, 0L, 0L, 0L, Long.MaxValue, Long.MinValue))
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            val n = st.n + 1
-            val v6 = (if (e.value >= 0) math.floor(e.value * 1e6 + 0.5)
-              else -math.floor(-e.value * 1e6 + 0.5)).toLong
-            val sum6 = st.sum6 + v6
-            val mean6 = if (sum6 >= 0) (2 * sum6 + n) / (2 * n)
-              else -((2 * -sum6 + n) / (2 * n))
-            val dev6 = v6 - mean6
-            val mInc = st.mInc + (dev6 - deltaL)
-            val mDec = st.mDec + (dev6 + deltaL)
-            val minInc = math.min(st.minInc, mInc)
-            val maxDec = math.max(st.maxDec, mDec)
-            st = PhSt(n, sum6, mInc, mDec, minInc, maxDec)
-            val phInc = (mInc - minInc).toDouble / 1e6
-            val phDec = (maxDec - mDec).toDouble / 1e6
-            PhOut(entity, e.seq, e.value, phInc, phDec,
-              n >= minInstances && (phInc > lambda || phDec > lambda))
-          }
-          gs.update(st)
-          out.iterator
-        })
+    val deltaL = math.round(delta * 1e6)
+    perEntity(events)(_.entity, _.seq,
+        _ => PhSt(0L, 0L, 0L, 0L, Long.MaxValue, Long.MinValue)) {
+      entity => (st, e) =>
+        val n = st.n + 1
+        val v6 = (if (e.value >= 0) math.floor(e.value * 1e6 + 0.5)
+          else -math.floor(-e.value * 1e6 + 0.5)).toLong
+        val sum6 = st.sum6 + v6
+        val mean6 = if (sum6 >= 0) (2 * sum6 + n) / (2 * n)
+          else -((2 * -sum6 + n) / (2 * n))
+        val dev6 = v6 - mean6
+        val mInc = st.mInc + (dev6 - deltaL)
+        val mDec = st.mDec + (dev6 + deltaL)
+        val minInc = math.min(st.minInc, mInc)
+        val maxDec = math.max(st.maxDec, mDec)
+        val phInc = (mInc - minInc).toDouble / 1e6
+        val phDec = (maxDec - mDec).toDouble / 1e6
+        (PhSt(n, sum6, mInc, mDec, minInc, maxDec),
+          Some(PhOut(entity, e.seq, e.value, phInc, phDec,
+            n >= minInstances && (phInc > lambda || phDec > lambda))))
+    }
   }
 
   case class HoltOut(entity: String, seq: Long, value: Double, score: Double)
-  // seen = rows consumed so far (state machine: 0 → hold x1, 1 → init
-  // level/trend, ≥2 → recursion); all accumulators plain doubles because
-  // the recursion is purely sequential — identical IEEE op order to the
-  // batch kernel gives bit-exact parity with no fixed-point needed
-  case class HoltSt(seen: Long, x1: Double, lvl: Double, trd: Double,
-      rsum: Double, rsq: Double, rn: Long)
 
   /** Streaming Holt forecast scorer — the online face of
-    * `SeriesKernels.holtForecast`, exact batch parity from the first row
-    * (the recursion carries its own state; nothing buffers): per entity,
-    * (level, trend) + running residual stats, stepped with the same
-    * arithmetic order as the batch kernel. O(1) state (7 numbers). */
+    * `SeriesKernels.holtForecast`, sharing its step
+    * (`SeriesKernels.holtStep`), so it is batch-exact from the first row
+    * (the recursion carries its own state; nothing buffers). O(1) state
+    * (7 numbers). */
   def holtForecastStream(events: Dataset[ValueEvent], alpha: Double = 0.5,
       beta: Double = 0.25): Dataset[HoltOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[HoltSt]) => {
-          var st = gs.getOption.getOrElse(HoltSt(0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0L))
-          val out = it.toSeq.sortBy(e => (e.seq, e.value)).map { e =>
-            val x = e.value
-            var score = 0.0
-            if (st.seen == 0L) st = st.copy(seen = 1L, x1 = x)
-            else if (st.seen == 1L)
-              st = st.copy(seen = 2L, lvl = x, trd = x - st.x1)
-            else {
-              val pred = st.lvl + st.trd
-              val resid = x - pred
-              val std = if (st.rn > 1)
-                math.sqrt((st.rsq - st.rsum * st.rsum / st.rn) / (st.rn - 1))
-              else 0.0
-              score = if (std > 0) math.abs(resid) / std else 0.0
-              val l2 = alpha * x + (1 - alpha) * pred
-              st = HoltSt(st.seen + 1, st.x1, l2,
-                beta * (l2 - st.lvl) + (1 - beta) * st.trd,
-                st.rsum + resid, st.rsq + resid * resid, st.rn + 1)
-            }
-            HoltOut(entity, e.seq, x, score)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    twin(events)(_ => SeriesKernels.HoltState())(
+      _ => SeriesKernels.holtStep(alpha, beta, 1.0))
   }
 
-  case class CrostonSt(z: Double, p: Double, last: Long, seen: Long)
-
   /** Streaming Croston intermittent-demand rate — the online face of
-    * `Forecast2.croston` (identical recursion, so the q407 oracle gates
-    * this path bit-for-bit when batch-executed). O(1) state: size SES,
-    * interval SES, last-nonzero position, count. Every event emits the
-    * post-update demand rate z/p (0 before the first nonzero). */
+    * `Forecast2.croston`, sharing its step (`Forecast2.crostonStep`), so
+    * the q407 oracle gates this path bit-for-bit when batch-executed.
+    * O(1) state: size SES, interval SES, last-nonzero position, count.
+    * Every event emits the post-update demand rate z/p (0 before the
+    * first nonzero). */
   def crostonStream(events: Dataset[ValueEvent]): Dataset[HoltOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[CrostonSt]) => {
-          var st = gs.getOption.getOrElse(CrostonSt(Double.NaN, Double.NaN, 0L, 0L))
-          val out = it.toSeq.sortBy(e => (e.seq, e.value)).map { e =>
-            val d = e.value
-            val r = st.seen + 1
-            st = st.copy(seen = r)
-            if (d > 0) {
-              if (st.z.isNaN) st = st.copy(z = d, p = r.toDouble, last = r)
-              else {
-                val q = (r - st.last).toDouble
-                st = st.copy(z = 0.5 * d + 0.5 * st.z,
-                  p = 0.5 * q + 0.5 * st.p, last = r)
-              }
-            }
-            HoltOut(entity, e.seq, d, if (st.z.isNaN) 0.0 else st.z / st.p)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    twin(events)(_ => Forecast2.CrostonState())(_ => Forecast2.crostonStep)
   }
 
-  case class ThetaSt(seen: Long, lvl: Double, st: Long, stt: Long,
-      sy: Long, sty: Long, rsum: Double, rsq: Double, rn: Long)
-
   /** Streaming Theta(2) one-step-ahead scorer — the online face of
-    * `Forecast2.thetaForecast` (identical recursion: SES level + exact
-    * fixed-point running-OLS half-slope drift; the q405 oracle gates
-    * this path when batch-executed). O(1) state: 4 integer sums + 4
-    * doubles. */
+    * `Forecast2.thetaForecast`, sharing its step (`Forecast2.thetaStep`:
+    * SES level + exact fixed-point running-OLS half-slope drift; the
+    * q405 oracle gates this path when batch-executed). O(1) state: 4
+    * integer sums + 4 doubles. */
   def thetaStream(events: Dataset[ValueEvent]): Dataset[HoltOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def fpL(x: Double): Long =
-      (if (x >= 0) math.floor(x * 1e4 + 0.5)
-       else -math.floor(-x * 1e4 + 0.5)).toLong
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[ThetaSt]) => {
-          var st = gs.getOption.getOrElse(
-            ThetaSt(0L, 0.0, 0L, 0L, 0L, 0L, 0.0, 0.0, 0L))
-          val out = it.toSeq.sortBy(e => (e.seq, e.value)).map { e =>
-            val x = e.value
-            var score = 0.0
-            if (st.seen == 0L)
-              st = ThetaSt(1L, x, 1L, 1L, fpL(x), fpL(x), 0.0, 0.0, 0L)
-            else if (st.seen == 1L)
-              st = ThetaSt(2L, 0.5 * x + 0.5 * st.lvl, 3L, 5L,
-                st.sy + fpL(x), st.sty + 2L * fpL(x), 0.0, 0.0, 0L)
-            else {
-              val m = st.seen.toDouble
-              val b = (m * st.sty - st.st.toDouble * st.sy) /
-                (m * st.stt - st.st.toDouble * st.st) / 1e4
-              val pred = st.lvl + b / 2.0
-              val resid = x - pred
-              val std = if (st.rn > 1)
-                math.sqrt((st.rsq - st.rsum * st.rsum / st.rn) / (st.rn - 1))
-              else 0.0
-              score = if (std > 0) math.abs(resid) / std else 0.0
-              val t = st.seen + 1
-              st = ThetaSt(st.seen + 1, 0.5 * x + 0.5 * st.lvl,
-                st.st + t, st.stt + t * t, st.sy + fpL(x),
-                st.sty + t * fpL(x),
-                st.rsum + resid, st.rsq + resid * resid, st.rn + 1)
-            }
-            HoltOut(entity, e.seq, x, score)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    twin(events)(_ => Forecast2.ThetaState())(_ => Forecast2.thetaStep)
   }
-
-  case class KalmanSt(seen: Long, lvl: Double, p: Double)
-  case class EwmaSt(seen: Long, e: Double, f2t: Double)
 
   /** Streaming local-level Kalman scorer — the online face of
     * `StateSpace.kalmanFilter` under the fit-batch/score-stream model
-    * contract (the per-entity model cache pattern): `model` maps entity
-    * → (r = full-series sample variance, n = series length) from the
-    * batch fit, so every emitted score matches the batch kernel (and
-    * the q322 oracle) bit-for-bit. Entities absent from the model, with
-    * n < 3 or r ≤ 0 emit score 0. O(1) state (3 numbers); the model is
-    * model-sized (one entry per entity), the broadcast-side-input
-    * contract shared with perEntityStream. */
+    * contract (the per-entity model cache pattern), sharing its step
+    * (`StateSpace.kalmanStep`): `model` maps entity → (r = full-series
+    * sample variance, n = series length) from the batch fit, so every
+    * emitted score matches the batch kernel (and the q322 oracle)
+    * bit-for-bit. Entities absent from the model, with n < 3 or r ≤ 0
+    * emit score 0. O(1) state (3 numbers); the model (one entry per
+    * entity) ships in the step's closure. */
   def kalmanStream(events: Dataset[ValueEvent],
       model: Map[String, (Double, Long)]): Dataset[HoltOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[KalmanSt]) => {
-          val (r, n) = model.getOrElse(entity, (0.0, 0L))
-          val ok = n >= 3 && r > 0
-          val q = r * 0.0625
-          var st = gs.getOption.getOrElse(KalmanSt(0L, 0.0, 0.0))
-          val out = it.toSeq.sortBy(e => (e.seq, e.value)).map { e =>
-            val x = e.value
-            var score = 0.0
-            if (!ok) ()
-            else if (st.seen == 0L) st = KalmanSt(1L, x, r)
-            else {
-              val pp = st.p + q
-              val ss = pp + r
-              val innov = x - st.lvl
-              score = math.abs(innov) / math.sqrt(ss)
-              val kGain = pp / ss
-              st = KalmanSt(st.seen + 1, st.lvl + kGain * innov,
-                (1.0 - kGain) * pp)
-            }
-            HoltOut(entity, e.seq, x, score)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    twin(events)(_ => StateSpace.KalmanState()) { entity =>
+      val (r, n) = model.getOrElse(entity, (0.0, 0L))
+      StateSpace.kalmanStep(r, n)
+    }
   }
 
   /** Streaming EWMA control chart — online face of
-    * `StateSpace.ewmaChart`, same fit-batch/score-stream contract:
-    * `model` maps entity → (μ, σ, n) from the batch fit; e anchors at μ
-    * and (1−λ)^{2t} rides the state, so scores match the batch kernel
-    * (and the q328 oracle) exactly. O(1) state (3 numbers). */
+    * `StateSpace.ewmaChart`, same fit-batch/score-stream contract and
+    * the same step (`StateSpace.ewmaStep`): `model` maps entity → (μ, σ,
+    * n) from the batch fit; e anchors at μ and (1−λ)^{2t} rides the
+    * state, so scores match the batch kernel (and the q328 oracle)
+    * exactly. O(1) state (2 numbers). */
   def ewmaChartStream(events: Dataset[ValueEvent],
       model: Map[String, (Double, Double, Long)],
       lambda: Double = 0.25): Dataset[HoltOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[EwmaSt]) => {
-          val (mu, sd, n) = model.getOrElse(entity, (0.0, 0.0, 0L))
-          val ok = n >= 2 && sd > 0
-          val om = 1.0 - lambda
-          val om2 = om * om
-          var st = gs.getOption.getOrElse(EwmaSt(0L, mu, 1.0))
-          val out = it.toSeq.sortBy(e => (e.seq, e.value)).map { e =>
-            var score = 0.0
-            if (ok) {
-              val e2 = lambda * e.value + om * st.e
-              val f2t = st.f2t * om2
-              val limit = 3.0 * sd *
-                math.sqrt(lambda / (2.0 - lambda) * (1.0 - f2t))
-              score = math.abs(e2 - mu) / limit
-              st = EwmaSt(st.seen + 1, e2, f2t)
-            }
-            HoltOut(entity, e.seq, e.value, score)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    def fit(entity: String) = model.getOrElse(entity, (0.0, 0.0, 0L))
+    twin(events)(entity => StateSpace.EwmaState(fit(entity)._1)) { entity =>
+      val (mu, sd, n) = fit(entity)
+      StateSpace.ewmaStep(lambda, mu, sd, n)
+    }
   }
 
   case class WeOut(entity: String, seq: Long, value: Double, z: Double,
@@ -869,37 +729,33 @@ object StreamScorers {
       model: Map[String, (Double, Double, Long)]): Dataset[WeOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[WeSt]) => {
-          val (mu, sd, _) = model.getOrElse(entity, (0.0, 0.0, 0L))
-          var st = gs.getOption.getOrElse(WeSt(0, 0, 0, 0, Nil))
-          val out = it.toSeq.sortBy(e => (e.seq, e.value)).map { e =>
-            val z = (e.value - mu) / sd
-            val side = if (z > 0) 1 else if (z < 0) -1 else 0
-            val h2 = if (z > 2.0) 1 else 0
-            val l2 = if (z < -2.0) 1 else 0
-            val h1 = if (z > 1.0) 1 else 0
-            val l1 = if (z < -1.0) 1 else 0
-            def bits(m: Int, keep: Int): Int = {
-              var c = 0; var i = 0
-              while (i < keep) { c += (m >> i) & 1; i += 1 }; c
-            }
-            val r1 = math.abs(z) > 3.0
-            val r2 = (z > 2.0 && h2 + bits(st.hi2, 2) >= 2) ||
-              (z < -2.0 && l2 + bits(st.lo2, 2) >= 2)
-            val r3 = (z > 1.0 && h1 + bits(st.hi1, 4) >= 4) ||
-              (z < -1.0 && l1 + bits(st.lo1, 4) >= 4)
-            val s8 = side + st.sides.take(7).sum
-            val r4 = st.sides.length >= 7 && (s8 == 8 || s8 == -8)
-            st = WeSt(((st.hi2 << 1) | h2) & 3, ((st.lo2 << 1) | l2) & 3,
-              ((st.hi1 << 1) | h1) & 15, ((st.lo1 << 1) | l1) & 15,
-              (side :: st.sides).take(7))
-            WeOut(entity, e.seq, e.value, z, r1, r2, r3, r4)
+    perEntity(events)(_.entity, e => (e.seq, e.value), _ => WeSt(0, 0, 0, 0, Nil)) {
+      entity =>
+        val (mu, sd, _) = model.getOrElse(entity, (0.0, 0.0, 0L))
+        (st, e) => {
+          val z = (e.value - mu) / sd
+          val side = if (z > 0) 1 else if (z < 0) -1 else 0
+          val h2 = if (z > 2.0) 1 else 0
+          val l2 = if (z < -2.0) 1 else 0
+          val h1 = if (z > 1.0) 1 else 0
+          val l1 = if (z < -1.0) 1 else 0
+          def bits(m: Int, keep: Int): Int = {
+            var c = 0; var i = 0
+            while (i < keep) { c += (m >> i) & 1; i += 1 }; c
           }
-          gs.update(st)
-          out.iterator
-        })
+          val r1 = math.abs(z) > 3.0
+          val r2 = (z > 2.0 && h2 + bits(st.hi2, 2) >= 2) ||
+            (z < -2.0 && l2 + bits(st.lo2, 2) >= 2)
+          val r3 = (z > 1.0 && h1 + bits(st.hi1, 4) >= 4) ||
+            (z < -1.0 && l1 + bits(st.lo1, 4) >= 4)
+          val s8 = side + st.sides.take(7).sum
+          val r4 = st.sides.length >= 7 && (s8 == 8 || s8 == -8)
+          (WeSt(((st.hi2 << 1) | h2) & 3, ((st.lo2 << 1) | l2) & 3,
+            ((st.hi1 << 1) | h1) & 15, ((st.lo1 << 1) | l1) & 15,
+            (side :: st.sides).take(7)),
+            Some(WeOut(entity, e.seq, e.value, z, r1, r2, r3, r4)))
+        }
+    }
   }
 
   case class CpStreamOut(entity: String, seq: Long, value: Double,
@@ -920,29 +776,22 @@ object StreamScorers {
     val spark = events.sparkSession
     import spark.implicits._
     val w = window
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[CpBuf]) => {
-          var buf = gs.getOption.map(_.window).getOrElse(Nil)
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            buf = (e.value :: buf).take(2 * w)
-            val stat =
-              if (buf.size == 2 * w) {
-                val arr = buf.reverse.toArray // oldest first
-                val (mL, vL) = meanVar(arr, 0, w)
-                val (mR, vR) = meanVar(arr, w, 2 * w)
-                val den = math.sqrt(vL / w + vR / w)
-                val diff = math.abs(mR - mL)
-                if (den > 0) diff / den
-                else if (diff > 0) Double.PositiveInfinity
-                else 0.0
-              } else Double.NaN
-            CpStreamOut(entity, e.seq, e.value, stat,
-              !java.lang.Double.isNaN(stat) && stat >= critValue)
-          }
-          gs.update(CpBuf(buf))
-          out.iterator
-        })
+    perEntity(events)(_.entity, _.seq, _ => CpBuf(Nil)) { entity => (st, e) =>
+      val buf = (e.value :: st.window).take(2 * w)
+      val stat =
+        if (buf.size == 2 * w) {
+          val arr = buf.reverse.toArray // oldest first
+          val (mL, vL) = meanVar(arr, 0, w)
+          val (mR, vR) = meanVar(arr, w, 2 * w)
+          val den = math.sqrt(vL / w + vR / w)
+          val diff = math.abs(mR - mL)
+          if (den > 0) diff / den
+          else if (diff > 0) Double.PositiveInfinity
+          else 0.0
+        } else Double.NaN
+      (CpBuf(buf), Some(CpStreamOut(entity, e.seq, e.value, stat,
+        !java.lang.Double.isNaN(stat) && stat >= critValue)))
+    }
   }
 
   /** Frame mean/sample-variance with WindowExec's exact arithmetic
@@ -989,19 +838,11 @@ object StreamScorers {
   def imputeLocfStream(events: Dataset[GapEvent]): Dataset[LocfOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[GapEvent], st: GroupState[LocfBuf]) => {
-          var buf = st.getOption.getOrElse(LocfBuf(None))
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            val filled = e.value.orElse(buf.lastSeen)
-            if (e.value.isDefined) buf = LocfBuf(e.value)
-            LocfOut(entity, e.seq, e.value, filled,
-              e.value.isEmpty && filled.isDefined)
-          }
-          st.update(buf)
-          out.iterator
-        })
+    perEntity(events)(_.entity, _.seq, _ => LocfBuf(None)) { entity => (st, e) =>
+      val filled = e.value.orElse(st.lastSeen)
+      (if (e.value.isDefined) LocfBuf(e.value) else st,
+        Some(LocfOut(entity, e.seq, e.value, filled, e.value.isEmpty && filled.isDefined)))
+    }
   }
 
   /** Streaming sequence-motif detector — the per-entity twin of
@@ -1020,21 +861,12 @@ object StreamScorers {
     require(motif.nonEmpty, "motif must have at least one state")
     val m = motif.toList
     val L = m.length
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[SeqEvent], st: GroupState[MotifBuf]) => {
-          var buf = st.getOption.getOrElse(MotifBuf(Nil, 0L))
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            val hist = e.state :: buf.recent // newest-first, incl current
-            val matched = hist.lengthCompare(L) >= 0 &&
-              hist.take(L).reverse == m
-            val total = buf.total + (if (matched) 1L else 0L)
-            buf = MotifBuf(hist.take(L - 1), total)
-            MotifHit(entity, e.seq, e.state, matched, total)
-          }
-          st.update(buf)
-          out.iterator
-        })
+    perEntity(events)(_.entity, _.seq, _ => MotifBuf(Nil, 0L)) { entity => (st, e) =>
+      val hist = e.state :: st.recent // newest-first, incl current
+      val matched = hist.lengthCompare(L) >= 0 && hist.take(L).reverse == m
+      val total = st.total + (if (matched) 1L else 0L)
+      (MotifBuf(hist.take(L - 1), total), Some(MotifHit(entity, e.seq, e.state, matched, total)))
+    }
   }
 
   /** Per-entity sliding-window Markov scoring with explicit state —
@@ -1048,27 +880,19 @@ object StreamScorers {
     val spark = events.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(transitions)
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[SeqEvent], st: GroupState[MarkovBuf]) => {
-          var buf = st.getOption.getOrElse(MarkovBuf(null, Nil))
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            val nll = Option(buf.lastState)
-              .map(ls => -math.log(bc.value.getOrElse((ls, e.state), 1e-12)))
-            val win = (nll.toList ::: buf.window).take(window)
-            buf = MarkovBuf(e.state, win)
-            // sum oldest→newest (the list is newest-first): the same
-            // ascending-frame order a batch window avg uses, so the
-            // 4dp-rounded score is replayable by a window-function oracle
-            val score =
-              if (win.size == window) win.reverse.sum / window else Double.NaN
-            val tag =
-              if (score.isNaN) "I" else if (score > threshold) "O" else "N"
-            SeqScore(e.entity, e.seq, e.state, score, tag)
-          }
-          st.update(buf)
-          out.iterator
-        })
+    perEntity(events)(_.entity, _.seq, _ => MarkovBuf(null, Nil)) { _ => (st, e) =>
+      val nll = Option(st.lastState)
+        .map(ls => -math.log(bc.value.getOrElse((ls, e.state), 1e-12)))
+      val win = (nll.toList ::: st.window).take(window)
+      // sum oldest→newest (the list is newest-first): the same
+      // ascending-frame order a batch window avg uses, so the
+      // 4dp-rounded score is replayable by a window-function oracle
+      val score =
+        if (win.size == window) win.reverse.sum / window else Double.NaN
+      val tag =
+        if (score.isNaN) "I" else if (score > threshold) "O" else "N"
+      (MarkovBuf(e.state, win), Some(SeqScore(e.entity, e.seq, e.state, score, tag)))
+    }
   }
 
   /** A gram whose guaranteed lower bound crossed minCount: `cnt` is the
@@ -1428,35 +1252,21 @@ object StreamScorers {
     require(steps.nonEmpty, "funnelStream needs at least one step")
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[TypedEvent], gs: GroupState[FunnelSt]) => {
-          var st = gs.getOption.getOrElse(FunnelSt(0, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FunnelOut]
-          it.toSeq.sortBy(e => (e.seq, e.typ)).foreach { e =>
-            if (st.step < steps.length && e.typ == steps(st.step) &&
-              (st.step == 0 || e.seq > st.t)) {
-              st = FunnelSt(st.step + 1, e.seq)
-              out += FunnelOut(entity, st.step.toLong,
-                steps(st.step - 1), e.seq)
-            }
-          }
-          gs.update(st)
-          out.iterator
-        })
+    perEntity(events)(_.entity, e => (e.seq, e.typ), _ => FunnelSt(0, Long.MinValue)) {
+      entity => (st, e) =>
+        if (st.step < steps.length && e.typ == steps(st.step) &&
+          (st.step == 0 || e.seq > st.t))
+          (FunnelSt(st.step + 1, e.seq),
+            Some(FunnelOut(entity, st.step + 1L, steps(st.step), e.seq)))
+        else (st, None)
+    }
   }
 
-  // window values (4dp longs, oldest first) since the last drift + the
-  // entity's lifetime row count — the local prefix diffs equal the batch
-  // kernel's full-prefix diffs exactly (long addition is associative),
-  // so every mean/eps double matches bit-for-bit
-  case class AdwinSt(vals: List[Long], nSeen: Long)
-
   /** Streaming ADWIN — the online face of [[graft.drift.Drift.adwin]],
-    * exact batch parity row-for-row: per entity keep the 4dp-quantized
-    * window since the last drift; each arrival tests every cut with the
-    * same Hoeffding bound and on drift the window restarts at the
+    * sharing its step ([[graft.drift.Drift.adwinStep]]), so it is exact
+    * batch parity row-for-row: per entity keep the 4dp prefix sums of
+    * the window since the last drift; each arrival tests every cut with
+    * the same Hoeffding bound and on drift the window restarts at the
     * current row. State is the current window (resets on drift) — the
     * detector's inherent memory; size it with upstream thinning as the
     * batch scaladoc documents. */
@@ -1464,75 +1274,28 @@ object StreamScorers {
       r: Double): Dataset[graft.drift.Drift.AdwinOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.entity)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (entity: String, it: Iterator[ValueEvent], gs: GroupState[AdwinSt]) => {
-          var st = gs.getOption.getOrElse(AdwinSt(Nil, 0L))
-          val out = it.toSeq.sortBy(_.seq).map { e =>
-            val f = (if (e.value >= 0) math.floor(e.value * 1e4 + 0.5)
-              else -math.floor(-e.value * 1e4 + 0.5)).toLong
-            val vals = st.vals :+ f
-            val nSeen = st.nSeen + 1
-            val wlen = vals.length
-            val q = new Array[Long](wlen + 1)
-            var i = 0
-            vals.foreach { v => q(i + 1) = q(i) + v; i += 1 }
-            var drift = false
-            var c = 1
-            while (!drift && c <= wlen - 1) {
-              val n1 = c.toDouble
-              val n2 = (wlen - c).toDouble
-              val m1 = (q(c).toDouble / 10000.0) / n1
-              val m2 = ((q(wlen) - q(c)).toDouble / 10000.0) / n2
-              val eps = r * math.sqrt(((1.0 / n1 + 1.0 / n2) / 2.0) *
-                math.log(4.0 * wlen.toDouble / delta))
-              if (math.abs(m1 - m2) > eps) drift = true
-              c += 1
-            }
-            st = if (drift) AdwinSt(List(f), nSeen)
-              else AdwinSt(vals, nSeen)
-            val winStart = if (drift) nSeen else nSeen - wlen + 1
-            graft.drift.Drift.AdwinOut(entity, e.seq, e.value,
-              winStart, drift)
-          }
-          gs.update(st)
-          out.iterator
-        })
+    import graft.drift.Drift.{AdwinOut, AdwinState, adwinStep}
+    perEntity(events)(_.entity, _.seq, _ => AdwinState()) { entity => (st, e) =>
+      val (next, drift) = adwinStep(delta, r)(st, e.value)
+      (next, Some(AdwinOut(entity, e.seq, e.value, next.winStart, drift)))
+    }
   }
 
-  case class EloSt(ratings: Map[String, Double])
-
   /** Streaming Elo — the online face of
-    * [[graft.model.Preference.eloTrajectory]], exact batch parity
-    * row-for-row: the per-league rating map lives in GroupState
+    * [[graft.model.Preference.eloTrajectory]], sharing its step
+    * ([[graft.model.Preference.eloStep]]), so the trajectories match
+    * bit-for-bit: the per-league rating map lives in GroupState
     * (item-vocabulary-sized), each match emits the two post-update
-    * ratings append-only. Identical IEEE op order to the batch kernel
-    * (exp(x·ln10) logistic), so the trajectories match bit-for-bit. */
+    * ratings append-only. */
   def eloStream(matches: Dataset[graft.model.Preference.EloMatch],
       k: Double = 32.0, init: Double = 1000.0):
       Dataset[graft.model.Preference.EloOut] = {
     val spark = matches.sparkSession
     import spark.implicits._
-    val ln10 = math.log(10.0)
-    matches.groupByKey(_.league)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (league: String,
-            it: Iterator[graft.model.Preference.EloMatch],
-            gs: GroupState[EloSt]) => {
-          var r = gs.getOption.getOrElse(EloSt(Map.empty)).ratings
-          val out = it.toSeq.sortBy(_.ord).map { m =>
-            val rw = r.getOrElse(m.winner, init)
-            val rl = r.getOrElse(m.loser, init)
-            val e = 1.0 / (1.0 + math.exp(((rl - rw) / 400.0) * ln10))
-            val nw = rw + k * (1.0 - e)
-            val nl = rl - k * (1.0 - e)
-            r = r.updated(m.winner, nw).updated(m.loser, nl)
-            graft.model.Preference.EloOut(league, m.ord, m.winner,
-              m.loser, nw, nl)
-          }
-          gs.update(EloSt(r))
-          out.iterator
-        })
+    perEntity(matches)(_.league, _.ord, _ => Map.empty[String, Double]) { _ => (r, m) =>
+      val (next, row) = graft.model.Preference.eloStep(k, init)(r, m)
+      (next, Some(row))
+    }
   }
 
   // ------------------------------------------------------ round-11 twins
@@ -1630,28 +1393,19 @@ object StreamScorers {
       col(ordCol).cast("long").as("o"),
       col(aCol).cast("double").as("a"), col(bCol).cast("double").as("b"))
       .as[(String, Long, Double, Double)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: String, it: Iterator[(String, Long, Double, Double)],
-            st: GroupState[MsprtState]) => {
-          var (t, sd4, maxLl) = st.getOption
-            .map(s => (s.t, s.sd4, s.maxLl))
-            .getOrElse((0L, 0L, Double.NegativeInfinity))
-          val out = it.toArray.sortBy(_._2).map { case (_, _, a, b) =>
-            t += 1
-            sd4 += rha((b - a) * 1e4)
-            val n = t.toDouble
-            val v = 2.0 * sigma2 + n * tau2
-            val dm = sd4.toDouble / 1e4 / n
-            // StrictMath: bit-parity with the batch op's SQL log/exp
-            val ll = 0.5 * java.lang.StrictMath.log(2.0 * sigma2 / v) +
-              tau2 * n * n * dm * dm / (4.0 * sigma2 * v)
-            if (ll > maxLl) maxLl = ll
-            val p = math.min(1.0, java.lang.StrictMath.exp(-maxLl))
-            MsprtOut(key, t, dm, ll, p, p <= alpha)
-          }
-          st.update(MsprtState(t, sd4, maxLl))
-          out.iterator
-        })
+    perEntity(typed)(_._1, _._2, _ => MsprtState(0L, 0L, Double.NegativeInfinity)) {
+      key => (st, row) =>
+        val t = st.t + 1
+        val sd4 = st.sd4 + rha((row._4 - row._3) * 1e4)
+        val n = t.toDouble
+        val v = 2.0 * sigma2 + n * tau2
+        val dm = sd4.toDouble / 1e4 / n
+        // StrictMath: bit-parity with the batch op's SQL log/exp
+        val ll = 0.5 * java.lang.StrictMath.log(2.0 * sigma2 / v) +
+          tau2 * n * n * dm * dm / (4.0 * sigma2 * v)
+        val maxLl = if (ll > st.maxLl) ll else st.maxLl
+        val p = math.min(1.0, java.lang.StrictMath.exp(-maxLl))
+        (MsprtState(t, sd4, maxLl), Some(MsprtOut(key, t, dm, ll, p, p <= alpha)))
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.fixedPointLong
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1047,9 +1048,6 @@ object TextOps {
     * kl_ab, kl_ba. */
   def unigramKL(docs: DataFrame, groupCol: String, textCol: String,
       ga: String, gb: String, alpha: Double = 0.5): DataFrame = {
-    val fp6 = (c: Column) =>
-      when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5))
-        .cast("long")
     val tok = docs.where(col(groupCol) === ga || col(groupCol) === gb)
       .select((col(groupCol) === ga).as("_a"),
         explode(tokens(col(textCol))).as("_t"))
@@ -1065,8 +1063,8 @@ object TextOps {
     val pb = (col("cb").cast("double") + alpha) /
       (col("nb").cast("double") + lit(alpha) * col("v").cast("double"))
     withTot
-      .withColumn("_ab", fp6(pa * log(pa / pb)))
-      .withColumn("_ba", fp6(pb * log(pb / pa)))
+      .withColumn("_ab", fixedPointLong(pa * log(pa / pb), 6))
+      .withColumn("_ba", fixedPointLong(pb * log(pb / pa), 6))
       .groupBy(col("v"), col("na"), col("nb"))
       .agg(sum(col("_ab")).as("_sab"), sum(col("_ba")).as("_sba"))
       .select(col("v"), col("na").as("n_a"), col("nb").as("n_b"),

@@ -661,7 +661,7 @@ class StreamSpec extends SparkSpec {
   test("entropy-increase stream: off-distribution value scores high") {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[ValueEvent]
-    val scored = StreamScorers.entropyIncreaseStreaming(in.toDS(), bucketWidth = 10.0,
+    val scored = StreamScorers.entropyIncreaseStream(in.toDS(), bucketWidth = 10.0,
       minCount = 20)
     val q = scored.writeStream.format("memory").queryName("ei").outputMode("append").start()
     in.addData((1 to 40).map(i => ValueEvent("e1", i.toLong, 15.0 + (i % 2) * 10.0)): _*)
@@ -794,6 +794,72 @@ class StreamSpec extends SparkSpec {
       .collect().map(r => r.seq -> r.score).toMap
     rows.foreach(r => assert(batch(r.seq) == r.score, s"parity at seq ${r.seq}"))
     assert(rows.filter(_.score > 100.0).map(_.seq).toSeq == Seq(80L), "only the spike alarms")
+  }
+
+  /** Runs `scorer` over `vals` as entity e1 in two micro-batches split
+    * at `cut` (mid-anchor state crosses the batch boundary) and returns
+    * seq → score. */
+  private def twoBatchScores(name: String, vals: Seq[Double], cut: Int)(
+      scorer: org.apache.spark.sql.Dataset[ValueEvent] =>
+        org.apache.spark.sql.Dataset[StreamScorers.HoltOut]): Map[Long, Double] = {
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[ValueEvent]
+    val q = scorer(in.toDS()).writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    val evs = vals.zipWithIndex.map { case (v, i) => ValueEvent("e1", i.toLong, v) }
+    in.addData(evs.take(cut): _*); q.processAllAvailable()
+    in.addData(evs.drop(cut): _*); q.processAllAvailable()
+    val got = spark.table(name).as[StreamScorers.HoltOut].collect()
+      .map(r => r.seq -> r.score).toMap
+    q.stop()
+    got
+  }
+
+  /** The batch kernel's per-key exact 4dp sums (n, Σf, Σf²) as doubles —
+    * the model the fit-batch/score-stream twins take. */
+  private def fixedSums(vals: Seq[Double]): (Double, Double, Double) = {
+    val f = vals.map(x => (if (x >= 0) math.floor(x * 1e4 + 0.5)
+      else -math.floor(-x * 1e4 + 0.5)).toLong)
+    (vals.length.toDouble, f.sum.toDouble, f.map(v => v * v).sum.toDouble)
+  }
+
+  private def batchScores(vals: Seq[Double])(
+      kernel: (org.apache.spark.sql.DataFrame, Seq[String], String, String) =>
+        org.apache.spark.sql.Dataset[graft.seq.SeriesKernels.SScore]): Map[Long, Double] =
+    kernel(vals.zipWithIndex.map { case (v, i) => ("e1", i.toLong, v) }
+      .toDF("k", "seq", "value"), Seq("k"), "seq", "value")
+      .collect().map(r => r.seq -> r.score).toMap
+
+  test("streaming kalman: bit-exact batch parity across two micro-batches") {
+    val vals = (0 until 90).map(i =>
+      10.0 + 0.37 * (i % 7) - 0.11 * (i % 3) + (if (i == 60) 25.0 else 0.0))
+    val (n, s, q2) = fixedSums(vals)
+    val model = Map("e1" -> (((q2 - s * s / n) / (n - 1) / 1e8, n.toLong)))
+    val got = twoBatchScores("kal", vals, 1)(StreamScorers.kalmanStream(_, model))
+    val want = batchScores(vals)(graft.seq.StateSpace.kalmanFilter(_, _, _, _))
+    assert(got.size == 90 && want.size == 90)
+    want.foreach { case (seq, v) =>
+      assert(got(seq) == v, s"kalman parity at seq $seq: $v vs ${got(seq)}")
+    }
+    assert(want.maxBy(_._2)._1 == 60L, "the spike scores highest")
+    // a second split, after the level anchored, gives the same scores
+    assert(twoBatchScores("kal2", vals, 45)(StreamScorers.kalmanStream(_, model)) == got)
+  }
+
+  test("streaming ewma chart: bit-exact batch parity across two micro-batches") {
+    val vals = (0 until 90).map(i =>
+      50.0 + 0.5 * (i % 5) + (if (i >= 60) 1.75 else 0.0))
+    val (n, s, q2) = fixedSums(vals)
+    val model = Map("e1" ->
+      ((s / n / 1e4, math.sqrt((q2 - s * s / n) / (n - 1)) / 1e4, n.toLong)))
+    val got = twoBatchScores("ewm", vals, 30)(StreamScorers.ewmaChartStream(_, model))
+    val want = batchScores(vals)(graft.seq.StateSpace.ewmaChart(_, _, _, _))
+    assert(got.size == 90 && want.size == 90)
+    want.foreach { case (seq, v) =>
+      assert(got(seq) == v, s"ewma parity at seq $seq: $v vs ${got(seq)}")
+    }
+    assert(want.filter(_._2 > 1.0).keys.forall(_ >= 60L) &&
+      want.exists(_._2 > 1.0), "only the shifted tail is out of control")
   }
 
   test("streaming dedup drops repeats within the watermark") {
