@@ -207,6 +207,15 @@ package object core {
     when(c >= 0, floor(c * f + 0.5)).otherwise(-floor(-c * f + 0.5)).cast("long")
   }
 
+  /** Row-level twin of [[fixedPointLong]]: x·10^p rounded half away from
+    * zero, as a whole-valued double. `.toLong` gives the fixed-point long
+    * (NaN → 0; ±∞ and |x|·10^p ≥ 2⁶³ clamp to the Long bounds), `/ 10^p`
+    * the p-dp rounded value (NaN and ±∞ pass through). */
+  def fixedPoint(x: Double, p: Int): Double = {
+    val f = math.pow(10, p)
+    if (x >= 0) math.floor(x * f + 0.5) else -math.floor(-x * f + 0.5)
+  }
+
   /** Cache + right-size a frame an iterative fitter will aggregate many
     * times (r13, guide §1.2 per-task work): persist MEMORY_AND_DISK,
     * count it (the fitters need n anyway), and — when the frame is

@@ -314,24 +314,54 @@ object Drift {
       .drop("_rn", "_v6", "_s6", "_mean6", "_dev6", "_mInc", "_mDec")
   }
 
-  /** Embedding-distribution drift via the energy distance (Székely &
-    * Rizzo 2004, "Testing for equal distributions in high dimension"):
-    * E = 2·E‖X−Y‖ − E‖X−X'‖ − E‖Y−Y'‖ over two embedding samples —
-    * ≥ 0, and 0 iff the distributions coincide. The distribution-level
-    * "did this crawl's embedding space shift vs the last one" check the
-    * scalar drift detectors (§2.9) can't express, metric-free in any
-    * dimension (no density estimation, unlike the grid detector).
-    *
-    * Each expectation is a V-statistic over all ordered pairs (self
-    * pairs contribute 0), evaluated as one cross join + codegen'd
-    * distance per term. Quadratic by nature, so the operator bounds
-    * BOTH sides to a deterministic `maxSample` (md5-of-`idCol` order —
-    * a total, engine-independent order; orderBy+limit compiles to a
-    * distributed TakeOrdered, no full sort). The statistic is a sample
-    * estimate anyway — what a 100 TB caller needs is a bounded-cost
-    * estimator, not 10^21 pair distances. Pass maxSample = 0 to
-    * disable. Output (one row): n, m (SAMPLED sizes), exy, exx, eyy,
-    * energy. */
+  /** Bin index for [[psi]]: equal-width from (lo, hi), clamped; the
+    * degenerate lo == hi reference collapses to bin 0. */
+  private def psiBin(v: Column, lo: Column, hi: Column, nBins: Int): Column =
+    when(hi > lo,
+      least(greatest(floor((v - lo) / ((hi - lo) / lit(nBins.toDouble))),
+        lit(0L)), lit(nBins - 1L)))
+      .otherwise(0L).cast("int")
+
+  /** Per-key equal-width bin edges `_lo`/`_hi` of the reference values. */
+  private def binEdges(ref: DataFrame, keyCols: Seq[String], v: Column): DataFrame =
+    ref.groupBy(keyCols.map(col): _*).agg(min(v).as("_lo"), max(v).as("_hi"))
+
+  /** The non-null `v` rows of `df` with their reference bin `_bin`. */
+  private def binned(df: DataFrame, edges: DataFrame, keyCols: Seq[String],
+      v: Column, nBins: Int): DataFrame =
+    df.where(v.isNotNull)
+      .join(broadcast(edges), keyCols)
+      .withColumn("_bin", psiBin(v, col("_lo"), col("_hi"), nBins))
+
+  /** The binned frame [[psi]], [[jsDivergence]] and [[hellinger]] share:
+    * one row per (key, bin) — empty bins included — with the smoothed
+    * reference and current shares (cnt + 0.5)/(total + nBins·0.5),
+    * returned as the two share Columns over that frame. */
+  private def binShares(ref: DataFrame, cur: DataFrame, keyCols: Seq[String],
+      valCol: String, nBins: Int): (DataFrame, Column, Column) = {
+    val v = col(valCol).cast("double")
+    val edges = binEdges(ref, keyCols, v)
+    def counts(df: DataFrame, as: String): DataFrame =
+      binned(df, edges, keyCols, v, nBins)
+        .groupBy((keyCols :+ "_bin").map(col): _*)
+        .agg(count(lit(1)).as(as))
+    val rc = counts(ref, "_rc")
+    val cc = counts(cur, "_cc")
+    val bins = edges.select(keyCols.map(col) :+
+      explode(sequence(lit(0), lit(nBins - 1))).as("_bin"): _*)
+    val joined = bins
+      .join(rc, keyCols :+ "_bin", "left")
+      .join(cc, keyCols :+ "_bin", "left")
+      .withColumn("_rc", coalesce(col("_rc"), lit(0L)))
+      .withColumn("_cc", coalesce(col("_cc"), lit(0L)))
+    val tots = joined.groupBy(keyCols.map(col): _*)
+      .agg(sum("_rc").as("_rt"), sum("_cc").as("_ct"))
+    val half = lit(nBins * 0.5)
+    (joined.join(broadcast(tots), keyCols),
+      (col("_rc") + 0.5) / (col("_rt") + half),
+      (col("_cc") + 0.5) / (col("_ct") + half))
+  }
+
   /** Population Stability Index (the scorecard-industry drift standard,
     * e.g. Siddiqi 2006): equal-width bins from the REFERENCE window's
     * per-key min/max; psi = Σ_b (c_b − r_b)·ln(c_b/r_b) over smoothed
@@ -347,40 +377,10 @@ object Drift {
     * 6dp fixed-point longs first (order-exact — the q174 device), so
     * the only cross-engine assumption is ln parity on identical
     * doubles, the same assumption the NB/LM family already pins. */
-  /** Bin index for [[psi]]: equal-width from (lo, hi), clamped; the
-    * degenerate lo == hi reference collapses to bin 0. */
-  private def psiBin(v: Column, lo: Column, hi: Column, nBins: Int): Column =
-    when(hi > lo,
-      least(greatest(floor((v - lo) / ((hi - lo) / lit(nBins.toDouble))),
-        lit(0L)), lit(nBins - 1L)))
-      .otherwise(0L).cast("int")
-
   def psi(ref: DataFrame, cur: DataFrame, keyCols: Seq[String],
       valCol: String, nBins: Int = 10, threshold: Double = 0.2): DataFrame = {
-    val v = col(valCol).cast("double")
-    val edges = ref.groupBy(keyCols.map(col): _*)
-      .agg(min(v).as("_lo"), max(v).as("_hi"))
-    def counts(df: DataFrame, as: String): DataFrame =
-      df.where(v.isNotNull)
-        .join(broadcast(edges), keyCols)
-        .withColumn("_bin", psiBin(v, col("_lo"), col("_hi"), nBins))
-        .groupBy((keyCols :+ "_bin").map(col): _*)
-        .agg(count(lit(1)).as(as))
-    val rc = counts(ref, "_rc")
-    val cc = counts(cur, "_cc")
-    val bins = edges.select(keyCols.map(col) :+
-      explode(sequence(lit(0), lit(nBins - 1))).as("_bin"): _*)
-    val joined = bins
-      .join(rc, keyCols :+ "_bin", "left")
-      .join(cc, keyCols :+ "_bin", "left")
-      .withColumn("_rc", coalesce(col("_rc"), lit(0L)))
-      .withColumn("_cc", coalesce(col("_cc"), lit(0L)))
-    val tots = joined.groupBy(keyCols.map(col): _*)
-      .agg(sum("_rc").as("_rt"), sum("_cc").as("_ct"))
-    val half = lit(nBins * 0.5)
-    val rs = (col("_rc") + 0.5) / (col("_rt") + half)
-    val cs = (col("_cc") + 0.5) / (col("_ct") + half)
-    joined.join(broadcast(tots), keyCols)
+    val (shares, rs, cs) = binShares(ref, cur, keyCols, valCol, nBins)
+    shares
       .withColumn("_t6",
         graft.core.fixedPointLong((cs - rs) * log(cs / rs), 6))
       .groupBy(keyCols.map(col): _*)
@@ -400,31 +400,9 @@ object Drift {
     * model-sized bin join. */
   def jsDivergence(ref: DataFrame, cur: DataFrame, keyCols: Seq[String],
       valCol: String, nBins: Int = 10, threshold: Double = 0.1): DataFrame = {
-    val v = col(valCol).cast("double")
-    val edges = ref.groupBy(keyCols.map(col): _*)
-      .agg(min(v).as("_lo"), max(v).as("_hi"))
-    def counts(df: DataFrame, as: String): DataFrame =
-      df.where(v.isNotNull)
-        .join(broadcast(edges), keyCols)
-        .withColumn("_bin", psiBin(v, col("_lo"), col("_hi"), nBins))
-        .groupBy((keyCols :+ "_bin").map(col): _*)
-        .agg(count(lit(1)).as(as))
-    val rc = counts(ref, "_rc")
-    val cc = counts(cur, "_cc")
-    val bins = edges.select(keyCols.map(col) :+
-      explode(sequence(lit(0), lit(nBins - 1))).as("_bin"): _*)
-    val joined = bins
-      .join(rc, keyCols :+ "_bin", "left")
-      .join(cc, keyCols :+ "_bin", "left")
-      .withColumn("_rc", coalesce(col("_rc"), lit(0L)))
-      .withColumn("_cc", coalesce(col("_cc"), lit(0L)))
-    val tots = joined.groupBy(keyCols.map(col): _*)
-      .agg(sum("_rc").as("_rt"), sum("_cc").as("_ct"))
-    val half = lit(nBins * 0.5)
-    val rs = (col("_rc") + 0.5) / (col("_rt") + half)
-    val cs = (col("_cc") + 0.5) / (col("_ct") + half)
+    val (shares, rs, cs) = binShares(ref, cur, keyCols, valCol, nBins)
     val ms = (rs + cs) / 2.0
-    joined.join(broadcast(tots), keyCols)
+    shares
       .withColumn("_t8", graft.core.fixedPointLong(
         lit(0.5) * rs * log(rs / ms) + lit(0.5) * cs * log(cs / ms), 8))
       .groupBy(keyCols.map(col): _*)
@@ -485,30 +463,8 @@ object Drift {
   def hellinger(ref: DataFrame, cur: DataFrame, keyCols: Seq[String],
       valCol: String, nBins: Int = 10, threshold: Double = 0.2)
       : DataFrame = {
-    val v = col(valCol).cast("double")
-    val edges = ref.groupBy(keyCols.map(col): _*)
-      .agg(min(v).as("_lo"), max(v).as("_hi"))
-    def counts(df: DataFrame, as: String): DataFrame =
-      df.where(v.isNotNull)
-        .join(broadcast(edges), keyCols)
-        .withColumn("_bin", psiBin(v, col("_lo"), col("_hi"), nBins))
-        .groupBy((keyCols :+ "_bin").map(col): _*)
-        .agg(count(lit(1)).as(as))
-    val rc = counts(ref, "_rc")
-    val cc = counts(cur, "_cc")
-    val bins = edges.select(keyCols.map(col) :+
-      explode(sequence(lit(0), lit(nBins - 1))).as("_bin"): _*)
-    val joined = bins
-      .join(rc, keyCols :+ "_bin", "left")
-      .join(cc, keyCols :+ "_bin", "left")
-      .withColumn("_rc", coalesce(col("_rc"), lit(0L)))
-      .withColumn("_cc", coalesce(col("_cc"), lit(0L)))
-    val tots = joined.groupBy(keyCols.map(col): _*)
-      .agg(sum("_rc").as("_rt"), sum("_cc").as("_ct"))
-    val half = lit(nBins * 0.5)
-    val rs = (col("_rc") + 0.5) / (col("_rt") + half)
-    val cs = (col("_cc") + 0.5) / (col("_ct") + half)
-    joined.join(broadcast(tots), keyCols)
+    val (shares, rs, cs) = binShares(ref, cur, keyCols, valCol, nBins)
+    shares
       .withColumn("_t8", graft.core.fixedPointLong(sqrt(rs * cs), 8))
       .groupBy(keyCols.map(col): _*)
       .agg((sum("_t8") / 1e8).as("bc"))
@@ -636,11 +592,7 @@ object Drift {
   def psiRefModel(ref: DataFrame, keyCol: String, valCol: String,
       nBins: Int = 10): Map[String, PsiRef] = {
     val v = col(valCol).cast("double")
-    val edges = ref.groupBy(col(keyCol))
-      .agg(min(v).as("_lo"), max(v).as("_hi"))
-    val rows = ref.where(v.isNotNull)
-      .join(broadcast(edges), Seq(keyCol))
-      .withColumn("_bin", psiBin(v, col("_lo"), col("_hi"), nBins))
+    val rows = binned(ref, binEdges(ref, Seq(keyCol), v), Seq(keyCol), v, nBins)
       .groupBy(col(keyCol).cast("string").as("_k"), col("_bin"))
       .agg(count(lit(1)).as("_c"), first("_lo").as("_lo"), first("_hi").as("_hi"))
       .collect()
@@ -652,6 +604,24 @@ object Drift {
     }
   }
 
+  /** Embedding-distribution drift via the energy distance (Székely &
+    * Rizzo 2004, "Testing for equal distributions in high dimension"):
+    * E = 2·E‖X−Y‖ − E‖X−X'‖ − E‖Y−Y'‖ over two embedding samples —
+    * ≥ 0, and 0 iff the distributions coincide. The distribution-level
+    * "did this crawl's embedding space shift vs the last one" check the
+    * scalar drift detectors (§2.9) can't express, metric-free in any
+    * dimension (no density estimation, unlike the grid detector).
+    *
+    * Each expectation is a V-statistic over all ordered pairs (self
+    * pairs contribute 0), evaluated as one cross join + codegen'd
+    * distance per term. Quadratic by nature, so the operator bounds
+    * BOTH sides to a deterministic `maxSample` (md5-of-`idCol` order —
+    * a total, engine-independent order; orderBy+limit compiles to a
+    * distributed TakeOrdered, no full sort). The statistic is a sample
+    * estimate anyway — what a 100 TB caller needs is a bounded-cost
+    * estimator, not 10^21 pair distances. Pass maxSample = 0 to
+    * disable. Output (one row): n, m (SAMPLED sizes), exy, exx, eyy,
+    * energy. */
   def embeddingEnergyDistance(a: DataFrame, b: DataFrame,
       vecCol: String, idCol: String = null, maxSample: Int = 0): DataFrame = {
     val spark = a.sparkSession
@@ -809,8 +779,7 @@ object Drift {
     * steps the same function. */
   def adwinStep(delta: Double, r: Double)(st: AdwinState,
       v: Double): (AdwinState, Boolean) = {
-    val f = (if (v >= 0) math.floor(v * 1e4 + 0.5)
-      else -math.floor(-v * 1e4 + 0.5)).toLong
+    val f = graft.core.fixedPoint(v, 4).toLong
     val w = st.prefix.length // window length with v
     val q = java.util.Arrays.copyOf(st.prefix, w + 1)
     q(w) = q(w - 1) + f

@@ -137,14 +137,8 @@ object Graph {
     * from each edge's LOWER-degree endpoint), which this implements:
     * work is Σ min-degree², the O(E^1.5) bound. Exact integer output. */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val raw = edges.select(col(srcCol).cast("string").as("a"),
-      col(dstCol).cast("string").as("b"))
-    val und = raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-    val deg = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val und = undirected(edges, srcCol, dstCol)
+    val deg = undirectedDegrees(und)
     // orient each edge from its lower-degree endpoint (ties: lower id) —
     // every triangle is then counted exactly once as a wedge at its
     // minimum-degree corner closed by a forward edge
@@ -196,14 +190,7 @@ object Graph {
     * whole cost; the degree agg and node-sized join ride its cache. */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val raw = edges.select(col(srcCol).cast("string").as("a"),
-      col(dstCol).cast("string").as("b"))
-    val und = raw.where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-    val deg = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
+    val deg = undirectedDegrees(undirected(edges, srcCol, dstCol))
     deg.join(triangles(edges, srcCol, dstCol), "node")
       .select(col("node"), col("d"), col("triangles"),
         when(col("d") >= 2,
@@ -248,17 +235,28 @@ object Graph {
       .withColumn("dangling", col("outDeg") === 0L)
   }
 
-  /** Canonical undirected both-direction edge set: self-loops dropped,
-    * duplicates collapsed, every surviving {a,b} present as both
-    * (a→b) and (b→a) — the layout the undirected ops below share so a
-    * node's full neighborhood is reachable from one src-keyed join. */
-  private def undirectedBoth(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val und = edges.select(col(srcCol).cast("string").as("a"),
+  /** Canonical undirected edge set: self-loops dropped, duplicates
+    * collapsed, each surviving {a,b} once as (least, greatest). */
+  private def undirected(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("string").as("a"),
       col(dstCol).cast("string").as("b"))
       .where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b")).distinct()
+
+  /** Per-node degree `d` over an [[undirected]] edge set. */
+  private def undirectedDegrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("node"))
+      .union(und.select(col("b").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("d"))
+
+  /** The [[undirected]] edge set with every {a,b} present as both
+    * (a→b) and (b→a) — the layout the undirected ops below share so a
+    * node's full neighborhood is reachable from one src-keyed join. */
+  private def undirectedBoth(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
+    val und = undirected(edges, srcCol, dstCol)
     und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
   }
@@ -310,12 +308,7 @@ object Graph {
     // eager GC-cleaned materialization (edge-sized); feeds the
     // intra-community join, the degree roll-up AND the edge count —
     // and replaces an unpersist-less persist (advice-r13 leak class)
-    val und = edges.select(col(srcCol).cast("string").as("a"),
-      col(dstCol).cast("string").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
-      .localCheckpoint(true)
+    val und = undirected(edges, srcCol, dstCol).localCheckpoint(true)
     // labels may be an expensive lineage (the LPA chain): it feeds both
     // endpoint joins plus the degree roll-up — materialize once
     val lab = labels.select(col("node"), col("label")).localCheckpoint(true)
@@ -686,11 +679,7 @@ object Graph {
     * bit-for-bit by the oracle. One aggregate over the edge list. */
   def assortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val und = edges.select(col(srcCol).cast("string").as("a"),
-      col(dstCol).cast("string").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val deg = undirectedBoth(edges, srcCol, dstCol)
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     val da = deg.withColumnRenamed("node", "a").withColumnRenamed("d", "da")

@@ -54,9 +54,7 @@ object Multimodal {
     * as Float32 can land within float-eps of a 4dp rounding boundary —
     * pre-rounding makes the Float32 ↔ Float64 oracle comparison exact. */
   private def r4(x: Double): Float = {
-    val r = if (x >= 0) math.floor(x * 1e4 + 0.5) / 1e4
-            else -math.floor(-x * 1e4 + 0.5) / 1e4
-    r.toFloat
+    (graft.core.fixedPoint(x, 4) / 1e4).toFloat
   }
 
   /** Channel means + luma for a decoded image; `c0/c1/c2` index the blue,

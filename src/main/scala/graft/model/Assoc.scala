@@ -954,8 +954,7 @@ object Assoc {
         def upd(w: Double, key: String): Double = {
           val s = BigDecimal(r.getAs[java.math.BigDecimal](key)).toDouble
           val u = w + lr * (s / n / 1e9)
-          (if (u >= 0) math.floor(u * 1e6 + 0.5)
-           else -math.floor(-u * 1e6 + 0.5)) / 1e6
+          graft.core.fixedPoint(u, 6) / 1e6
         }
         a = upd(a, "ga"); b = upd(b, "gb")
       }
@@ -1010,8 +1009,7 @@ object Assoc {
         def upd(w: Double, key: String): Double = {
           val sBd = BigDecimal(r.getAs[java.math.BigDecimal](key)).toDouble
           val u = w + lr * (sBd / n / 1e9)
-          (if (u >= 0) math.floor(u * 1e6 + 0.5)
-           else -math.floor(-u * 1e6 + 0.5)) / 1e6
+          graft.core.fixedPoint(u, 6) / 1e6
         }
         a = upd(a, "ga"); b = upd(b, "gb")
       }
@@ -1150,8 +1148,7 @@ object Assoc {
         def upd(w0: Double, key: String): Double = {
           val sBd = BigDecimal(r.getAs[java.math.BigDecimal](key)).toDouble
           val u = w0 + lr * (sBd / n / 1e9)
-          (if (u >= 0) math.floor(u * 1e6 + 0.5)
-           else -math.floor(-u * 1e6 + 0.5)) / 1e6
+          graft.core.fixedPoint(u, 6) / 1e6
         }
         a = upd(a, "ga"); b = upd(b, "gb")
       }

@@ -647,9 +647,7 @@ object Behavior {
       "aGrid/bGrid must be non-empty and strictly positive")
     val died = (1 to tMax).map(t => alive(t - 1) - alive(t))
     require(died.forall(_ >= 0), "alive counts must be non-increasing")
-    def fp9(x: Double): Long =
-      if (x >= 0) math.floor(x * 1e9 + 0.5).toLong
-      else -math.floor(-x * 1e9 + 0.5).toLong
+    def fp9(x: Double): Long = graft.core.fixedPoint(x, 9).toLong
     var best: (Long, Double, Double, Double) = null
     for (a <- aGrid; b <- bGrid) {
       var p = a / (a + b)

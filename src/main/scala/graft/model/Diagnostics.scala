@@ -30,6 +30,29 @@ object Diagnostics {
   private def fp(c: Column): Column = graft.core.fixedPointLong(c, 4)
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
 
+  /** The complete-block frame shared by the (block, treatment, value)
+    * tests: rows where `present` holds, as (`b`, `t`, `value`), kept
+    * only in blocks that carry all k distinct treatments. k is counted
+    * eagerly — every caller reports it as a literal. */
+  private def completeBlocks(data: DataFrame, blockCol: String,
+      treatCol: String, present: Column, value: Column,
+      b: String = "_b", t: String = "_t"): (DataFrame, Long) = {
+    val base = data.where(present)
+      .select(col(blockCol).as(b), col(treatCol).as(t), value)
+    val k = base.select(col(t)).distinct().count()
+    (base.withColumn("_kb", count(lit(1)).over(Window.partitionBy(col(b))))
+      .where(col("_kb") === k), k)
+  }
+
+  /** Within-block average ranks of `_v` over a complete-block frame:
+    * `_r2` = 2·r̄ = 2·rank + ct − 1, exact ints. */
+  private def blockRanks(full: DataFrame): DataFrame = {
+    val bw = Window.partitionBy(col("_b")).orderBy(col("_v").asc)
+    val cw = Window.partitionBy(col("_b"), col("_v"))
+    full.withColumn("_r2",
+      lit(2) * rank().over(bw) + count(lit(1)).over(cw) - 1)
+  }
+
   /** Jarque–Bera normality test per key: sample skewness g1 and
     * kurtosis g2 from exact power sums (population-moment form, the JB
     * convention), JB = n/6·(g1² + (g2−3)²/4). One row per key:
@@ -186,12 +209,8 @@ object Diagnostics {
     val h = d.groupBy(col("_ad"))
       .agg(count(lit(1)).as("_ct"),
         sum(when(col("_pos"), 1L).otherwise(0L)).as("_np"))
-    // banded prefix sum over the |d| histogram (the binaryAuc device)
-    val r = graft.core.bandedCumSum(h, expr("_ad div 100000"),
-        bandAsc = true, tie = Seq(col("_ad").asc),
-        sums = Map("_ct" -> "_cum"))
-      .withColumn("_r2",
-        lit(2) * (col("_cum") - col("_ct")) + col("_ct") + 1)
+    val r = GroupTests.valueCumSum(h, Map("_ct" -> "_cum"), "_ad")
+      .withColumn("_r2", GroupTests.midrank2(col("_cum"), col("_ct")))
     val agg = r.agg(sum(col("_ct")).as("n"),
       sum(col("_np") * col("_r2")).as("_w2"),
       sum(col("_ct") * col("_ct") * col("_ct") - col("_ct")).as("_tc"))
@@ -214,20 +233,9 @@ object Diagnostics {
   def friedman(data: DataFrame, blockCol: String, treatCol: String,
       valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
-    val base = data.where(v.isNotNull)
-      .select(col(blockCol).as("_b"), col(treatCol).as("_t"),
-        fp(v).as("_v"))
-    val k = base.select(col("_t")).distinct().count()
-    val full = base
-      .withColumn("_kb", count(lit(1))
-        .over(Window.partitionBy(col("_b"))))
-      .where(col("_kb") === k)
-    // within-block average ranks: 2·r̄ = 2·rank + ct − 1, exact ints
-    val bw = Window.partitionBy(col("_b")).orderBy(col("_v").asc)
-    val cw = Window.partitionBy(col("_b"), col("_v"))
-    val ranked = full
-      .withColumn("_r2",
-        lit(2) * rank().over(bw) + count(lit(1)).over(cw) - 1)
+    val (full, k) = completeBlocks(data, blockCol, treatCol, v.isNotNull,
+      fp(v).as("_v"))
+    val ranked = blockRanks(full)
     val byTreat = ranked.groupBy(col("_t"))
       .agg(sum(col("_r2")).as("_rs2"), count(lit(1)).as("_nb"))
     val folded = GroupTests.foldOrdered(byTreat, "_t",
@@ -252,19 +260,9 @@ object Diagnostics {
   def pageL(data: DataFrame, blockCol: String, treatCol: String,
       valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
-    val base = data.where(v.isNotNull)
-      .select(col(blockCol).as("_b"), col(treatCol).as("_t"),
-        fp(v).as("_v"))
-    val k = base.select(col("_t")).distinct().count()
-    val full = base
-      .withColumn("_kb", count(lit(1))
-        .over(Window.partitionBy(col("_b"))))
-      .where(col("_kb") === k)
-    val bw = Window.partitionBy(col("_b")).orderBy(col("_v").asc)
-    val cw = Window.partitionBy(col("_b"), col("_v"))
-    val ranked = full
-      .withColumn("_r2",
-        lit(2) * rank().over(bw) + count(lit(1)).over(cw) - 1)
+    val (full, k) = completeBlocks(data, blockCol, treatCol, v.isNotNull,
+      fp(v).as("_v"))
+    val ranked = blockRanks(full)
     val byTreat = ranked.groupBy(col("_t"))
       .agg(sum(col("_r2")).as("_rs2"), count(lit(1)).as("_nb"))
     // position j = lexicographic index of the treatment (1-based)
@@ -293,30 +291,15 @@ object Diagnostics {
   def quade(data: DataFrame, blockCol: String, treatCol: String,
       valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
-    val base = data.where(v.isNotNull)
-      .select(col(blockCol).as("_b"), col(treatCol).as("_t"),
-        fp(v).as("_v"))
-    val k = base.select(col("_t")).distinct().count()
-    val full = base
-      .withColumn("_kb", count(lit(1))
-        .over(Window.partitionBy(col("_b"))))
-      .where(col("_kb") === k)
-    // within-block treatment ranks (2·r̄ ints)
-    val bw = Window.partitionBy(col("_b")).orderBy(col("_v").asc)
-    val cw = Window.partitionBy(col("_b"), col("_v"))
-    val ranked = full
-      .withColumn("_r2",
-        lit(2) * rank().over(bw) + count(lit(1)).over(cw) - 1)
+    val (full, k) = completeBlocks(data, blockCol, treatCol, v.isNotNull,
+      fp(v).as("_v"))
+    val ranked = blockRanks(full)
     // block ranges → block ranks Q (2·Q̄ ints via the range histogram)
     val rng = full.groupBy(col("_b"))
       .agg((max(col("_v")) - min(col("_v"))).as("_rg"))
     val rh = rng.groupBy(col("_rg")).agg(count(lit(1)).as("_ct"))
-    // banded prefix sum over the range histogram (the binaryAuc device)
-    val q2 = graft.core.bandedCumSum(rh, expr("_rg div 100000"),
-        bandAsc = true, tie = Seq(col("_rg").asc),
-        sums = Map("_ct" -> "_cum"))
-      .withColumn("_q2",
-        lit(2) * (col("_cum") - col("_ct")) + col("_ct") + 1)
+    val q2 = GroupTests.valueCumSum(rh, Map("_ct" -> "_cum"), "_rg")
+      .withColumn("_q2", GroupTests.midrank2(col("_cum"), col("_ct")))
     val blocks = rng.join(q2.select(col("_rg"), col("_q2")), "_rg")
       .select(col("_b"), col("_q2"))
     // 4·S_ij = _q2 · (2r̄ − (k+1)) exactly
@@ -350,19 +333,9 @@ object Diagnostics {
   def kendallW(data: DataFrame, blockCol: String, treatCol: String,
       valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
-    val base = data.where(v.isNotNull)
-      .select(col(blockCol).as("_b"), col(treatCol).as("_t"),
-        fp(v).as("_v"))
-    val k = base.select(col("_t")).distinct().count()
-    val full = base
-      .withColumn("_kb", count(lit(1))
-        .over(Window.partitionBy(col("_b"))))
-      .where(col("_kb") === k)
-    val bw = Window.partitionBy(col("_b")).orderBy(col("_v").asc)
-    val cw = Window.partitionBy(col("_b"), col("_v"))
-    val ranked = full
-      .withColumn("_r2",
-        lit(2) * rank().over(bw) + count(lit(1)).over(cw) - 1)
+    val (full, k) = completeBlocks(data, blockCol, treatCol, v.isNotNull,
+      fp(v).as("_v"))
+    val ranked = blockRanks(full)
     val byTreat = ranked.groupBy(col("_t"))
       .agg(sum(col("_r2")).as("_rs2"), count(lit(1)).as("_nb"))
     // 4·S = Σ (2R_j − n(k+1))² — exact longs
@@ -386,14 +359,8 @@ object Diagnostics {
   def cochranQ(data: DataFrame, blockCol: String, treatCol: String,
       flagCol: String): DataFrame = {
     val f = col(flagCol).cast("boolean")
-    val base = data.where(f.isNotNull)
-      .select(col(blockCol).as("_b"), col(treatCol).as("_t"),
-        when(f, 1L).otherwise(0L).as("_x"))
-    val k = base.select(col("_t")).distinct().count()
-    val full = base
-      .withColumn("_kb", count(lit(1))
-        .over(Window.partitionBy(col("_b"))))
-      .where(col("_kb") === k)
+    val (full, k) = completeBlocks(data, blockCol, treatCol, f.isNotNull,
+      when(f, 1L).otherwise(0L).as("_x"))
     val gj = full.groupBy(col("_t")).agg(sum(col("_x")).as("_g"))
       .agg(sum(col("_g") * col("_g")).as("_sg2"), sum(col("_g")).as("_tt"))
     val li = full.groupBy(col("_b")).agg(sum(col("_x")).as("_l"))
@@ -773,14 +740,8 @@ object Diagnostics {
   def cronbachAlpha(data: DataFrame, subjectCol: String, itemCol: String,
       valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
-    val base = data.where(v.isNotNull)
-      .select(col(subjectCol).as("_s"), col(itemCol).as("_i"),
-        fp(v).as("_v"))
-    val k = base.select(col("_i")).distinct().count()
-    val full = base
-      .withColumn("_kb", count(lit(1))
-        .over(Window.partitionBy(col("_s"))))
-      .where(col("_kb") === k)
+    val (full, k) = completeBlocks(data, subjectCol, itemCol, v.isNotNull,
+      fp(v).as("_v"), "_s", "_i")
     // Σ per-item variances: ordered fold over items
     val items = full.groupBy(col("_i"))
       .agg(count(lit(1)).as("_n"), sum(dec(col("_v"))).as("_sv"),
@@ -816,14 +777,8 @@ object Diagnostics {
   def icc(data: DataFrame, subjectCol: String, itemCol: String,
       valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
-    val base = data.where(v.isNotNull)
-      .select(col(subjectCol).as("_s"), col(itemCol).as("_i"),
-        fp(v).as("_v"))
-    val k = base.select(col("_i")).distinct().count()
-    val full = base
-      .withColumn("_kb", count(lit(1))
-        .over(Window.partitionBy(col("_s"))))
-      .where(col("_kb") === k)
+    val (full, k) = completeBlocks(data, subjectCol, itemCol, v.isNotNull,
+      fp(v).as("_v"), "_s", "_i")
     val a = GroupTests.anovaOnLongs(
       full.select(col("_s"), col("_v").as("_fp")), "_s", 1e4)
     val nS = col("k").cast("double") // anovaOnLongs' k = #groups = subjects

@@ -39,6 +39,63 @@ object GroupTests {
       .select(aggregate(col("_a"), lit(0.0),
         (acc, x) => acc + x("t")).as(as))
 
+  /** Two-group 4dp value histogram: per distinct fixed-point value `_v`
+    * of the non-null `valCol` rows in group `ga` or `gb`, the counts
+    * `_ca` and `_cb` of each group. */
+  private[model] def twoGroupHistogram(data: DataFrame, groupCol: String,
+      valCol: String, ga: String, gb: String): DataFrame = {
+    val v = col(valCol).cast("double")
+    data.where(v.isNotNull && (col(groupCol) === ga || col(groupCol) === gb))
+      .select(col(groupCol).as("_g"), graft.core.fixedPointLong(v, 4).as("_v"))
+      .groupBy(col("_v"))
+      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("_ca"),
+        sum(when(col("_g") === gb, 1L).otherwise(0L)).as("_cb"))
+  }
+
+  /** [[twoGroupHistogram]] plus the pooled count `_ct` and its 2·midrank
+    * `_r2` at each value. */
+  private[model] def twoGroupMidranks(data: DataFrame, groupCol: String,
+      valCol: String, ga: String, gb: String): DataFrame =
+    valueCumSum(twoGroupHistogram(data, groupCol, valCol, ga, gb)
+      .withColumn("_ct", col("_ca") + col("_cb")), Map("_ct" -> "_cum"))
+      .withColumn("_r2", midrank2(col("_cum"), col("_ct")))
+
+  /** Ascending prefix sums (`in` → `out`) over a fixed-point value
+    * histogram keyed by `v` — banded, so no window over the whole
+    * histogram is unpartitioned (the binaryAuc device). */
+  private[model] def valueCumSum(h: DataFrame, sums: Map[String, String],
+      v: String = "_v"): DataFrame =
+    graft.core.bandedCumSum(h, expr(s"$v div 100000"), bandAsc = true,
+      tie = Seq(col(v).asc), sums = sums)
+
+  /** 2·r̄ of a tie run of `ct` values whose cumulative count is `cum`:
+    * 2·(cum − ct) + ct + 1, an exact integer. */
+  private[model] def midrank2(cum: Column, ct: Column): Column =
+    lit(2) * (cum - ct) + ct + 1
+
+  /** Per row of `valCol`, its group `key` and the exact deviation
+    * |2v − m2| from the group's 2·median (2×4dp fixed point), as `as`.
+    * The median is the exact order statistic — the average of the two
+    * middles on even counts — carried as the integer m2. */
+  private def medianDeviation(data: DataFrame, groupCol: String,
+      valCol: String, key: Column, as: String): DataFrame = {
+    val v = col(valCol).cast("double")
+    val fp = data.where(v.isNotNull)
+      .select(col(groupCol), graft.core.fixedPointLong(v, 4).as("_v"))
+    val w = Window.partitionBy(col(groupCol)).orderBy(col("_v").asc)
+    val kw = Window.partitionBy(col(groupCol))
+    val med2 = fp
+      .withColumn("_rn", row_number().over(w).cast("long"))
+      .withColumn("_c", count(lit(1)).over(kw).cast("long"))
+      // integer middles: Column./ on longs is DOUBLE division, so floor
+      .where(col("_rn") === floor((col("_c") + 1) / 2).cast("long") ||
+        col("_rn") === floor(col("_c") / 2).cast("long") + 1)
+      .groupBy(col(groupCol)).agg((sum(col("_v")) *
+        when(count(lit(1)) === 1, 2).otherwise(1)).as("_m2"))
+    fp.join(broadcast(med2), Seq(groupCol))
+      .select(key, abs(lit(2) * col("_v") - col("_m2")).as(as))
+  }
+
   /** Shared ANOVA-F finish over a (group, long-value) frame: exact
     * per-group sums, ordered fold for Σ S_g²/n_g, double F finish.
     * Output: one row (k, n, ss_between, ss_within, f_stat) at the fixed
@@ -96,12 +153,8 @@ object GroupTests {
     val gvh = fp.groupBy(col(groupCol), col("_fp"))
       .agg(count(lit(1)).as("_c"))
     val vh = gvh.groupBy(col("_fp")).agg(sum(col("_c")).as("_ct"))
-    // banded prefix sum over the 4dp histogram (the binaryAuc device)
-    val vr = graft.core.bandedCumSum(vh, expr("_fp div 100000"),
-        bandAsc = true, tie = Seq(col("_fp").asc),
-        sums = Map("_ct" -> "_cum"))
-      .withColumn("_r2", lit(2) * (col("_cum") - col("_ct")) +
-        col("_ct") + 1)
+    val vr = valueCumSum(vh, Map("_ct" -> "_cum"), "_fp")
+      .withColumn("_r2", midrank2(col("_cum"), col("_ct")))
     val g = gvh.join(vr.select("_fp", "_r2"), "_fp")
       .groupBy(col(groupCol))
       .agg(sum(col("_c")).cast("decimal(38,0)").as("_ng"),
@@ -198,23 +251,7 @@ object GroupTests {
     * k, n, ss_between, ss_within, f_stat (SS in value² units). */
   def brownForsythe(data: DataFrame, groupCol: String, valCol: String)
       : DataFrame = {
-    val v = col(valCol).cast("double")
-    val fp = data.where(v.isNotNull)
-      .select(col(groupCol), graft.core.fixedPointLong(v, 4).as("_v"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("_v").asc)
-    val kw = Window.partitionBy(col(groupCol))
-    val med2 = fp
-      .withColumn("_rn", row_number().over(w).cast("long"))
-      .withColumn("_c", count(lit(1)).over(kw).cast("long"))
-      // integer middles: Column./ on longs is DOUBLE division, so floor
-      .where(col("_rn") === floor((col("_c") + 1) / 2).cast("long") ||
-        col("_rn") === floor(col("_c") / 2).cast("long") + 1)
-      .groupBy(col(groupCol)).agg((sum(col("_v")) *
-        when(count(lit(1)) === 1, 2).otherwise(1)).as("_m2"))
-    anovaOnLongs(
-      fp.join(broadcast(med2), Seq(groupCol))
-        .select(col(groupCol),
-          abs(lit(2) * col("_v") - col("_m2")).as("_fp")),
+    anovaOnLongs(medianDeviation(data, groupCol, valCol, col(groupCol), "_fp"),
       groupCol, 2e4)
   }
 
@@ -228,18 +265,8 @@ object GroupTests {
     * windows of one series; this asks it of two populations). */
   def ksTwoSample(data: DataFrame, groupCol: String, valCol: String,
       ga: String, gb: String): DataFrame = {
-    val v = col(valCol).cast("double")
-    val h = data.where(v.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(groupCol).as("_g"),
-        graft.core.fixedPointLong(v, 4).as("_v"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === gb, 1L).otherwise(0L)).as("_cb"))
-    // banded prefix sums over the 4dp histogram (the binaryAuc device)
-    val cum = graft.core.bandedCumSum(h, expr("_v div 100000"),
-      bandAsc = true, tie = Seq(col("_v").asc),
-      sums = Map("_ca" -> "_fa", "_cb" -> "_fb"))
+    val h = twoGroupHistogram(data, groupCol, valCol, ga, gb)
+    val cum = valueCumSum(h, Map("_ca" -> "_fa", "_cb" -> "_fb"))
     // totals first (model-sized scalar), then the max over the frame
     val tot = h.agg(sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"))
     val d = cum.crossJoin(broadcast(tot))
@@ -321,22 +348,8 @@ object GroupTests {
     * this is the TEST face with the tie-corrected z.) */
   def mannWhitneyU(data: DataFrame, groupCol: String, valCol: String,
       ga: String, gb: String): DataFrame = {
-    val v = col(valCol).cast("double")
-    val h = data.where(v.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(groupCol).as("_g"),
-        graft.core.fixedPointLong(v, 4).as("_v"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("_ca"),
-        count(lit(1)).as("_ct"))
-    // banded prefix sum over the 4dp histogram (the binaryAuc device)
-    val r = graft.core.bandedCumSum(h, expr("_v div 100000"),
-        bandAsc = true, tie = Seq(col("_v").asc),
-        sums = Map("_ct" -> "_cum"))
-      .withColumn("_r2",
-        lit(2) * (col("_cum") - col("_ct")) + col("_ct") + 1)
-    val agg = r.agg(sum(col("_ca")).as("n_a"),
-      (sum(col("_ct")) - sum(col("_ca"))).as("n_b"),
+    val r = twoGroupMidranks(data, groupCol, valCol, ga, gb)
+    val agg = r.agg(sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"),
       sum(col("_ca") * col("_r2")).as("_ra2"),
       sum(col("_ct") * col("_ct") * col("_ct") - col("_ct")).as("_tc"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
@@ -553,18 +566,8 @@ object GroupTests {
     * One row: n_a, n_b, t_stat. */
   def cvmTwoSample(data: DataFrame, groupCol: String, valCol: String,
       ga: String, gb: String): DataFrame = {
-    val v = col(valCol).cast("double")
-    val h = data.where(v.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(groupCol).as("_g"),
-        graft.core.fixedPointLong(v, 4).as("_v"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === gb, 1L).otherwise(0L)).as("_cb"))
-    // banded prefix sums over the 4dp histogram (the binaryAuc device)
-    val cum = graft.core.bandedCumSum(h, expr("_v div 100000"),
-      bandAsc = true, tie = Seq(col("_v").asc),
-      sums = Map("_ca" -> "_fa", "_cb" -> "_fb"))
+    val h = twoGroupHistogram(data, groupCol, valCol, ga, gb)
+    val cum = valueCumSum(h, Map("_ca" -> "_fa", "_cb" -> "_fb"))
     val tot = h.agg(sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     val df2 = col("_fa").cast("double") / na -
@@ -595,32 +598,14 @@ object GroupTests {
     * k, n, chi2. */
   def flignerKilleen(data: DataFrame, groupCol: String, valCol: String)
       : DataFrame = {
-    val v = col(valCol).cast("double")
-    val fp = data.where(v.isNotNull)
-      .select(col(groupCol), graft.core.fixedPointLong(v, 4).as("_v"))
-    val w = Window.partitionBy(col(groupCol)).orderBy(col("_v").asc)
-    val kw = Window.partitionBy(col(groupCol))
-    val med2 = fp
-      .withColumn("_rn", row_number().over(w).cast("long"))
-      .withColumn("_c", count(lit(1)).over(kw).cast("long"))
-      .where(col("_rn") === floor((col("_c") + 1) / 2).cast("long") ||
-        col("_rn") === floor(col("_c") / 2).cast("long") + 1)
-      .groupBy(col(groupCol)).agg((sum(col("_v")) *
-        when(count(lit(1)) === 1, 2).otherwise(1)).as("_m2"))
-    // |2v − m2| exact longs (2×4dp scale); (group, d)-histogram
-    val cd = fp.join(broadcast(med2), Seq(groupCol))
-      .select(col(groupCol).as("_g"),
-        abs(lit(2) * col("_v") - col("_m2")).as("_d"))
+    // (group, d)-histogram of the exact |2v − m2| deviations
+    val cd = medianDeviation(data, groupCol, valCol, col(groupCol).as("_g"), "_d")
     val gvh = cd.groupBy(col("_g"), col("_d"))
       .agg(count(lit(1)).as("_c"))
     val vh = gvh.groupBy(col("_d")).agg(sum(col("_c")).as("_ct"))
     val tot = vh.agg(sum(col("_ct")).as("_nn"))
-    // banded prefix sum over the |d| histogram (the binaryAuc device)
-    val scored = graft.core.bandedCumSum(vh, expr("_d div 100000"),
-        bandAsc = true, tie = Seq(col("_d").asc),
-        sums = Map("_ct" -> "_cumd"))
-      .withColumn("_r2",
-        lit(2) * (col("_cumd") - col("_ct")) + col("_ct") + 1)
+    val scored = valueCumSum(vh, Map("_ct" -> "_cumd"), "_d")
+      .withColumn("_r2", midrank2(col("_cumd"), col("_ct")))
       .crossJoin(broadcast(tot))
       .withColumn("_a8", graft.core.fixedPointLong(
         graft.post.PostOps.probit(lit(0.5) +
@@ -665,18 +650,8 @@ object GroupTests {
     * [[cvmTwoSample]]. One row: n_a, n_b, a_stat. */
   def adTwoSample(data: DataFrame, groupCol: String, valCol: String,
       ga: String, gb: String): DataFrame = {
-    val v = col(valCol).cast("double")
-    val h = data.where(v.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(groupCol).as("_g"),
-        graft.core.fixedPointLong(v, 4).as("_v"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === gb, 1L).otherwise(0L)).as("_cb"))
-    // banded prefix sums over the 4dp histogram (the binaryAuc device)
-    val cum = graft.core.bandedCumSum(h, expr("_v div 100000"),
-      bandAsc = true, tie = Seq(col("_v").asc),
-      sums = Map("_ca" -> "_fa", "_cb" -> "_fb"))
+    val h = twoGroupHistogram(data, groupCol, valCol, ga, gb)
+    val cum = valueCumSum(h, Map("_ca" -> "_fa", "_cb" -> "_fb"))
     val tot = h.agg(sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     val nn = na + nb
@@ -712,9 +687,7 @@ object GroupTests {
     // whose cumulative count reaches p
     val vh = fp.groupBy(col("_v")).agg(count(lit(1)).as("_ct"))
     val tot0 = vh.agg(sum(col("_ct")).as("_c"))
-    val med2 = graft.core.bandedCumSum(vh, expr("_v div 100000"),
-        bandAsc = true, tie = Seq(col("_v").asc),
-        sums = Map("_ct" -> "_cum"))
+    val med2 = valueCumSum(vh, Map("_ct" -> "_cum"))
       .crossJoin(broadcast(tot0))
       .agg((min(when(col("_cum") >=
           floor((col("_c") + 1) / 2).cast("long"), col("_v"))) +

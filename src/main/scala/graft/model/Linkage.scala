@@ -48,8 +48,7 @@ object Linkage {
     val f = agreeCols.size
     def r6(x: Double): Double = graft.text.TextOps.round6(x)
     def clamp(x: Double): Double = math.min(math.max(x, 1e-6), 1.0 - 1e-6)
-    def fp9(x: Double): Long = (if (x >= 0) math.floor(x * 1e9 + 0.5)
-      else -math.floor(-x * 1e9 + 0.5)).toLong
+    def fp9(x: Double): Long = graft.core.fixedPoint(x, 9).toLong
 
     val hist = pairs
       .groupBy(agreeCols.map(c => col(c).cast("boolean").as(c)): _*)

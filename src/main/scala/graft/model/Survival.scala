@@ -97,7 +97,15 @@ object Survival {
     * (Σd_a − Σe_a)²/Σv with the three Σ-over-times as ordered folds.
     * One row: n_a, n_b, chi2. */
   def logRank(subjects: DataFrame, durationCol: String, eventCol: String,
-      groupCol: String, ga: String, gb: String): DataFrame = {
+      groupCol: String, ga: String, gb: String): DataFrame =
+    weightedLogRank(subjects, durationCol, eventCol, groupCol, ga, gb, lit(1.0))
+
+  /** The log-rank fold with a per-time weight `w` over the risk-set
+    * frame (columns t, n_risk, na_risk, _d, _da): χ² =
+    * (Σ w·(d_a − e_a))² / Σ w²·v, each Σ an ordered fold over times. */
+  private def weightedLogRank(subjects: DataFrame, durationCol: String,
+      eventCol: String, groupCol: String, ga: String, gb: String,
+      w: Column): DataFrame = {
     val e = col(eventCol).cast("boolean")
     val h = subjects.where(col(durationCol).isNotNull && e.isNotNull &&
       (col(groupCol) === ga || col(groupCol) === gb))
@@ -108,25 +116,26 @@ object Survival {
         sum(when(col("_e"), 1L).otherwise(0L)).as("_d"),
         sum(when(col("_a"), 1L).otherwise(0L)).as("_la"),
         count(lit(1)).as("_l"))
-    val w = Window.orderBy(col("t").asc)
+    val tw = Window.orderBy(col("t").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = h.agg(sum(col("_l")).as("_n"), sum(col("_la")).as("_nna"))
     val risk = h.crossJoin(broadcast(tot))
       .withColumn("n_risk",
-        col("_n") - (sum(col("_l")).over(w) - col("_l")))
+        col("_n") - (sum(col("_l")).over(tw) - col("_l")))
       .withColumn("na_risk",
-        col("_nna") - (sum(col("_la")).over(w) - col("_la")))
+        col("_nna") - (sum(col("_la")).over(tw) - col("_la")))
       .where(col("_d") > 0 && col("n_risk") > 1)
     val nD = col("n_risk").cast("double")
     val naD = col("na_risk").cast("double")
     val dD = col("_d").cast("double")
     val folded = risk
-      .withColumn("_ea", dD * naD / nD)
-      .withColumn("_v", dD * (naD / nD) * (lit(1.0) - naD / nD) *
-        (nD - dD) / (nD - 1))
+      .withColumn("_wda", w * col("_da").cast("double"))
+      .withColumn("_wea", w * (dD * naD / nD))
+      .withColumn("_wv", w * w * (dD * (naD / nD) * (lit(1.0) - naD / nD) *
+        (nD - dD) / (nD - 1)))
       .agg(sort_array(collect_list(struct(col("t"),
-        col("_da").cast("double").as("da"), col("_ea").as("ea"),
-        col("_v").as("v")))).as("_arr"))
+        col("_wda").as("da"), col("_wea").as("ea"),
+        col("_wv").as("v")))).as("_arr"))
     def fsum(f: String, as: String) =
       aggregate(col("_arr"), lit(0.0), (acc, x) => acc + x(f)).as(as)
     folded.select(fsum("da", "_sda"), fsum("ea", "_sea"), fsum("v", "_sv"))
@@ -213,48 +222,9 @@ object Survival {
     * (Σ w·(d_a − e_a))² / Σ w²·v. One row: n_a, n_b, chi2. */
   def gehanLogRank(subjects: DataFrame, durationCol: String,
       eventCol: String, groupCol: String, ga: String, gb: String)
-      : DataFrame = {
-    val e = col(eventCol).cast("boolean")
-    val h = subjects.where(col(durationCol).isNotNull && e.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(durationCol).cast("long").as("t"), e.as("_e"),
-        (col(groupCol) === ga).as("_a"))
-      .groupBy(col("t"))
-      .agg(sum(when(col("_e") && col("_a"), 1L).otherwise(0L)).as("_da"),
-        sum(when(col("_e"), 1L).otherwise(0L)).as("_d"),
-        sum(when(col("_a"), 1L).otherwise(0L)).as("_la"),
-        count(lit(1)).as("_l"))
-    val w = Window.orderBy(col("t").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = h.agg(sum(col("_l")).as("_n"), sum(col("_la")).as("_nna"))
-    val risk = h.crossJoin(broadcast(tot))
-      .withColumn("n_risk",
-        col("_n") - (sum(col("_l")).over(w) - col("_l")))
-      .withColumn("na_risk",
-        col("_nna") - (sum(col("_la")).over(w) - col("_la")))
-      .where(col("_d") > 0 && col("n_risk") > 1)
-    val nD = col("n_risk").cast("double")
-    val naD = col("na_risk").cast("double")
-    val dD = col("_d").cast("double")
-    val folded = risk
-      .withColumn("_wda", nD * col("_da").cast("double"))
-      .withColumn("_wea", nD * (dD * naD / nD))
-      .withColumn("_wv", nD * nD * (dD * (naD / nD) * (lit(1.0) - naD / nD) *
-        (nD - dD) / (nD - 1)))
-      .agg(sort_array(collect_list(struct(col("t"),
-        col("_wda").as("da"), col("_wea").as("ea"),
-        col("_wv").as("v")))).as("_arr"))
-    def fsum(f: String, as: String) =
-      aggregate(col("_arr"), lit(0.0), (acc, x) => acc + x(f)).as(as)
-    folded.select(fsum("da", "_sda"), fsum("ea", "_sea"), fsum("v", "_sv"))
-      .crossJoin(broadcast(tot))
-      .withColumn("n_a", col("_nna"))
-      .withColumn("n_b", col("_n") - col("_nna"))
-      .withColumn("chi2",
-        (col("_sda") - col("_sea")) * (col("_sda") - col("_sea")) /
-          col("_sv"))
-      .select("n_a", "n_b", "chi2")
-  }
+      : DataFrame =
+    weightedLogRank(subjects, durationCol, eventCol, groupCol, ga, gb,
+      col("n_risk").cast("double"))
 
   /** Cox proportional-hazards regression (Cox 1972), two covariates,
     * Breslow ties, fixed Newton rounds — THE survival regression, the

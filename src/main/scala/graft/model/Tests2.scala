@@ -1,6 +1,7 @@
 package graft.model
 
 import graft.core.fixedPointLong
+import GroupTests.{midrank2, twoGroupHistogram, twoGroupMidranks, valueCumSum}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,35 +38,25 @@ object Tests2 {
     * p_hat, w_stat, df. */
   def brunnerMunzel(data: DataFrame, groupCol: String, valCol: String,
       ga: String, gb: String): DataFrame = {
-    val v = col(valCol).cast("double")
-    val h = data.where(v.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(groupCol).as("_g"), fp(v).as("_v"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("_g") === gb, 1L).otherwise(0L)).as("cb"))
-    val ct = col("ca") + col("cb")
-    // banded prefix sums over the 4dp histogram (the binaryAuc device)
-    val r = graft.core.bandedCumSum(h.withColumn("_t", ct),
-        expr("_v div 100000"), bandAsc = true, tie = Seq(col("_v").asc),
-        sums = Map("_t" -> "_cs", "ca" -> "_csa", "cb" -> "_csb"))
+    val h = twoGroupHistogram(data, groupCol, valCol, ga, gb)
+    val ct = col("_ca") + col("_cb")
+    val r = valueCumSum(h.withColumn("_t", ct),
+        Map("_t" -> "_cs", "_ca" -> "_csa", "_cb" -> "_csb"))
       // 2× pooled midrank and 2× within-group midranks at each value
-      .withColumn("_r2", lit(2) * (col("_cs") - ct) + ct + 1)
-      .withColumn("_ra2",
-        lit(2) * (col("_csa") - col("ca")) + col("ca") + 1)
-      .withColumn("_rb2",
-        lit(2) * (col("_csb") - col("cb")) + col("cb") + 1)
+      .withColumn("_r2", midrank2(col("_cs"), ct))
+      .withColumn("_ra2", midrank2(col("_csa"), col("_ca")))
+      .withColumn("_rb2", midrank2(col("_csb"), col("_cb")))
       // 2×(pooled − within) midrank gap, exact integers
       .withColumn("_da2", col("_r2") - col("_ra2"))
       .withColumn("_db2", col("_r2") - col("_rb2"))
     val agg = r.agg(
-      sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
-      sum(col("ca") * col("_r2")).as("ra2s"),
-      sum(col("cb") * col("_r2")).as("rb2s"),
-      sum(col("ca") * col("_da2")).as("da1"),
-      sum(dec(col("ca") * col("_da2") * col("_da2"))).as("da2"),
-      sum(col("cb") * col("_db2")).as("db1"),
-      sum(dec(col("cb") * col("_db2") * col("_db2"))).as("db2"))
+      sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"),
+      sum(col("_ca") * col("_r2")).as("ra2s"),
+      sum(col("_cb") * col("_r2")).as("rb2s"),
+      sum(col("_ca") * col("_da2")).as("da1"),
+      sum(dec(col("_ca") * col("_da2") * col("_da2"))).as("da2"),
+      sum(col("_cb") * col("_db2")).as("db1"),
+      sum(dec(col("_cb") * col("_db2") * col("_db2"))).as("db2"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     // m_i = mean pooled midrank of group i; K_i = m_i − (n_i+1)/2
     val ma = col("ra2s").cast("double") / 2.0 / na
@@ -99,14 +90,9 @@ object Tests2 {
     * appears). One row: n_a, n_b, ab_stat, z. */
   def ansariBradley(data: DataFrame, groupCol: String, valCol: String,
       ga: String, gb: String): DataFrame = {
-    val v = col(valCol).cast("double")
-    val h = data.where(v.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(groupCol).as("_g"), fp(v).as("_v"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("ca"),
-        count(lit(1)).as("ct"))
-    val tot = h.agg(sum(col("ct")).as("_n"), sum(col("ca")).as("_na"))
+    val h = twoGroupHistogram(data, groupCol, valCol, ga, gb)
+      .withColumn("_ct", col("_ca") + col("_cb"))
+    val tot = h.agg(sum(col("_ct")).as("_n"), sum(col("_ca")).as("_na"))
     // T(x) = Σ_{r≤x} min(r, M−r) with M = N+1, k = ⌊M/2⌋:
     //   x ≤ k:  x(x+1)/2
     //   x > k:  k(k+1)/2 + (x−k)·M − (x(x+1) − k(k+1))/2
@@ -116,14 +102,11 @@ object Tests2 {
       when(x <= k, floor(x * (x + 1) / 2.0))
         .otherwise(floor(k * (k + 1) / 2.0) + (x - k) * m -
           floor((x * (x + 1) - k * (k + 1)) / 2.0)).cast("long")
-    // banded prefix sum over the 4dp histogram (the binaryAuc device)
-    val r = graft.core.bandedCumSum(h, expr("_v div 100000"),
-        bandAsc = true, tie = Seq(col("_v").asc),
-        sums = Map("ct" -> "_cumct"))
+    val r = valueCumSum(h, Map("_ct" -> "_cumct"))
       .crossJoin(broadcast(tot))
       .withColumn("_m", col("_n") + 1)
       .withColumn("_k", floor((col("_n") + 1) / 2.0).cast("long"))
-      .withColumn("_l", col("_cumct") - col("ct")) // = l−1
+      .withColumn("_l", col("_cumct") - col("_ct")) // = l−1
       .withColumn("_u", col("_cumct"))
       .withColumn("_s",
         tsum(col("_u"), col("_m"), col("_k")) -
@@ -131,11 +114,11 @@ object Tests2 {
     val agg = r.agg(
       max(col("_na")).as("n_a"), max(col("_n") - col("_na")).as("n_b"),
       // AB statistic: Σ ca·s/ct, 6dp-quantized per distinct value
-      sum(fixedPointLong(col("ca").cast("double") * col("_s").cast("double") /
-        col("ct").cast("double"), 6)).as("abfp"),
+      sum(fixedPointLong(col("_ca").cast("double") * col("_s").cast("double") /
+        col("_ct").cast("double"), 6)).as("abfp"),
       sum(col("_s")).as("ssum"), // Σ over observations of a(v), exact
       sum(fixedPointLong(col("_s").cast("double") * col("_s").cast("double") /
-        col("ct").cast("double"), 6)).as("s2fp"))
+        col("_ct").cast("double"), 6)).as("s2fp"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     val nn = na + nb
     val abar = col("ssum").cast("double") / nn
@@ -481,9 +464,7 @@ object Tests2 {
         .groupBy(col("_v")).agg(count(lit(1)).as("_c"))
       val tot = h.agg(sum(col("_c")).as("_n"))
       // banded prefix sum over the 4dp histogram (the binaryAuc device)
-      val cum = graft.core.bandedCumSum(h, expr("_v div 100000"),
-          bandAsc = true, tie = Seq(col("_v").asc),
-          sums = Map("_c" -> "_cum"))
+      val cum = valueCumSum(h, Map("_c" -> "_cum"))
         .crossJoin(broadcast(tot))
         .withColumn("_cb", col("_cum") - col("_c"))
         .withColumn("_g", floor(lit(gamma) * col("_n").cast("double"))
@@ -542,21 +523,8 @@ object Tests2 {
     * n_a, n_b, u_stat, delta. */
   def cliffsDelta(data: DataFrame, groupCol: String, valCol: String,
       ga: String, gb: String): DataFrame = {
-    val v = col(valCol).cast("double")
-    val h = data.where(v.isNotNull &&
-      (col(groupCol) === ga || col(groupCol) === gb))
-      .select(col(groupCol).as("_g"), fp(v).as("_v"))
-      .groupBy(col("_v"))
-      .agg(sum(when(col("_g") === ga, 1L).otherwise(0L)).as("_ca"),
-        count(lit(1)).as("_ct"))
-    // banded prefix sum over the 4dp histogram (the binaryAuc device)
-    val r = graft.core.bandedCumSum(h, expr("_v div 100000"),
-        bandAsc = true, tie = Seq(col("_v").asc),
-        sums = Map("_ct" -> "_cum"))
-      .withColumn("_r2",
-        lit(2) * (col("_cum") - col("_ct")) + col("_ct") + 1)
-    val agg = r.agg(sum(col("_ca")).as("n_a"),
-      (sum(col("_ct")) - sum(col("_ca"))).as("n_b"),
+    val r = twoGroupMidranks(data, groupCol, valCol, ga, gb)
+    val agg = r.agg(sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"),
       sum(col("_ca") * col("_r2")).as("_ra2"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     agg

@@ -24,9 +24,7 @@ import org.apache.spark.sql.functions._
   * ≤ 16) and collapses in one hash aggregate. */
 object Forecast2 {
 
-  private def fpL(x: Double): Long =
-    (if (x >= 0) math.floor(x * 1e4 + 0.5)
-     else -math.floor(-x * 1e4 + 0.5)).toLong
+  private def fpL(x: Double): Long = graft.core.fixedPoint(x, 4).toLong
 
   /** Theta(2) one-step-ahead scorer: pred_t = SES_{t−1} + b_{t−1}/2
     * where SES is a ½-smoothed level and b the running OLS slope over

@@ -915,9 +915,8 @@ object SeqOps {
         // half-away-from-zero rule as core.roundLikeDuck) and sum
         // integers — associative, so any combine order gives the same
         // result; sessions are bounded so no overflow at realistic sizes.
-        (sum(when(col(valCol) >= 0, floor(col(valCol) * 1e4 + 0.5))
-            .otherwise(-floor(-col(valCol) * 1e4 + 0.5)).cast("long"))
-          .cast("double") / 1e4).as("sum_value"))
+        (sum(fixedPointLong(col(valCol), 4)).cast("double") / 1e4)
+          .as("sum_value"))
   }
 
   /** Ordered-funnel analysis (engine addition, sessionize's sibling): for

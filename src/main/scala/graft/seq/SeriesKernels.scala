@@ -527,9 +527,7 @@ object SeriesKernels {
       val n = pts.length
       val scores = new Array[Double](n)
       if (n > 2 * period) {
-        def fp(x: Double): Long =
-          (if (x >= 0) math.floor(x * 1e4 + 0.5)
-           else -math.floor(-x * 1e4 + 0.5)).toLong
+        def fp(x: Double): Long = graft.core.fixedPoint(x, 4).toLong
         var s1 = 0L; var s2 = 0L
         var i = 0
         while (i < period) { s1 += fp(pts(i).value); i += 1 }

@@ -63,8 +63,7 @@ object StateSpace {
   private def fixedSums(pts: Array[SPoint]): (Long, Long) = {
     var s = 0L; var q2 = 0L
     pts.foreach { p =>
-      val f = (if (p.value >= 0) math.floor(p.value * 1e4 + 0.5)
-        else -math.floor(-p.value * 1e4 + 0.5)).toLong
+      val f = graft.core.fixedPoint(p.value, 4).toLong
       s += f; q2 += f * f
     }
     (s, q2)

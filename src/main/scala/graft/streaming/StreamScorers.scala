@@ -196,9 +196,8 @@ object StreamScorers {
         // operator (SeqOps.sessionize): a plain double sum is
         // combine-order-nondeterministic, which a hash-gated oracle
         // cannot tolerate at the rounding boundary
-        (sum(when(col(valCol) >= 0, floor(col(valCol) * 1e4 + 0.5))
-            .otherwise(-floor(-col(valCol) * 1e4 + 0.5)).cast("long"))
-          .cast("double") / 1e4).as("sum_value"))
+        (sum(fixedPointLong(col(valCol), 4)).cast("double") / 1e4)
+          .as("sum_value"))
 
   /** Streaming exact deduplication for ingest pipelines: drop repeats of
     * `idCols` (e.g. a content hash) arriving within the watermark horizon —
@@ -556,8 +555,7 @@ object StreamScorers {
     // the oracle's rounding arithmetic (floor of the float product),
     // NOT BigDecimal HALF_UP — they disagree on half-boundary floats
     def r6(x: Double): Double = graft.text.TextOps.round6(x)
-    def fp6(x: Double): Long = (if (x >= 0) math.floor(x * 1e6 + 0.5)
-      else -math.floor(-x * 1e6 + 0.5)).toLong
+    def fp6(x: Double): Long = fixedPoint(x, 6).toLong
     perEntity(events)(_.entity, _.seq,
         _ => CusumSt(Nil, frozen = false, 0.0, 0.0, 0L, 0L, 0L)) { entity =>
       def step(st: CusumSt, seq: Long, v: Double): (CusumSt, CusumOut) = {
@@ -618,8 +616,7 @@ object StreamScorers {
         _ => PhSt(0L, 0L, 0L, 0L, Long.MaxValue, Long.MinValue)) {
       entity => (st, e) =>
         val n = st.n + 1
-        val v6 = (if (e.value >= 0) math.floor(e.value * 1e6 + 0.5)
-          else -math.floor(-e.value * 1e6 + 0.5)).toLong
+        val v6 = fixedPoint(e.value, 6).toLong
         val sum6 = st.sum6 + v6
         val mean6 = if (sum6 >= 0) (2 * sum6 + n) / (2 * n)
           else -((2 * -sum6 + n) / (2 * n))
@@ -1005,8 +1002,7 @@ object StreamScorers {
                 val cs = (counts.getOrElse(bi, 0L) + 0.5) / (n + half)
                 val rs = (r.counts(bi) + 0.5) / (r.total + half)
                 val term = (cs - rs) * math.log(cs / rs)
-                t6 += (if (term >= 0) math.floor(term * 1e6 + 0.5).toLong
-                       else -math.floor(-term * 1e6 + 0.5).toLong)
+                t6 += fixedPoint(term, 6).toLong
                 bi += 1
               }
               val psi = t6.toDouble / 1e6

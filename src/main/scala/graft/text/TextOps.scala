@@ -37,8 +37,7 @@ object TextOps {
   /** Driver-side 6dp half-away-from-zero round — the scalar twin of
     * core.roundLikeDuck (DuckDB's round() arithmetic), for model
     * constants that must replay exactly in oracle SQL. */
-  private[graft] def round6(x: Double): Double =
-    (if (x >= 0) math.floor(x * 1e6 + 0.5) else -math.floor(-x * 1e6 + 0.5)) / 1e6
+  private[graft] def round6(x: Double): Double = graft.core.fixedPoint(x, 6) / 1e6
 
   /** 56-bit integer hash from the md5 hex prefix — exact cross-engine.
     * One native codegen'd expression (graft.expr.Hash56: first 7 digest
@@ -2718,10 +2717,7 @@ object TextOps {
           val s = BigDecimal(r.getAs[java.math.BigDecimal](s"g$j")).toDouble
           // same op sequence as the SQL: ::DOUBLE, /n, /1e9, *lr, +w,
           // then the 6dp re-grain
-          val upd = wj + lr * (s / nTot / 1e9)
-          val q = if (upd >= 0) math.floor(upd * 1e6 + 0.5)
-                  else -math.floor(-upd * 1e6 + 0.5)
-          q / 1e6
+          graft.core.fixedPoint(wj + lr * (s / nTot / 1e9), 6) / 1e6
         }
       }
       val acc = cached.agg(

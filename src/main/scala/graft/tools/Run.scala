@@ -2,7 +2,10 @@ package graft.tools
 
 import graft.SparkEntry
 import java.io.File
+import scala.collection.mutable
+import scala.util.matching.Regex
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StructField}
 
@@ -10,7 +13,7 @@ import org.apache.spark.sql.types.{LongType, StructField}
   *
   * {{{
   * runMain graft.tools.Run time <sfDir> <reps> [q...]    build + count() each query, reps times
-  * runMain graft.tools.Run explain <sfDir> [q...]        formatted physical plans
+  * runMain graft.tools.Run explain <sfDir> [q...]        formatted physical plans, normalized
   * runMain graft.tools.Run plans <sfDir>                 write PLANS.md (static plan audit)
   * runMain graft.tools.Run windows <sfDir> [q...]        unpartitioned-window audit
   * runMain graft.tools.Run scale <sfDir> <n> <reps> [q...]  `time` on an n× copy of sfDir
@@ -79,12 +82,35 @@ object Run {
     }
   }
 
+  /** Per query: its formatted physical plan, [[normalized]] so two
+    * builds of one query, in one session or on two commits, print the
+    * same text. */
   def explain(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
     names.foreach { n =>
       println(s"\n===================== $n =====================")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      try println(normalized(SparkEntry.queries(n)(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted"))))
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
     }
+
+  /** `plan` with its session-global numbering taken out: expression ids
+    * (`#n`), RDD ids (`RDD[n]`), exchange plan ids (`plan_id=n`) and
+    * lambda-variable suffixes (`lambda x_n`) renumbered in order of first use; lambda class
+    * names, object hashes and source line numbers dropped. */
+  def normalized(plan: String): String = {
+    def renumber(s: String, re: Regex): String = {
+      val ids = mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
+    val dropped = Seq(
+      """\$\$Lambda[^@\s]*@[0-9a-f]+""".r -> "\\$\\$Lambda",
+      """(?<=[\w;$\[])@[0-9a-f]{1,8}\b""".r -> "@",
+      """(\w\.scala):\d+""".r -> "$1")
+      .foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+    Seq("""(#)(\d+)""".r, """(RDD\[)(\d+)(?=\])""".r, """(plan_id=)(\d+)""".r,
+      """(lambda \w+?_)(\d+)\b""".r).foldLeft(dropped)(renumber)
+  }
 
   /** Plan-shape audit over every query, written to PLANS.md: one markdown
     * row per query with its exchange/join/codegen counts and scale flags.

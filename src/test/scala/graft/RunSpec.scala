@@ -59,6 +59,17 @@ class RunSpec extends SparkSpec {
     } finally Verify.deleteRecursively(root)
   }
 
+  test("explain: one query built twice in one session prints the same text") {
+    def explained(): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(Run.explain(spark, sfDir, Seq("q153_source_overlap")))
+      out.toString("UTF-8")
+    }
+    val first = explained()
+    assert(first.contains("RDD[1]") && first.contains("#1") && !first.contains("failed"))
+    assert(explained() == first)
+  }
+
   test("plans: the q05_zscore row is its PLANS.md line") {
     // the audit reads static plans: AQE off, on a session of its own
     val s = spark.newSession()
