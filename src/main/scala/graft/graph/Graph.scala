@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,15 +27,66 @@ private[graph] class MaxAccumulator
   * and documents by link structure (the Common Crawl host-level ranking
   * idea) before sampling; this is that primitive, Spark-first.
   *
-  * Design: Pregel-shaped iteration expressed as DataFrame joins — rank
-  * state is node-sized, messages are edge-sized, each iteration is one
-  * equi-join (ranks × out-edges) plus one hash aggregate (sum by dst).
-  * At 100 TB the edge table dominates: it is joined on `src` every
-  * iteration, so it is repartitioned by src ONCE and persisted — every
-  * subsequent iteration reuses that layout and only the node-sized rank
-  * frame moves.
+  * Design: Pregel-shaped iteration expressed as DataFrame joins — state
+  * is node-sized, messages are edge-sized, each round is one equi-join
+  * (state × edges) plus one hash aggregate. Every operator reads its
+  * edges through one private graph value, [[G]]: the distinct
+  * string-cast edge set, its node set, the md5-sampled sources, and the
+  * one edge cache ([[G.keyed]]: hash-partitioned on the join key once
+  * and checkpointed, so only node-sized state moves per round;
+  * [[pageRankWeighted]] keeps a lazy persist instead, for the reason
+  * given there). Every iterative operator runs one round loop,
+  * [[iterate]], with one of two lineage policies fixed per operator:
+  * lazy rounds that nest into the consumer's job (each round reads its
+  * state once), or a checkpoint leaf after each round (a round reads its
+  * state more than once).
   */
 object Graph {
+
+  /** A graph as one edge frame `(src, dst, …)`. `both`: every edge is
+    * present in both directions, so `src` alone names every node. */
+  private final case class G(e: DataFrame, both: Boolean = false) {
+    /** Every endpoint once, as `node`. */
+    def nodes: DataFrame =
+      (if (both) e.select(col("src").as("node"))
+       else e.select(col("src").as("node")).union(e.select(col("dst").as("node"))))
+        .distinct()
+
+    /** The one edge cache: `e` hash-partitioned on `key`, then
+      * checkpointed, so every round's join reuses that layout. */
+    def keyed(key: String): G = copy(e = leaf(e.repartition(col(key))))
+
+    /** The `n` md5-smallest nodes, as `source` — the sampled BFS roots. */
+    def sources(n: Int): DataFrame =
+      nodes.orderBy(md5(col("node")), col("node")).limit(n)
+        .select(col("node").as("source"))
+  }
+
+  /** `edges` as string-cast `(src, dst)` rows, plus `extra` columns —
+    * where every edge build starts. */
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String,
+      extra: Column*): DataFrame =
+    edges.select(Seq(col(srcCol).cast("string").as("src"),
+      col(dstCol).cast("string").as("dst")) ++ extra: _*)
+
+  /** The directed edge set: duplicates collapsed. */
+  private def directed(edges: DataFrame, srcCol: String, dstCol: String): G =
+    G(endpoints(edges, srcCol, dstCol).distinct())
+
+  /** An eager, GC-cleaned checkpoint leaf: `df` is computed once and
+    * later plans start from its rows. */
+  private def leaf(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** The round loop: `init` and the `n` states `step` makes from it
+    * (given the round number), in order. `cut` is each operator's one
+    * lineage policy: false nests the rounds lazily into the consumer's
+    * job; true makes `init` and every state a [[leaf]], so a round that
+    * reads its state more than once plans against a constant-size tree. */
+  private def iterate(init: DataFrame, n: Int, cut: Boolean)(
+      step: (DataFrame, Int) => DataFrame): Seq[DataFrame] = {
+    def keep(df: DataFrame) = if (cut) leaf(df) else df
+    (1 to n).scanLeft(keep(init))((s, i) => keep(step(s, i)))
+  }
 
   /** PageRank with damping d = 0.85 over integer fixed-point ranks.
     *
@@ -54,30 +105,15 @@ object Graph {
     * Scale: per iteration, one shuffle join (node-sized ranks into the
     * src-partitioned edge cache) + one aggregate (map-side combined,
     * dst-keyed). Rank lineage is node-sized all the way; nothing ever
-    * collects. `iters` is a user constant (default 10).
+    * collects. `iters` is a user constant (default 10). An empty edge
+    * set ranks no nodes.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, scale: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val ew = e.join(deg, "src").repartition(col("src")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint(true)
-    val n = nodes.count() // scalar action: N feeds the integer constants
-    val init = scale / n
-    val teleport = (15L * scale) / (100L * n)
-    var ranks = nodes.withColumn("r", lit(init))
-    (1 to iters).foreach { _ =>
-      val msgs = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst").as("node"), expr("r div od").as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
-      ranks = nodes.join(msgs, Seq("node"), "left")
-        .withColumn("r", lit(teleport) + expr("(85 * coalesce(s, 0)) div 100"))
-        .select("node", "r")
-    }
-    ranks.select(col("node"), col("r").as("rank12"),
-      (col("r").cast("double") / scale).as("rank"))
+    val g = unitWeighted(edges, srcCol, dstCol)
+    val nodes = leaf(g.nodes)
+    // every node a seed: the seed constants at |seeds| = N
+    rankLoop(g, nodes.withColumn("_seed", lit(true)), nodes.count(), iters, scale)
   }
 
   /** Personalized PageRank: teleport mass goes ONLY to the `seeds` set
@@ -94,34 +130,56 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, iters: Int = 10,
       scale: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val ew = e.join(deg, "src").repartition(col("src")).localCheckpoint(true)
-    val seedDf = seeds.select(col(seeds.columns.head).cast("string").as("node"))
-      .distinct().localCheckpoint(true)
+    val g = unitWeighted(edges, srcCol, dstCol)
+    val seedDf = leaf(seeds.select(col(seeds.columns.head).cast("string").as("node"))
+      .distinct())
     val nSeeds = seedDf.count()
     require(nSeeds > 0, "personalizedPageRank needs a non-empty seed set")
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    rankLoop(g, leaf(g.nodes
       .join(broadcast(seedDf.withColumn("_seed", lit(true))), Seq("node"), "left")
-      .withColumn("_seed", coalesce(col("_seed"), lit(false)))
-      .localCheckpoint(true)
-    val seedInit = scale / nSeeds
-    val teleport = (15L * scale) / (100L * nSeeds)
-    var ranks = nodes.withColumn("r",
-      when(col("_seed"), lit(seedInit)).otherwise(lit(0L)))
-      .select("node", "r")
-    (1 to iters).foreach { _ =>
-      val msgs = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst").as("node"), expr("r div od").as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
-      ranks = nodes.join(msgs, Seq("node"), "left")
-        .withColumn("r",
-          when(col("_seed"), lit(teleport)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(s, 0)) div 100"))
-        .select("node", "r")
-    }
+      .withColumn("_seed", coalesce(col("_seed"), lit(false)))),
+      nSeeds, iters, scale)
+  }
+
+  /** `e (src, dst, w)` with each edge's source weight total `sw` — the
+    * rank loop's edge frame. */
+  private def outWeighted(e: DataFrame): G =
+    G(e.join(e.groupBy("src").agg(sum("w").as("sw")), "src"))
+
+  /** The directed edge set at w = 1, over the src-keyed edge cache. */
+  private def unitWeighted(edges: DataFrame, srcCol: String,
+      dstCol: String): G =
+    outWeighted(directed(edges, srcCol, dstCol).e.withColumn("w", lit(1L)))
+      .keyed("src")
+
+  /** The one integer rank loop of [[pageRank]], [[personalizedPageRank]]
+    * and [[pageRankWeighted]] over src-keyed [[outWeighted]] edges: each
+    * contribution is (r·w) div sw. pageRank is this loop with w = 1
+    * ((r·1) div outdeg = r div outdeg) and every node a seed (scale/N
+    * and (15·scale)/(100·N) are the seed constants at |seeds| = N), so
+    * the three replay one another's longs. `nodes` is `(node, _seed)`.
+    *
+    * Lazy rounds: each reads its rank state once, so the `iters` rounds
+    * nest into the consumer's one job over the edge cache and `nodes`.
+    * No seed (an empty graph) gives no rows. */
+  private def rankLoop(g: G, nodes: DataFrame, nSeeds: Long, iters: Int,
+      scale: Long): DataFrame = {
+    val ranks =
+      if (nSeeds == 0) nodes.select(col("node"), lit(0L).as("r"))
+      else {
+        val teleport = (15L * scale) / (100L * nSeeds)
+        iterate(nodes.select(col("node"),
+          when(col("_seed"), lit(scale / nSeeds)).otherwise(lit(0L)).as("r")),
+          iters, cut = false) { (ranks, _) =>
+          val msgs = g.e.join(ranks, g.e("src") === ranks("node"))
+            .select(col("dst").as("node"), expr("(r * w) div sw").as("c"))
+            .groupBy("node").agg(sum("c").as("s"))
+          nodes.join(msgs, Seq("node"), "left")
+            .select(col("node"),
+              (when(col("_seed"), lit(teleport)).otherwise(lit(0L)) +
+                expr("(85 * coalesce(s, 0)) div 100")).as("r"))
+        }.last
+      }
     ranks.select(col("node"), col("r").as("rank12"),
       (col("r").cast("double") / scale).as("rank"))
   }
@@ -225,8 +283,7 @@ object Graph {
     * a corpus-graph health check in its own right. One aggregate per
     * direction over the edge table, full-outer-joined node-sized. */
   def degrees(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
+    val e = directed(edges, srcCol, dstCol).e
     val out = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outDeg"))
     val in = e.groupBy(col("dst").as("node")).agg(count(lit(1)).as("inDeg"))
     out.join(in, Seq("node"), "full_outer")
@@ -239,11 +296,9 @@ object Graph {
     * collapsed, each surviving {a,b} once as (least, greatest). */
   private def undirected(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
-    edges.select(col(srcCol).cast("string").as("a"),
-      col(dstCol).cast("string").as("b"))
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b")).distinct()
+    endpoints(edges, srcCol, dstCol).where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b")).distinct()
 
   /** Per-node degree `d` over an [[undirected]] edge set. */
   private def undirectedDegrees(und: DataFrame): DataFrame =
@@ -255,10 +310,10 @@ object Graph {
     * (a→b) and (b→a) — the layout the undirected ops below share so a
     * node's full neighborhood is reachable from one src-keyed join. */
   private def undirectedBoth(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
+      dstCol: String): G = {
     val und = undirected(edges, srcCol, dstCol)
-    und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
+    G(und.select(col("a").as("src"), col("b").as("dst"))
+      .union(und.select(col("b").as("src"), col("a").as("dst"))), both = true)
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) — the cheap
@@ -271,17 +326,17 @@ object Graph {
     * SQL stages and hash-compares labels exactly.
     *
     * Scale: per round one equi-join of the node-sized label frame into
-    * the src-partitioned persisted edge cache, then two hash aggregates
-    * ((node,label) counts → per-node arg-max via min-struct). Label
-    * state never exceeds node size; the edge cache never re-shuffles. */
+    * the src-keyed edge cache, then two hash aggregates ((node,label)
+    * counts → per-node arg-max via min-struct). Label state never
+    * exceeds node size; the edge cache never re-shuffles. Lazy rounds:
+    * each reads its labels once, so they nest into the consumer's job. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3): DataFrame = {
-    val e = undirectedBoth(edges, srcCol, dstCol)
-      .repartition(col("src")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node")).distinct().localCheckpoint(true)
-    var labels = nodes.withColumn("label", col("node"))
-    (1 to iters).foreach { _ =>
-      val best = e.join(labels, e("src") === labels("node"))
+    val g = undirectedBoth(edges, srcCol, dstCol).keyed("src")
+    val nodes = leaf(g.nodes)
+    iterate(nodes.withColumn("label", col("node")), iters, cut = false) {
+        (labels, _) =>
+      val best = g.e.join(labels, g.e("src") === labels("node"))
         .select(col("dst").as("node"), col("label"))
         .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
         // arg-max with min-label tie-break: lexicographic min over
@@ -290,10 +345,9 @@ object Graph {
         .groupBy("node")
         .agg(min(struct((-col("cnt")).as("c"), col("label").as("l"))).as("m"))
         .select(col("node"), col("m.l").as("label"))
-      labels = nodes.join(best, Seq("node"), "left")
+      nodes.join(best, Seq("node"), "left")
         .withColumn("label", coalesce(col("label"), col("node")))
-    }
-    labels
+    }.last
   }
 
   /** Modularity of a node labeling over the undirected graph:
@@ -305,27 +359,21 @@ object Graph {
     * the oracle replays it bit-for-bit. One row out. */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       labels: DataFrame): DataFrame = {
-    // eager GC-cleaned materialization (edge-sized); feeds the
-    // intra-community join, the degree roll-up AND the edge count —
-    // and replaces an unpersist-less persist (advice-r13 leak class)
-    val und = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    // edge-sized leaf: feeds the intra-community join, the degree
+    // roll-up AND the edge count
+    val und = leaf(undirected(edges, srcCol, dstCol))
     // labels may be an expensive lineage (the LPA chain): it feeds both
     // endpoint joins plus the degree roll-up — materialize once
-    val lab = labels.select(col("node"), col("label")).localCheckpoint(true)
+    val lab = leaf(labels.select(col("node"), col("label")))
     val la = lab.withColumnRenamed("node", "a").withColumnRenamed("label", "la")
     val lb = lab.withColumnRenamed("node", "b").withColumnRenamed("label", "lb")
     val perC = und.join(la, "a").join(lb, "b")
       .withColumn("label", col("la"))
       .groupBy("label")
       .agg(sum(when(col("la") === col("lb"), 1L).otherwise(0L)).as("ec"))
-    // degrees derive from the already-materialized `und` (identical to
-    // undirectedBoth(edges): that helper IS distinct-least/greatest +
-    // both directions), not a third scan of the raw edge lineage (r14,
-    // guide §2.4 — modularity previously re-ran the upstream edge
-    // builder once for the intra-community join and once for degrees)
-    val degC = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
+    // degrees derive from the already-materialized `und`, not a second
+    // scan of the raw edge lineage
+    val degC = undirectedDegrees(und)
       .join(lab, "node").groupBy("label").agg(sum("d").as("dc"))
     val m = und.agg(count(lit(1)).as("m"))
     // Q = (Σ e_c)/m − (Σ d_c²)/(4m²): both numerator sums are exact
@@ -353,59 +401,39 @@ object Graph {
     * (v·10⁶ div max), so every engine replays identical longs — the
     * oracle chains 2·iters SQL stages and hash-compares exactly.
     *
-    * Scale: per half-step one node-sized join into the persisted edge
-    * cache + one hash aggregate, materialized by a single fold action
-    * that doubles as the scalar renorm divisor (one eager job per
-    * half-step; materializing keeps the iterative lineage linear — an
-    * in-plan 1-row crossJoin would re-reference each step twice and
-    * grow the lazy plan ~4× per iteration). */
+    * Scale: per half-step one node-sized join into an edge cache + one
+    * hash aggregate, materialized by a single fold action that doubles
+    * as the scalar renorm divisor (one eager job per half-step;
+    * materializing keeps the iterative lineage linear — an in-plan 1-row
+    * crossJoin would re-reference each step twice and grow the lazy plan
+    * ~4× per iteration). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, scale: Long = 1000000L): DataFrame = {
     // TWO edge caches, one per join orientation: auth half-steps join on
-    // src, hub half-steps on dst — a single src-partitioned cache forced
-    // a fresh edge-sized exchange on every hub step (5× the largest
-    // frame in the loop); with both orientations cached the edge side is
-    // stationary and each half-step exchanges only node-sized messages.
-    val eRaw = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"))
-      .where(col("src") =!= col("dst")).distinct().persist()
-    // scale-adaptive edge partitioning (r13, guide §2): each half-step's
-    // join inherits the edge cache's partition count, so on a small
-    // graph 32-partition caches made every half-step a ~100-task
-    // scheduling exercise (0.8 s/half-step at 100k edges). ~64k
-    // edges/partition, capped at the session parallelism — the row
-    // threshold decides, not a host constant.
-    val eParts = math.max(1L, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism.toLong,
-      (eRaw.count() + 65535L) / 65536L)).toInt
-    val eBySrc = eRaw.repartition(eParts, col("src")).persist()
-    val eByDst = eRaw.repartition(eParts, col("dst")).persist()
-    val nodes = eBySrc.select(col("src").as("node"))
-      .union(eBySrc.select(col("dst").as("node"))).distinct().localCheckpoint(true)
-    var hub = nodes.withColumn("h", lit(scale))
-    var auth = nodes.withColumn("a", lit(0L))
+    // src, hub half-steps on dst — a single src-keyed cache forced a
+    // fresh edge-sized exchange on every hub step; with both orientations
+    // cached the edge side is stationary and each half-step exchanges
+    // only node-sized messages.
+    val bySrc = G(directed(edges, srcCol, dstCol).e
+      .where(col("src") =!= col("dst"))).keyed("src")
+    val byDst = bySrc.keyed("dst")
+    val nodes = leaf(bySrc.nodes)
     // ONE eager job per half-step (r7 verdict: the 20-job variant was
-    // scheduler-bound at 6 s): materialize the node-sized (node, s)
-    // state as a persisted RDD AND compute the renorm divisor in the
-    // SAME pass (fold is empty-safe where agg(max).collect() NPE'd on
-    // an empty edge set — advice r7). Rebuilding a DataFrame from the
-    // materialized RDD gives a LEAF plan, the same lineage cut
-    // localCheckpoint provided: persist-only variants grow Catalyst
-    // re-analysis superlinearly with iteration depth (measured 37 s at
-    // sf0.1; leaf form ~0.3 s/half-step). Intermediate states are
-    // unpersisted as soon as the next half-step has materialized; the
-    // final hub/auth stay cached for the caller's action and are
-    // reclaimed by the ContextCleaner when the result is dropped.
+    // scheduler-bound at 6 s): the node-sized (node, s) state becomes a
+    // checkpoint leaf AND the renorm divisor is computed in the SAME
+    // pass. The leaf keeps every half-step's plan constant-size:
+    // persist-only variants grow Catalyst re-analysis superlinearly with
+    // iteration depth (measured 37 s at sf0.1; leaf form ~0.3 s/half-step).
     // Inside the loop the state is message-SPARSE: a node that received
     // no messages would carry s = 0, and a zero score contributes nothing
     // to the next half-step's sums and can never be the renorm max — so
     // the zero rows are dropped from the iteration entirely (probe:
     // the nodes left-join they required was ~40% of each half-step's
-    // checkpoint job) and re-filled once at the end for the output
+    // materialization job) and re-filled once at the end for the output
     // contract. Identical longs either way: 0·scale div mx = 0.
     def halfStep(e: DataFrame, state: DataFrame, valCol: String,
         joinOn: String, outKey: String, outCol: String): DataFrame = {
-      // the renorm divisor rides the SAME eager job as the checkpoint: a
+      // the renorm divisor rides the SAME eager job as the leaf: a
       // max-accumulator behind an always-true filter observes every sum
       // during materialization (max is idempotent, so task retries are
       // harmless), replacing the per-half-step agg(max).collect() job —
@@ -415,10 +443,9 @@ object Graph {
       val acc = new MaxAccumulator
       state.sparkSession.sparkContext.register(acc, s"hitsMax_$outCol")
       val see = udf((s: Long) => { acc.add(s); true }).asNondeterministic()
-      val raw = e.join(state, e(joinOn) === state("node"))
+      val raw = leaf(e.join(state, e(joinOn) === state("node"))
         .groupBy(col(outKey).as("node")).agg(sum(valCol).as("s"))
-        .filter(see(col("s")))
-        .localCheckpoint(true)
+        .filter(see(col("s"))))
       val mx = math.max(1L, acc.value)
       // divisor as a broadcast column, not a literal (core.paramRow
       // discipline): a per-step literal made every half-step's generated
@@ -427,17 +454,12 @@ object Graph {
           state.sparkSession, Seq("_mx" -> mx))))
         .select(col("node"), expr(s"(s * $scale) div _mx").as(outCol))
     }
-    (1 to iters).foreach { _ =>
-      auth = halfStep(eBySrc, hub, "h", "src", "dst", "a")
-      hub = halfStep(eByDst, auth, "a", "dst", "src", "h")
+    val (hub, auth) = (1 to iters).foldLeft(
+        (nodes.withColumn("h", lit(scale)), nodes.withColumn("a", lit(0L)))) {
+      case ((hub, _), _) =>
+        val auth = halfStep(bySrc.e, hub, "h", "src", "dst", "a")
+        (halfStep(byDst.e, auth, "a", "dst", "src", "h"), auth)
     }
-    // hub/auth are leaves over their own checkpointed RDDs; after the
-    // final zero-fill join below is planned, the edge caches are no
-    // longer needed (nodes still backs the lazy output frame — it is
-    // node-sized and reclaimed by the ContextCleaner with the result).
-    eRaw.unpersist(false)
-    eBySrc.unpersist(false)
-    eByDst.unpersist(false)
     nodes.join(hub, Seq("node"), "left").join(auth, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("h"), lit(0L)).as("hub6"),
@@ -456,43 +478,34 @@ object Graph {
     * oracle replay) deterministic with no data-dependent loop.
     *
     * Scale: per round one src-keyed join of the node-sized alive set
-    * into the persisted edge cache (both-direction layout, so one join
-    * covers the neighborhood) + a semi-join filter on dst + one count
-    * aggregate. Alive-set lineage is node-sized; rounds is a user
-    * constant. */
+    * into the edge cache (both-direction layout, so one join covers the
+    * neighborhood) + a semi-join filter on dst + one count aggregate.
+    * Each round is cut to a leaf: it reads the previous state three
+    * times (carry + both endpoint filters). `rounds` is a user constant. */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int = 3): DataFrame = {
-    val e = undirectedBoth(edges, srcCol, dstCol)
-      .repartition(col("src")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node")).distinct().localCheckpoint(true)
-    var state = nodes.withColumn("peel_round", lit(-1L))
-    (1 to rounds).foreach { i =>
+    val g = undirectedBoth(edges, srcCol, dstCol).keyed("src")
+    // per-node degree `d` within the state's alive set
+    def aliveDegree(state: DataFrame): DataFrame = {
       val alive = state.where(col("peel_round") === -1L).select("node")
-      val deg = e.join(alive.withColumnRenamed("node", "src"), "src")
+      g.e.join(alive.withColumnRenamed("node", "src"), "src")
         .join(alive.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      state = state.join(deg, Seq("node"), "left")
+    }
+    val state = iterate(g.nodes.withColumn("peel_round", lit(-1L)), rounds,
+        cut = true) { (state, i) =>
+      state.join(aliveDegree(state), Seq("node"), "left")
         .withColumn("peel_round",
           when(col("peel_round") =!= -1L, col("peel_round"))
             .when(coalesce(col("d"), lit(0L)) < k, lit(i.toLong))
             .otherwise(lit(-1L)))
         .select("node", "peel_round")
-        // each round reads the previous state three times (carry + both
-        // endpoint filters): checkpoint to a LogicalRDD leaf so the
-        // logical tree stays constant-size across rounds (the
-        // ccLargeSmallStar / hits discipline)
-        .localCheckpoint(true)
-    }
-    val aliveFinal = state.where(col("peel_round") === -1L).select("node")
-    val coreDeg = e
-      .join(aliveFinal.withColumnRenamed("node", "src"), "src")
-      .join(aliveFinal.withColumnRenamed("node", "dst"), "dst")
-      .groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-    state.join(coreDeg, Seq("node"), "left")
-      .withColumn("core_deg",
-        when(col("peel_round") === -1L, coalesce(col("core_deg"), lit(0L)))
-          .otherwise(lit(0L)))
-      .withColumn("alive", col("peel_round") === -1L)
+    }.last
+    state.join(aliveDegree(state), Seq("node"), "left")
+      .select(col("node"), col("peel_round"),
+        when(col("peel_round") === -1L, coalesce(col("d"), lit(0L)))
+          .otherwise(lit(0L)).as("core_deg"),
+        (col("peel_round") === -1L).as("alive"))
   }
 
   /** Link prediction over the undirected graph: for every two-hop pair
@@ -514,7 +527,7 @@ object Graph {
     * anti-join against the edge set removes existing edges. */
   def linkPredict(edges: DataFrame, srcCol: String, dstCol: String,
       maxDeg: Int = 10000): DataFrame = {
-    val e = undirectedBoth(edges, srcCol, dstCol).localCheckpoint(true)
+    val e = leaf(undirectedBoth(edges, srcCol, dstCol).e)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     val mid = e.join(deg.withColumnRenamed("node", "src"), "src")
       .where(col("d") <= maxDeg)
@@ -551,9 +564,8 @@ object Graph {
     * lineage truncated per round; output node-sized. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 20): DataFrame = {
-    val und = edges.select(col(srcCol).cast("string").as("a"),
-      col(dstCol).cast("string").as("b"))
-      .where(col("a") =!= col("b"))
+    val und = endpoints(edges, srcCol, dstCol).where(col("src") =!= col("dst"))
+      .select(col("src").as("a"), col("dst").as("b"))
     graft.text.TextOps.ccLargeSmallStar(und, maxIter)
       .select(col("id").as("node"), col("cluster").as("component"))
   }
@@ -570,13 +582,12 @@ object Graph {
     * carries no signal). Exact integer counts. */
   def project(edges: DataFrame, srcCol: String, dstCol: String,
       maxDeg: Int = 10000): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("u"),
-      col(dstCol).cast("string").as("i")).distinct()
-    val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
-    val capped = e.join(deg, "u").where(col("d") <= maxDeg)
+    val e = directed(edges, srcCol, dstCol).e
+    val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
+    val capped = e.join(deg, "src").where(col("d") <= maxDeg)
     capped.as("x").join(capped.as("y"),
-        col("x.u") === col("y.u") && col("x.i") < col("y.i"))
-      .groupBy(col("x.i").as("a"), col("y.i").as("b"))
+        col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
+      .groupBy(col("x.dst").as("a"), col("y.dst").as("b"))
       .agg(count(lit(1)).as("cooc"))
   }
 
@@ -587,42 +598,24 @@ object Graph {
     * as rank·weight stays under 2⁶³ (scale 10¹² leaves ~9·10⁶ of weight
     * headroom per edge — rescale weights if a corpus exceeds it).
     *
-    * Scale: identical shape to [[pageRank]] — the weighted edge cache is
-    * src-partitioned and persisted once, rank state is node-sized. */
+    * Scale: [[pageRank]]'s rank loop. An edge set with no positive
+    * weight ranks no nodes. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, iters: Int = 10,
       scale: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(weightCol).cast("long").as("w"))
+    val e = endpoints(edges, srcCol, dstCol, col(weightCol).cast("long").as("w"))
       .where(col("w") > 0)
       .groupBy("src", "dst").agg(sum("w").as("w"))
-    val sw = e.groupBy("src").agg(sum("w").as("sw"))
-    // INTENTIONAL retained caches (r14 measured decision; the advice-r13
-    // documentation option): persists, not checkpoint leaves — the
-    // InMemoryRelation statistics keep the per-round rank join
-    // broadcastable and the lazy result preserves consumer-side pruning
-    // (an eager bounded variant measured q221 1.7→2.3+ s). Catalog-
-    // managed: clearCache/session end reclaims them.
-    val ew = e.join(sw, "src").repartition(col("src"))
+    // The one edge cache that is not [[G.keyed]]: lazy persists, so only
+    // the node count runs while the frame is built and the edge cache
+    // fills in the consumer's job (a count-only consumer never fills
+    // it). The keyed leaf measured q221 at 12 build jobs against these
+    // 7 (sf0.01). Catalog-managed: clearCache/session end reclaims them.
+    val nodes = G(e).nodes
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    val init = scale / n
-    val teleport = (15L * scale) / (100L * n)
-    var ranks = nodes.withColumn("r", lit(init))
-    (1 to iters).foreach { _ =>
-      val msgs = ew.join(ranks, ew("src") === ranks("node"))
-        .select(col("dst").as("node"), expr("(r * w) div sw").as("c"))
-        .groupBy("node").agg(sum("c").as("s"))
-      ranks = nodes.join(msgs, Seq("node"), "left")
-        .withColumn("r", lit(teleport) + expr("(85 * coalesce(s, 0)) div 100"))
-        .select("node", "r")
-    }
-    ranks.select(col("node"), col("r").as("rank12"),
-      (col("r").cast("double") / scale).as("rank"))
+    rankLoop(G(outWeighted(e).e.repartition(col("src"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
+      nodes.withColumn("_seed", lit(true)), nodes.count(), iters, scale)
   }
 
   /** Deterministic random-walk generation (the DeepWalk/node2vec corpus
@@ -635,38 +628,27 @@ object Graph {
     * feed for graph embeddings.
     *
     * Scale: the adjacency (with per-src index + degree, one window pass)
-    * is computed once and persisted; each step is one equi-join of the
-    * walk frontier (nodes×walks rows) into it. Frontier state is
-    * walk-sized, referenced once per step — linear lineage, no
-    * checkpoint needed at these depths. */
+    * is computed once as a leaf; each step is one equi-join of the walk
+    * frontier (nodes×walks rows) into it, cut to a leaf per step: the
+    * frontier would otherwise carry adj's attribute ids into the next
+    * step's join with adj (an ambiguous self-join). */
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
       walksPerNode: Int, walkLen: Int, salt: String = "walk"): DataFrame = {
-    val e = undirectedBoth(edges, srcCol, dstCol)
-    val wIdx = Window.partitionBy(col("src")).orderBy(col("dst"))
-    val adj = e.withColumn("idx", row_number().over(wIdx).cast("long"))
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node")).distinct()
-    var cur = nodes.select(col("node").as("start"),
+    val adj = leaf(undirectedBoth(edges, srcCol, dstCol).e
+      .withColumn("idx", row_number().over(
+        Window.partitionBy(col("src")).orderBy(col("dst"))).cast("long"))
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
+    val start = G(adj, both = true).nodes.select(col("node").as("start"),
         explode(sequence(lit(0L), lit(walksPerNode - 1L))).as("walk"))
       .withColumn("step", lit(0L)).withColumn("node", col("start"))
-      // checkpoint per step: the frontier would otherwise carry adj's
-      // attribute ids into the next step's join with adj (ambiguous
-      // self-join), and the leaf keeps every step's plan constant-size
-      .localCheckpoint(true)
-    var out = cur
-    (1 to walkLen).foreach { i =>
+    iterate(start, walkLen, cut = true) { (cur, i) =>
       val h = graft.text.TextOps.hash56(concat_ws(":",
         lit(salt), col("start"), col("walk"), lit((i - 1).toLong)))
-      val nxt = cur.join(adj, adj("src") === cur("node"))
+      cur.join(adj, adj("src") === cur("node"))
         .where(adj("idx") === (h % adj("deg")) + 1L)
         .select(cur("start"), cur("walk"), lit(i.toLong).as("step"),
           adj("dst").as("node"))
-        .localCheckpoint(true)
-      cur = nxt
-      out = out.unionByName(nxt)
-    }
-    out
+    }.reduce(_ unionByName _)
   }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of
@@ -680,8 +662,7 @@ object Graph {
   def assortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
     val und = undirected(edges, srcCol, dstCol)
-    val deg = undirectedBoth(edges, srcCol, dstCol)
-      .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
+    val deg = undirectedDegrees(und)
     val da = deg.withColumnRenamed("node", "a").withColumnRenamed("d", "da")
     val db = deg.withColumnRenamed("node", "b").withColumnRenamed("d", "db")
     val m = und.join(da, "a").join(db, "b")
@@ -712,7 +693,7 @@ object Graph {
     *
     * Scale: sampled-source BFS is the standard way to make centrality
     * linear (sources bounds the state); relaxation rounds converge in
-    * maxDepth joins; localCheckpoint cuts the per-round lineage. */
+    * maxDepth joins; a leaf per round cuts the lineage. */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
       sources: Int = 8, maxDepth: Int = 4): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 4,
@@ -729,28 +710,21 @@ object Graph {
 
   /** (source, node, d) shortest distances from the `sources`
     * md5-smallest nodes by `maxDepth` min-plus relaxation rounds, each
-    * round one edge join + group-min checkpointed to cut the lineage —
-    * the BFS frame of [[harmonicCentrality]] and [[closenessCentrality]]. */
+    * round one edge join + group-min cut to a leaf (a round reads its
+    * state twice: the union carry and the join) — the BFS frame of
+    * [[harmonicCentrality]] and [[closenessCentrality]]. */
   private def sampledDistances(edges: DataFrame, srcCol: String,
       dstCol: String, sources: Int, maxDepth: Int): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .repartition(col("src")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val srcs = nodes.orderBy(md5(col("node")), col("node"))
-      .limit(sources)
-      .select(col("node").as("source"))
-    var dist = srcs.select(col("source"), col("source").as("node"),
-      lit(0).as("d")).localCheckpoint(true)
-    (1 to maxDepth).foreach { _ =>
-      val ext = dist.join(e, dist("node") === e("src"))
+    val g = directed(edges, srcCol, dstCol).keyed("src")
+    iterate(g.sources(sources).select(col("source"),
+        col("source").as("node"), lit(0).as("d")), maxDepth, cut = true) {
+        (dist, _) =>
+      val ext = dist.join(g.e, dist("node") === g.e("src"))
         .select(col("source"), col("dst").as("node"),
           (col("d") + 1).as("d"))
-      dist = dist.union(ext).groupBy(col("source"), col("node"))
-        .agg(min(col("d")).as("d")).localCheckpoint(true)
-    }
-    dist
+      dist.union(ext).groupBy(col("source"), col("node"))
+        .agg(min(col("d")).as("d"))
+    }.last
   }
 
   /** Sampled closeness centrality + eccentricity from ONE min-plus BFS
@@ -776,44 +750,38 @@ object Graph {
   /** Katz centrality with the dyadic attenuation α = 1/16 and unit base:
     * x' = ⌊(Σ_in x)/16⌋ + 1 carried as exact 6dp fixed-point longs (the
     * /16 is a power-of-two float division + floor — bit-identical on
-    * both engines), `iters` Pregel rounds with localCheckpoint lineage
-    * cuts. One row per node: node, katz. */
+    * both engines), `iters` Pregel rounds, each cut to a leaf (a round
+    * reads the node set and its state). One row per node: node, katz. */
   def katzCentrality(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 6): DataFrame = {
     require(iters >= 1 && iters <= 10, s"iters 1..10: $iters")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .repartition(col("dst")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    var x = nodes.withColumn("x", lit(1000000L)).localCheckpoint(true)
-    (1 to iters).foreach { _ =>
-      val in = x.join(e, x("node") === e("src"))
+    val g = directed(edges, srcCol, dstCol).keyed("dst")
+    val nodes = g.nodes
+    iterate(nodes.withColumn("x", lit(1000000L)), iters, cut = true) {
+        (x, _) =>
+      val in = x.join(g.e, x("node") === g.e("src"))
         .groupBy(col("dst").as("node2"))
         .agg(sum(col("x")).as("_s"))
-      x = nodes.join(in, nodes("node") === col("node2"), "left")
+      nodes.join(in, nodes("node") === col("node2"), "left")
         .select(col("node"),
           (floor(coalesce(col("_s"), lit(0L)).cast("double") / 16.0)
             .cast("long") + 1000000L).as("x"))
-        .localCheckpoint(true)
-    }
-    x.select(col("node"), (col("x").cast("double") / 1e6).as("katz"))
+    }.last.select(col("node"), (col("x").cast("double") / 1e6).as("katz"))
   }
 
   /** Directed-graph reciprocity: the fraction of edges whose reverse
     * edge also exists (self-loops excluded). One row:
     * m, reciprocal, reciprocity — the "is this interaction mutual"
-    * one-number health check for follows/reply graphs. */
+    * one-number health check for follows/reply graphs. With no
+    * countable edge (m = 0) the ratio is undefined: NULL. */
   def reciprocity(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"))
-      .where(col("src") =!= col("dst")).distinct()
+    val e = directed(edges, srcCol, dstCol).e.where(col("src") =!= col("dst"))
     val rev = e.select(col("dst").as("src"), col("src").as("dst"))
     val rec = e.intersect(rev).agg(count(lit(1)).as("reciprocal"))
     e.agg(count(lit(1)).as("m")).crossJoin(rec)
-      .withColumn("reciprocity",
-        col("reciprocal").cast("double") / col("m").cast("double"))
+      .withColumn("reciprocity", when(col("m") > 0,
+        col("reciprocal").cast("double") / col("m").cast("double")))
       .select("m", "reciprocal", "reciprocity")
   }
 
@@ -829,25 +797,18 @@ object Graph {
     * freezes at 8dp before the per-node long sum (order-free), and
     * every level's δ replays from the previous level's frozen values —
     * the oracle unrolls the identical recursion. Scale: one
-    * frontier-join per depth (partitioned on the edge src), frames
-    * localCheckpoint'd per step (the closeness/Katz lineage contract);
-    * work per depth is frontier-sized, never all-pairs. */
+    * frontier-join per depth (into the src-keyed edge cache), both
+    * passes cut to a leaf per level (each reads its state twice); work
+    * per depth is frontier-sized, never all-pairs. */
   def betweennessSampled(edges: DataFrame, srcCol: String, dstCol: String,
       sources: Int = 8, maxDepth: Int = 4): DataFrame = {
     require(maxDepth >= 1 && sources >= 1, s"bad args: $sources, $maxDepth")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .repartition(col("src")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val srcs = nodes.orderBy(md5(col("node")), col("node"))
-      .limit(sources)
-      .select(col("node").as("source"))
-    var vis = srcs.select(col("source"), col("source").as("node"),
-      lit(0).as("d"), lit(1L).as("sig")).localCheckpoint(true)
-    (1 to maxDepth).foreach { t =>
+    val g = directed(edges, srcCol, dstCol).keyed("src")
+    val vis = iterate(g.sources(sources).select(col("source"),
+        col("source").as("node"), lit(0).as("d"), lit(1L).as("sig")),
+        maxDepth, cut = true) { (vis, t) =>
       val next = vis.where(col("d") === t - 1)
-        .join(e, col("node") === col("src"))
+        .join(g.e, col("node") === col("src"))
         .select(col("source"), col("dst").as("node"), col("sig"))
         .join(vis.select(col("source").as("_vs"), col("node").as("_vn")),
           col("source") === col("_vs") && col("node") === col("_vn"),
@@ -855,16 +816,17 @@ object Graph {
         .groupBy(col("source"), col("node"))
         .agg(sum(col("sig")).as("sig"))
         .select(col("source"), col("node"), lit(t).as("d"), col("sig"))
-      vis = vis.union(next).localCheckpoint(true)
-    }
+      vis.union(next)
+    }.last
     def lvl(t: Int) = vis.where(col("d") === t)
       .select(col("source"), col("node"), col("sig"))
-    var cur = lvl(maxDepth).withColumn("dl8", lit(0L)).localCheckpoint(true)
-    val parts = scala.collection.mutable.ArrayBuffer(cur)
-    (maxDepth - 1 to 1 by -1).foreach { t =>
+    // backward from the deepest level: round i folds level maxDepth − i
+    iterate(lvl(maxDepth).withColumn("dl8", lit(0L)), maxDepth - 1,
+        cut = true) { (cur, i) =>
+      val t = maxDepth - i
       val contrib = lvl(t)
         .select(col("source"), col("node"), col("sig").as("_vsig"))
-        .join(e, col("node") === col("src"))
+        .join(g.e, col("node") === col("src"))
         .join(cur.select(col("source").as("_ws"), col("node").as("_wn"),
           col("sig").as("_wsig"), col("dl8").as("_wdl")),
           col("source") === col("_ws") && col("dst") === col("_wn"))
@@ -872,16 +834,14 @@ object Graph {
         .agg(sum(graft.core.fixedPointLong(
           (col("_vsig").cast("double") / col("_wsig").cast("double")) *
             (lit(1.0) + col("_wdl").cast("double") / 1e8), 8)).as("_c"))
-      cur = lvl(t).join(contrib, Seq("source", "node"), "left")
+      lvl(t).join(contrib, Seq("source", "node"), "left")
         .select(col("source"), col("node"), col("sig"),
           coalesce(col("_c"), lit(0L)).as("dl8"))
-        .localCheckpoint(true)
-      parts += cur
-    }
-    parts.reduce(_ unionByName _)
+    }.reduce(_ unionByName _)
       .groupBy(col("node"))
       .agg((sum(col("dl8")).cast("double") / 1e8).as("betweenness"))
   }
+
   /** Eigenvector centrality (Bonacich 1972): the dominant left
     * eigenvector of the adjacency matrix by power iteration, max-
     * normalized each round so the top node reads 1.0. Katz (above)
@@ -899,34 +859,25 @@ object Graph {
     * graphs).
     *
     * Scale: `iters` rounds of (join on src, aggregate on dst, 1-row
-    * max broadcast) — the PageRank shuffle shape exactly. */
+    * max broadcast) — the PageRank shuffle shape exactly, and its lazy
+    * rounds, which nest into one job. A round reads its `joined` frame
+    * twice (rows and max), so the plan doubles per round. */
   def eigenvectorCentrality(edges: DataFrame, srcCol: String,
       dstCol: String, iters: Int = 5, scale: Long = 1000000L)
       : DataFrame = {
-    // eager localCheckpoint (GC-cleaned), not an unpersist-less persist:
-    // both frames are re-read every round and the result stays lazy
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .repartition(col("src")).localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    var x = nodes.withColumn("r", lit(scale))
-    (1 to iters).foreach { _ =>
-      val msgs = e.join(x, e("src") === x("node"))
+    val g = directed(edges, srcCol, dstCol).keyed("src")
+    val nodes = leaf(g.nodes)
+    iterate(nodes.withColumn("r", lit(scale)), iters, cut = false) { (x, _) =>
+      val msgs = g.e.join(x, g.e("src") === x("node"))
         .select(col("dst").as("node"), col("r").as("c"))
         .groupBy("node").agg(sum("c").as("s"))
       val joined = nodes.join(msgs, Seq("node"), "left")
         .withColumn("s", coalesce(col("s"), lit(0L)))
-      val mx = broadcast(joined.agg(max(col("s")).as("mx")))
-      // stays lazy: 5 rounds nest into ONE job at the terminal action
-      // (no per-round materialization — the pageRank discipline)
-      x = joined.crossJoin(mx)
+      joined.crossJoin(broadcast(joined.agg(max(col("s")).as("mx"))))
         .withColumn("r", when(col("mx") > 0,
           expr(s"(s * $scale) div mx")).otherwise(lit(0L)))
         .select("node", "r")
-    }
-    x.select(col("node"), col("r").as("score6"),
+    }.last.select(col("node"), col("r").as("score6"),
       (col("r").cast("double") / scale).as("score"))
   }
 
@@ -949,38 +900,30 @@ object Graph {
   def simRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, c10: Int = 8): DataFrame = {
     require(c10 >= 1 && c10 <= 9, "decay C = c10/10 in (0,1)")
-    // eager localCheckpoint (GC-cleaned), not an unpersist-less persist
-    val e = edges.select(col(srcCol).cast("string").as("i"),
-      col(dstCol).cast("string").as("v")).distinct()
-      .localCheckpoint(true)
-    val deg = e.groupBy("v").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    val nodes = e.select(col("i").as("node"))
-      .union(e.select(col("v").as("node"))).distinct()
-    var s = nodes.select(col("node").as("a"), col("node").as("b"),
+    val g = G(leaf(directed(edges, srcCol, dstCol).e))
+    val deg = leaf(g.e.groupBy("dst").agg(count(lit(1)).as("d")))
+    val diagonal = g.nodes.select(col("node").as("a"), col("node").as("b"),
       lit(1000000L).as("s6"))
-    (1 to iters).foreach { _ =>
+    // lazy rounds, like eigenvector: they fold into one terminal job
+    val s = iterate(diagonal, iters, cut = false) { (s, _) =>
       // edge/degree frames are vocab-sized by contract: broadcast them
       val p = s.select(col("a").as("a0"), col("b").as("b0"), col("s6"))
-        .join(broadcast(e.select(col("i").as("a0"), col("v").as("na"))),
+        .join(broadcast(g.e.select(col("src").as("a0"), col("dst").as("na"))),
           "a0")
-        .join(broadcast(e.select(col("i").as("b0"), col("v").as("nb"))),
+        .join(broadcast(g.e.select(col("src").as("b0"), col("dst").as("nb"))),
           "b0")
         .groupBy(col("na").as("a"), col("nb").as("b"))
         .agg(sum(col("s6")).as("_t"))
         .where(col("a") =!= col("b"))
-        .join(broadcast(deg.select(col("v").as("a"), col("d").as("_da"))),
+        .join(broadcast(deg.select(col("dst").as("a"), col("d").as("_da"))),
           "a")
-        .join(broadcast(deg.select(col("v").as("b"), col("d").as("_db"))),
+        .join(broadcast(deg.select(col("dst").as("b"), col("d").as("_db"))),
           "b")
         .select(col("a"), col("b"),
           expr(s"($c10 * _t) div (10 * _da * _db)").as("s6"))
         .where(col("s6") > 0)
-      // lazy like eigenvector: 3 rounds fold into one terminal job
-      s = nodes.select(col("node").as("a"), col("node").as("b"),
-        lit(1000000L).as("s6"))
-        .unionByName(p)
-    }
+      diagonal.unionByName(p)
+    }.last
     s.where(col("a") < col("b"))
       .select(col("a"), col("b"), col("s6"),
         (col("s6").cast("double") / 1e6).as("simrank"))

@@ -3,7 +3,7 @@ package graft
 import graft.graph.Graph
 import org.apache.spark.sql.functions._
 
-/** Closeness/eccentricity + Katz on a hand-drawn path graph. */
+/** Closeness/eccentricity/harmonic + Katz on a hand-drawn path graph. */
 class Graph2Spec extends SparkSpec {
   import spark.implicits._
 
@@ -24,6 +24,15 @@ class Graph2Spec extends SparkSpec {
     // a: from b,c,d = 1,2,3 → sum 6, ecc 3
     assert(r("a").getAs[Long]("sum_d") == 6L)
     assert(r("a").getAs[Long]("ecc") == 3L)
+    // harmonic from the same BFS frame: Σ 12/d over the reached sources
+    val h = Graph.harmonicCentrality(path, "src", "dst",
+      sources = 4, maxDepth = 3)
+      .collect().map(x => x.getAs[String]("node") -> x).toMap
+    // b: 12/1 + 12/1 + 12/2 = 30; a: 12/1 + 12/2 + 12/3 = 22
+    assert(h("b").getAs[Long]("reached") == 3L)
+    assert(h("b").getAs[Double]("harmonic") == 30.0 / 12.0)
+    assert(h("a").getAs[Long]("reached") == 3L)
+    assert(h("a").getAs[Double]("harmonic") == 22.0 / 12.0)
   }
 
   test("katz: higher-degree center outranks leaves, exact fixed point") {

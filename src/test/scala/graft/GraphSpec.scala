@@ -50,6 +50,62 @@ class GraphSpec extends SparkSpec {
       "mass concentrates in the seed neighborhood (65/35 in the fixed point)")
   }
 
+  test("pagerank = personalized pagerank from every node = weighted pagerank at w = 1") {
+    // a duplicated edge (x→y twice) and a dangling node (z: in-edges only)
+    val edges = Seq(("x", "y"), ("x", "y"), ("y", "x"), ("y", "z"), ("x", "z"),
+      ("w", "x")).toDF("src", "dst")
+    def rank12(df: org.apache.spark.sql.DataFrame) = df.select("node", "rank12")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val pr = rank12(Graph.pageRank(edges, "src", "dst", iters = 6))
+    val every = edges.select($"src".as("node")).union(edges.select($"dst"))
+    val ppr = rank12(Graph.personalizedPageRank(edges, "src", "dst", every, iters = 6))
+    // the weighted input is the distinct edge set: a duplicate is one
+    // edge to pageRank but a summed weight of 2 to pageRankWeighted
+    val unit = edges.distinct().withColumn("w",
+      org.apache.spark.sql.functions.lit(1L))
+    val wpr = rank12(Graph.pageRankWeighted(unit, "src", "dst", "w", iters = 6))
+    assert(pr.keySet == Set("w", "x", "y", "z"))
+    assert(pr("z") > 0L && pr("w") > 0L)
+    assert(ppr == pr, s"ppr $ppr vs pr $pr")
+    assert(wpr == pr, s"weighted $wpr vs pr $pr")
+  }
+
+  test("pagerank on an empty graph ranks no nodes") {
+    val empty = Seq.empty[(String, String)].toDF("s", "d")
+    val out = Graph.pageRank(empty, "s", "d", iters = 3)
+    assert(out.columns.toSeq == Seq("node", "rank12", "rank"))
+    assert(out.collect().isEmpty)
+  }
+
+  test("weighted pagerank with no positive weight ranks no nodes") {
+    val empty = Seq.empty[(String, String, Long)].toDF("s", "d", "w")
+    val zero = Seq(("a", "b", 0L), ("b", "a", -2L)).toDF("s", "d", "w")
+    Seq(empty, zero).foreach { e =>
+      val out = Graph.pageRankWeighted(e, "s", "d", "w", iters = 3)
+      assert(out.columns.toSeq == Seq("node", "rank12", "rank"))
+      assert(out.collect().isEmpty)
+    }
+  }
+
+  test("reciprocity: one mutual pair of three edges; no countable edge is NULL") {
+    // a↔b mutual, a→c one-way, plus a duplicate and a self-loop that
+    // do not count
+    val e = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("a", "c"), ("c", "c"))
+      .toDF("s", "d")
+    val r = Graph.reciprocity(e, "s", "d").collect()
+    assert(r.length == 1)
+    assert(r(0).getAs[Long]("m") == 3L && r(0).getAs[Long]("reciprocal") == 2L)
+    assert(r(0).getAs[Double]("reciprocity") == 2.0 / 3.0)
+    val empty = Seq.empty[(String, String)].toDF("s", "d")
+    val loops = Seq(("a", "a"), ("b", "b")).toDF("s", "d")
+    Seq(empty, loops).foreach { e =>
+      val z = Graph.reciprocity(e, "s", "d").collect()
+      assert(z.length == 1)
+      assert(z(0).getAs[Long]("m") == 0L && z(0).getAs[Long]("reciprocal") == 0L)
+      assert(z(0).isNullAt(z(0).fieldIndex("reciprocity")))
+    }
+  }
+
   test("triangles: K4 corners carry 3 each, a pendant and a square carry 0") {
     val k4 = for (a <- Seq("1", "2", "3", "4"); b <- Seq("1", "2", "3", "4")
       if a < b) yield (a, b)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Regression guards on physical plan shape — the engine's performance
@@ -337,9 +338,30 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!scores(nonEqui.head), s"the score runs first: ${conds.head}")
   }
 
-  test("entity resolve: one lazy plan — no persisted or cached state, at most 3 build jobs") {
+  /** `build`'s frame and the jobs Spark started while building it (a
+    * local property tags the builder's thread; the listener bus is
+    * drained before the count is read). */
+  private def withBuildJobs(build: => DataFrame): (DataFrame, Int) = {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val phase = "graft.spec.phase"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(phase) == "build")
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(phase, "build")
+      val df = try build finally sc.setLocalProperty(phase, null)
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      (df, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("entity resolve: one lazy plan — no persisted or cached state, at most 3 build jobs") {
     val sc = spark.sparkContext
     // start from no state (what earlier specs left is not this query's)
     spark.catalog.clearCache()
@@ -350,27 +372,42 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .sharedState.cacheManager
       assert(cm.isEmpty, s"cached relations $when")
     }
-    val phase = "graft.spec.phase"
-    val buildJobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(phase) == "build")
-          buildJobs.incrementAndGet()
-    }
     val docs = core.table(spark, sfDir01, "documents")
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(phase, "build")
-      val er = try graft.text.TextOps.entityResolve(docs, "doc_id", "text",
-          blockChars = 16, maxDist = 20)
-        finally sc.setLocalProperty(phase, null)
-      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
-      assertNoState("after the frame is built")
-      assert(er.count() == docs.count())
-      assertNoState("after count()")
-      assert(buildJobs.get >= 1 && buildJobs.get <= 3,
-        s"${buildJobs.get} jobs started while building the frame (the lazy " +
-          "plan's only eager step is the edge collect)")
-    } finally sc.removeSparkListener(listener)
+    val (er, buildJobs) = withBuildJobs(graft.text.TextOps.entityResolve(docs,
+      "doc_id", "text", blockChars = 16, maxDist = 20))
+    assertNoState("after the frame is built")
+    assert(er.count() == docs.count())
+    assertNoState("after count()")
+    assert(buildJobs >= 1 && buildJobs <= 3,
+      s"$buildJobs jobs started while building the frame (the lazy " +
+        "plan's only eager step is the edge collect)")
+  }
+
+  test("iterative graph operators: build jobs stay under their measured ceilings") {
+    import graft.graph.Graph
+    import spark.implicits._
+    // two triangles bridged by c–d, a tail e–f, and one one-way edge
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
+      ("d", "e"), ("e", "f"))
+    val e = (und ++ und.map(_.swap) :+ (("f", "g"))).toDF("src", "dst")
+    // ceiling = the most jobs one build took in four builds, measured
+    // before the operators shared one graph value and one round loop
+    // (kcore and betweenness vary by one job from build to build); a
+    // rise above it is a regression
+    val ceilings = Seq[(String, Int, () => DataFrame)](
+      ("pageRank", 9, () => Graph.pageRank(e, "src", "dst", iters = 5)),
+      ("labelPropagation", 5, () => Graph.labelPropagation(e, "src", "dst", iters = 3)),
+      ("kcore", 25, () => Graph.kcore(e, "src", "dst", k = 2, rounds = 3)),
+      ("hits", 33, () => Graph.hits(e, "src", "dst", iters = 3)),
+      ("katzCentrality", 25, () => Graph.katzCentrality(e, "src", "dst", iters = 4)),
+      ("betweennessSampled", 34, () => Graph.betweennessSampled(e, "src", "dst",
+        sources = 4, maxDepth = 3)))
+    val over = ceilings.flatMap { case (op, ceiling, build) =>
+      spark.catalog.clearCache()
+      val (df, jobs) = withBuildJobs(build())
+      assert(df.count() > 0L, op)
+      if (jobs > ceiling) Some(s"$op: $jobs build jobs > $ceiling") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
   }
 }
