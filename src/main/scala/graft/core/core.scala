@@ -216,6 +216,14 @@ package object core {
     if (x >= 0) math.floor(x * f + 0.5) else -math.floor(-x * f + 0.5)
   }
 
+  /** The one materialization seam: `df` computed once by one eager job
+    * (the job `localCheckpoint(true)` runs), as a GC-cleaned leaf whose
+    * statistics are that job's exact row count and rows × row width,
+    * not the optimizer's pre-materialization estimate. Later plans start
+    * from its rows with its partitioning and ordering. */
+  def materialize(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftLeafBridge.materialize(df)
+
   /** Cache + right-size a frame an iterative fitter will aggregate many
     * times (r13, guide §1.2 per-task work): persist MEMORY_AND_DISK,
     * count it (the fitters need n anyway), and — when the frame is

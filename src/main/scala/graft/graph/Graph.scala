@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.materialize
 
 /** Distributed max over task-observed longs — lets an iterative operator
   * compute its scalar renorm divisor during the SAME job that
@@ -54,7 +55,7 @@ object Graph {
 
     /** The one edge cache: `e` hash-partitioned on `key`, then
       * checkpointed, so every round's join reuses that layout. */
-    def keyed(key: String): G = copy(e = leaf(e.repartition(col(key))))
+    def keyed(key: String): G = copy(e = materialize(e.repartition(col(key))))
 
     /** The `n` md5-smallest nodes, as `source` — the sampled BFS roots. */
     def sources(n: Int): DataFrame =
@@ -73,18 +74,14 @@ object Graph {
   private def directed(edges: DataFrame, srcCol: String, dstCol: String): G =
     G(endpoints(edges, srcCol, dstCol).distinct())
 
-  /** An eager, GC-cleaned checkpoint leaf: `df` is computed once and
-    * later plans start from its rows. */
-  private def leaf(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** The round loop: `init` and the `n` states `step` makes from it
     * (given the round number), in order. `cut` is each operator's one
     * lineage policy: false nests the rounds lazily into the consumer's
-    * job; true makes `init` and every state a [[leaf]], so a round that
+    * job; true materializes `init` and every state, so a round that
     * reads its state more than once plans against a constant-size tree. */
   private def iterate(init: DataFrame, n: Int, cut: Boolean)(
       step: (DataFrame, Int) => DataFrame): Seq[DataFrame] = {
-    def keep(df: DataFrame) = if (cut) leaf(df) else df
+    def keep(df: DataFrame) = if (cut) materialize(df) else df
     (1 to n).scanLeft(keep(init))((s, i) => keep(step(s, i)))
   }
 
@@ -111,7 +108,7 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 10, scale: Long = 1000000000000L): DataFrame = {
     val g = unitWeighted(edges, srcCol, dstCol)
-    val nodes = leaf(g.nodes)
+    val nodes = materialize(g.nodes)
     // every node a seed: the seed constants at |seeds| = N
     rankLoop(g, nodes.withColumn("_seed", lit(true)), nodes.count(), iters, scale)
   }
@@ -131,11 +128,11 @@ object Graph {
       seeds: DataFrame, iters: Int = 10,
       scale: Long = 1000000000000L): DataFrame = {
     val g = unitWeighted(edges, srcCol, dstCol)
-    val seedDf = leaf(seeds.select(col(seeds.columns.head).cast("string").as("node"))
+    val seedDf = materialize(seeds.select(col(seeds.columns.head).cast("string").as("node"))
       .distinct())
     val nSeeds = seedDf.count()
     require(nSeeds > 0, "personalizedPageRank needs a non-empty seed set")
-    rankLoop(g, leaf(g.nodes
+    rankLoop(g, materialize(g.nodes
       .join(broadcast(seedDf.withColumn("_seed", lit(true))), Seq("node"), "left")
       .withColumn("_seed", coalesce(col("_seed"), lit(false)))),
       nSeeds, iters, scale)
@@ -333,7 +330,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3): DataFrame = {
     val g = undirectedBoth(edges, srcCol, dstCol).keyed("src")
-    val nodes = leaf(g.nodes)
+    val nodes = materialize(g.nodes)
     iterate(nodes.withColumn("label", col("node")), iters, cut = false) {
         (labels, _) =>
       val best = g.e.join(labels, g.e("src") === labels("node"))
@@ -361,10 +358,10 @@ object Graph {
       labels: DataFrame): DataFrame = {
     // edge-sized leaf: feeds the intra-community join, the degree
     // roll-up AND the edge count
-    val und = leaf(undirected(edges, srcCol, dstCol))
+    val und = materialize(undirected(edges, srcCol, dstCol))
     // labels may be an expensive lineage (the LPA chain): it feeds both
     // endpoint joins plus the degree roll-up — materialize once
-    val lab = leaf(labels.select(col("node"), col("label")))
+    val lab = materialize(labels.select(col("node"), col("label")))
     val la = lab.withColumnRenamed("node", "a").withColumnRenamed("label", "la")
     val lb = lab.withColumnRenamed("node", "b").withColumnRenamed("label", "lb")
     val perC = und.join(la, "a").join(lb, "b")
@@ -417,7 +414,7 @@ object Graph {
     val bySrc = G(directed(edges, srcCol, dstCol).e
       .where(col("src") =!= col("dst"))).keyed("src")
     val byDst = bySrc.keyed("dst")
-    val nodes = leaf(bySrc.nodes)
+    val nodes = materialize(bySrc.nodes)
     // ONE eager job per half-step (r7 verdict: the 20-job variant was
     // scheduler-bound at 6 s): the node-sized (node, s) state becomes a
     // checkpoint leaf AND the renorm divisor is computed in the SAME
@@ -443,7 +440,7 @@ object Graph {
       val acc = new MaxAccumulator
       state.sparkSession.sparkContext.register(acc, s"hitsMax_$outCol")
       val see = udf((s: Long) => { acc.add(s); true }).asNondeterministic()
-      val raw = leaf(e.join(state, e(joinOn) === state("node"))
+      val raw = materialize(e.join(state, e(joinOn) === state("node"))
         .groupBy(col(outKey).as("node")).agg(sum(valCol).as("s"))
         .filter(see(col("s"))))
       val mx = math.max(1L, acc.value)
@@ -527,7 +524,7 @@ object Graph {
     * anti-join against the edge set removes existing edges. */
   def linkPredict(edges: DataFrame, srcCol: String, dstCol: String,
       maxDeg: Int = 10000): DataFrame = {
-    val e = leaf(undirectedBoth(edges, srcCol, dstCol).e)
+    val e = materialize(undirectedBoth(edges, srcCol, dstCol).e)
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
     val mid = e.join(deg.withColumnRenamed("node", "src"), "src")
       .where(col("d") <= maxDeg)
@@ -634,7 +631,7 @@ object Graph {
     * step's join with adj (an ambiguous self-join). */
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
       walksPerNode: Int, walkLen: Int, salt: String = "walk"): DataFrame = {
-    val adj = leaf(undirectedBoth(edges, srcCol, dstCol).e
+    val adj = materialize(undirectedBoth(edges, srcCol, dstCol).e
       .withColumn("idx", row_number().over(
         Window.partitionBy(col("src")).orderBy(col("dst"))).cast("long"))
       .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
@@ -859,15 +856,15 @@ object Graph {
     * graphs).
     *
     * Scale: `iters` rounds of (join on src, aggregate on dst, 1-row
-    * max broadcast) — the PageRank shuffle shape exactly, and its lazy
-    * rounds, which nest into one job. A round reads its `joined` frame
-    * twice (rows and max), so the plan doubles per round. */
+    * max broadcast) — the PageRank shuffle shape exactly. A round reads
+    * its `joined` frame twice (rows and max), so each round is cut: a
+    * lazy round would double the plan. */
   def eigenvectorCentrality(edges: DataFrame, srcCol: String,
       dstCol: String, iters: Int = 5, scale: Long = 1000000L)
       : DataFrame = {
     val g = directed(edges, srcCol, dstCol).keyed("src")
-    val nodes = leaf(g.nodes)
-    iterate(nodes.withColumn("r", lit(scale)), iters, cut = false) { (x, _) =>
+    val nodes = materialize(g.nodes)
+    iterate(nodes.withColumn("r", lit(scale)), iters, cut = true) { (x, _) =>
       val msgs = g.e.join(x, g.e("src") === x("node"))
         .select(col("dst").as("node"), col("r").as("c"))
         .groupBy("node").agg(sum("c").as("s"))
@@ -900,11 +897,11 @@ object Graph {
   def simRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, c10: Int = 8): DataFrame = {
     require(c10 >= 1 && c10 <= 9, "decay C = c10/10 in (0,1)")
-    val g = G(leaf(directed(edges, srcCol, dstCol).e))
-    val deg = leaf(g.e.groupBy("dst").agg(count(lit(1)).as("d")))
+    val g = G(materialize(directed(edges, srcCol, dstCol).e))
+    val deg = materialize(g.e.groupBy("dst").agg(count(lit(1)).as("d")))
     val diagonal = g.nodes.select(col("node").as("a"), col("node").as("b"),
       lit(1000000L).as("s6"))
-    // lazy rounds, like eigenvector: they fold into one terminal job
+    // lazy rounds: they fold into one terminal job
     val s = iterate(diagonal, iters, cut = false) { (s, _) =>
       // edge/degree frames are vocab-sized by contract: broadcast them
       val p = s.select(col("a").as("a0"), col("b").as("b0"), col("s6"))

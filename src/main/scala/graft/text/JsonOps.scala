@@ -34,10 +34,8 @@ object JsonOps {
     val parsed = from_json(col(jsonCol), MapType(StringType, StringType))
     // materialize depth-1 once: it feeds BOTH the union output and every
     // deeper level's re-parse — lazily it was Jackson-parsed per branch
-    // (r13; localCheckpoint = the engine's standard eager lineage cut)
-    var level = df.where(col(jsonCol).isNotNull)
-      .select(explode(parsed).as(Seq("path", "v")))
-      .localCheckpoint(true)
+    var level = graft.core.materialize(df.where(col(jsonCol).isNotNull)
+      .select(explode(parsed).as(Seq("path", "v"))))
     var all = level
     (2 to maxDepth).foreach { _ =>
       level = level.where(col("v").startsWith("{"))

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.core.fixedPointLong
+import graft.core.{fixedPointLong, materialize}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,6 +33,51 @@ object TextOps {
     }
 
   def tokens(c: Column): Column = regexp_extract_all(lower(c), lit("\\S+"), lit(0))
+
+  /** The word n-grams of token array `t`, in order. Gram i is
+    * `last(prefix, t[i + n − 1])`, where the prefix is the n − 1 tokens
+    * from i joined by spaces; by default `last` joins with a space too.
+    * Built from n shifted slices zipped pairwise, so no lambda indexes
+    * the array per gram. n = 1 is `t` itself. Empty when `t` is null or
+    * has fewer than n tokens. */
+  private[graft] def wordGrams(t: Column, n: Int,
+      last: (Column, Column) => Column = concat_ws(" ", _, _)): Column = {
+    require(n >= 1, s"n-gram order $n must be >= 1")
+    def shifted(j: Int) = slice(t, lit(j + 1), size(t) - (n - 1))
+    val grams = if (n == 1) t else zip_with((1 until n - 1).foldLeft(shifted(0))(
+      (g, j) => zip_with(g, shifted(j), concat_ws(" ", _, _))), shifted(n - 1), last)
+    when(size(t) >= n, grams).otherwise(array())
+  }
+
+  /** The distinct character n-grams of string column `s` (length ≥ n). */
+  private def distinctCharGrams(s: Column, n: Int): Column =
+    array_distinct(transform(sequence(lit(1), length(s) - (n - 1)),
+      i => s.substr(i, lit(n))))
+
+  /** Token counts per key, `(keys…, tok, cnt)`: one map-side-combined
+    * aggregate. `keys` are named columns. */
+  private[text] def tokenCounts(docs: DataFrame, keys: Seq[Column],
+      textCol: String): DataFrame = {
+    val kt = docs.select(keys :+ explode(tokens(col(textCol))).as("tok"): _*)
+    kt.groupBy(kt.columns.toIndexedSeq.map(col): _*).agg(count(lit(1)).as("cnt"))
+  }
+
+  /** Per-token counts on the two sides of predicate `a`, `(tok, ca, cb)`:
+    * `ca` over the docs where `a` holds, `cb` over the others. */
+  private def twoSidedCounts(docs: DataFrame, a: Column,
+      textCol: String): DataFrame =
+    docs.select(a.as("_a"), explode(tokens(col(textCol))).as("tok"))
+      .groupBy(col("tok"))
+      .agg(sum(when(col("_a"), 1L).otherwise(0L)).as("ca"),
+        sum(when(!col("_a"), 1L).otherwise(0L)).as("cb"))
+
+  /** One row per doc of `docs` with `per`'s columns named in `zeros`,
+    * each the given zero where the doc has no `per` row (no tokens, no
+    * grams): `(idCol, zeros…)`. */
+  private def everyDoc(docs: DataFrame, idCol: String, per: DataFrame,
+      zeros: (String, Column)*): DataFrame =
+    docs.select(col(idCol)).join(per, Seq(idCol), "left")
+      .select(col(idCol) +: zeros.map { case (c, z) => coalesce(col(c), z).as(c) }: _*)
 
   /** Driver-side 6dp half-away-from-zero round — the scalar twin of
     * core.roundLikeDuck (DuckDB's round() arithmetic), for model
@@ -103,12 +148,12 @@ object TextOps {
       numHashes: Int = 16, bandSize: Int = 4, minWords: Int = 50): DataFrame = {
     // the diff verdict is id-sized but its lineage hashes BOTH corpora
     // (old included) and it feeds every downstream branch (fresh ×3,
-    // retained ×1) — persist it so the old-corpus hash pass runs once.
-    // `fresh` itself stays lazy: it carries text, and re-deriving it is
-    // one broadcast join against the cached ids (measured cheaper at
-    // sf0.1 than caching the text column).
+    // retained ×1) — materialize it so the old-corpus hash pass runs
+    // once. `fresh` itself stays lazy: it carries text, and re-deriving
+    // it is one broadcast join against the id-sized leaf (measured
+    // cheaper at sf0.1 than materializing the text column).
     val diff = corpusDiff(oldDocs, newDocs, idCol, textCol)
-      .localCheckpoint(true)
+      .transform(materialize)
     val fresh = newDocs.join(
       diff.where(col("status").isin("added", "changed")), Seq(idCol))
     val retained = newDocs.join(
@@ -138,16 +183,9 @@ object TextOps {
     * be a redundant corpus-sized exchange of (id, string) pairs. */
   def shinglesAll(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    // materialize the token array once — element_at inside the lambda would
-    // otherwise re-run the regex tokenizer per shingle element
-    val withT = docs.select(col(idCol), tokens(col(textCol)).as("_toks"))
-    val t = col("_toks")
-    val grams = when(size(t) >= n,
-      transform(
-        sequence(lit(0), size(t) - n),
-        i => concat_ws(" ", (0 until n).map(j => element_at(t, i + j + 1)): _*)))
-      .otherwise(array())
-    withT.select(col(idCol), explode(grams).as("shingle"))
+    // project the token array once: the gram builder reads it per slice
+    docs.select(col(idCol), tokens(col(textCol)).as("_toks"))
+      .select(col(idCol), explode(wordGrams(col("_toks"), n)).as("shingle"))
   }
 
   /** MinHash signature: numHashes minima of affine permutations of the
@@ -306,9 +344,10 @@ object TextOps {
     * rounds on ANY graph shape — the property min-label propagation
     * lacks (O(diameter): a 10k-doc boilerplate chain needs 10k label
     * rounds but ~6 star rounds). Per round: two groupBy-min exchanges
-    * over the (deduped, canonicalized) edge list; `localCheckpoint`
-    * truncates the iterative lineage. Only the pair-connected subgraph
-    * participates — callers join singleton nodes back afterwards.
+    * over the (deduped, canonicalized) edge list; materializing each
+    * round's edges truncates the iterative lineage. Only the
+    * pair-connected subgraph participates — callers join singleton
+    * nodes back afterwards.
     * Input: (a, b) pair columns. Output: id, cluster — one row per
     * non-root node plus a root self-row per component. */
   def ccLargeSmallStar(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
@@ -318,7 +357,7 @@ object TextOps {
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(materialize)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -345,7 +384,7 @@ object TextOps {
         .where(col("x") =!= col("m"))
         .select(least(col("x"), col("m")).as("u"),
           greatest(col("x"), col("m")).as("v"))
-        .distinct().localCheckpoint(true)
+        .distinct().transform(materialize)
       // Fixpoint ⟺ the edge set is a star forest rooted at component
       // minima ⟺ every larger endpoint appears exactly once AND no root
       // is also a leaf (roots < leaves by canonicalization, so a star
@@ -386,34 +425,21 @@ object TextOps {
     * ratio of integer-derived doubles (same shape both engines — the
     * ln-parity assumption the NB/LM family carries).
     *
-    * Scale: one tokenize pass feeds both the bigram and unigram
-    * aggregates; the joins after are vocabulary-sized (model, not
-    * data); totals ride a broadcast 1-row frame. */
+    * Scale: the bigram and unigram aggregates are map-side combined;
+    * the joins after are vocabulary-sized (model, not data); totals
+    * ride a broadcast 1-row frame. */
   def collocations(docs: DataFrame, idCol: String, textCol: String,
       minCount: Long = 5L): DataFrame = {
-    // The corpus-sized token cache lives ONLY for the two aggregate jobs:
-    // both vocab-sized aggregates are materialized eagerly (leaf plans),
-    // then the cache is dropped (r7 verdict #7 — the old form persisted
-    // the tokenized projection for the lifetime of the session).
-    val t = docs.select(tokens(col(textCol)).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val big = t.where(size(col("t")) >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(t) - 1), " +
-          "i -> struct(element_at(t, i) AS x, element_at(t, i + 1) AS y))"))
+    val big = docs.select(tokens(col(textCol)).as("t"))
+      .select(explode(wordGrams(col("t"), 2, (x, y) => struct(x.as("x"), y.as("y"))))
         .as("g"))
-      .select(col("g.x").as("x"), col("g.y").as("y"))
-      .groupBy("x", "y").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
-    val ug = t.select(explode(col("t")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    t.unpersist(false)
-    val tot = ug.agg(sum("c").as("n"))
+      .groupBy(col("g.x").as("x"), col("g.y").as("y")).agg(count(lit(1)).as("cnt"))
+    val ug = tokenCounts(docs, Nil, textCol)
+    val tot = ug.agg(sum("cnt").as("n"))
       .crossJoin(big.agg(sum("cnt").as("nb")))
     big.where(col("cnt") >= minCount)
-      .join(ug.select(col("tok").as("x"), col("c").as("cx")), "x")
-      .join(ug.select(col("tok").as("y"), col("c").as("cy")), "y")
+      .join(ug.select(col("tok").as("x"), col("cnt").as("cx")), "x")
+      .join(ug.select(col("tok").as("y"), col("cnt").as("cy")), "y")
       .crossJoin(broadcast(tot))
       .select(col("x"), col("y"), col("cnt"),
         log((col("cnt").cast("double") / col("nb"))
@@ -654,12 +680,9 @@ object TextOps {
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("_first") === col(idCol), 1L).otherwise(0L)).as("n_novel"))
-    docs.select(col(idCol)).join(per, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-        coalesce(col("n_novel"), lit(0L)).as("n_novel"),
-        when(col("n_shingles") > 0,
-          col("n_novel").cast("double") / col("n_shingles")).as("novelty"))
+    everyDoc(docs, idCol, per, "n_shingles" -> lit(0L), "n_novel" -> lit(0L))
+      .withColumn("novelty", when(col("n_shingles") > 0,
+        col("n_novel").cast("double") / col("n_shingles")))
   }
 
   /** Asymmetric n-gram containment for candidate pairs: |A∩B|/|A| and
@@ -715,10 +738,10 @@ object TextOps {
   def tfidf(docs: DataFrame, idCol: String, textCol: String, topK: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    val tok = docs.select(col(idCol), explode(tokens(col(textCol))).as("term"))
-    val tf = tok.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val dfreq = tok.select(col(idCol), col("term")).distinct()
-      .groupBy("term").agg(count(lit(1)).as("df"))
+    val tf = tokenCounts(docs, Seq(col(idCol)), textCol)
+      .select(col(idCol), col("tok").as("term"), col("cnt").as("tf"))
+    // each (doc, term) row of tf is one document containing the term
+    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(idCol).orderBy(col("tfidf").desc, col("term"))
     tf.join(dfreq, "term")
       .crossJoin(broadcast(nDocs))
@@ -792,9 +815,8 @@ object TextOps {
       .withColumn("grams",
         greatest(length(col("_t")) - (n - 1), lit(0)).cast("long"))
       .withColumn("distinct_grams",
-        when(col("grams") === 0L, lit(0L)).otherwise(expr(
-          s"size(array_distinct(transform(sequence(1, length(_t) - ${n - 1}), i -> substring(_t, i, $n))))"
-        ).cast("long")))
+        when(col("grams") === 0L, lit(0L))
+          .otherwise(size(distinctCharGrams(col("_t"), n)).cast("long")))
       .withColumn("redundancy",
         when(col("grams") > 0L,
           lit(1.0) - col("distinct_grams").cast("double") /
@@ -813,13 +835,10 @@ object TextOps {
     * tokens, types, ttr, hapax, hapax_frac. */
   def lexicalDiversityByGroup(docs: DataFrame, groupCol: String,
       textCol: String): DataFrame =
-    docs.select(col(groupCol).as("group"),
-      explode(tokens(col(textCol))).as("_t"))
-      .where(col("_t") =!= "")
-      .groupBy(col("group"), col("_t")).agg(count(lit(1)).as("_c"))
+    tokenCounts(docs, Seq(col(groupCol).as("group")), textCol)
       .groupBy(col("group"))
-      .agg(sum(col("_c")).as("tokens"), count(lit(1)).as("types"),
-        sum(when(col("_c") === 1L, 1L).otherwise(0L)).as("hapax"))
+      .agg(sum(col("cnt")).as("tokens"), count(lit(1)).as("types"),
+        sum(when(col("cnt") === 1L, 1L).otherwise(0L)).as("hapax"))
       .withColumn("ttr",
         col("types").cast("double") / col("tokens").cast("double"))
       .withColumn("hapax_frac",
@@ -890,9 +909,7 @@ object TextOps {
       coalesce(col(textCol), lit("")).as("_t"))
     val grams = base
       .where(length(col("_t")) >= n)
-      .select(col("id"), explode(expr(
-        s"array_distinct(transform(sequence(1, length(_t) - ${n - 1}), i -> substring(_t, i, $n)))"))
-        .as("_g"))
+      .select(col("id"), explode(distinctCharGrams(col("_t"), n)).as("_g"))
       .select(col("id"), hash56(col("_g")).as("_h"))
     val first = grams.groupBy(col("_h")).agg(min(col("id")).as("_first"))
     val per = grams.join(first, "_h")
@@ -900,10 +917,7 @@ object TextOps {
       .agg(count(lit(1)).as("distinct_grams"),
         sum(when(col("_first") === col("id"), 1L).otherwise(0L))
           .as("new_grams"))
-    base.select(col("id")).join(per, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("distinct_grams"), lit(0L)).as("distinct_grams"),
-        coalesce(col("new_grams"), lit(0L)).as("new_grams"))
+    everyDoc(base, "id", per, "distinct_grams" -> lit(0L), "new_grams" -> lit(0L))
       .withColumn("novelty",
         when(col("distinct_grams") > 0,
           col("new_grams").cast("double") /
@@ -950,7 +964,6 @@ object TextOps {
       textCol: String): DataFrame = {
     val gt = docs.select(col(groupCol).as("_g"),
       explode(tokens(col(textCol))).as("_t"))
-      .where(col("_t") =!= "")
       .select(col("_g"), hash56(col("_t")).as("_h"))
       .distinct()
     val sz = gt.groupBy(col("_g")).agg(count(lit(1)).as("_sz"))
@@ -1047,13 +1060,9 @@ object TextOps {
     * kl_ab, kl_ba. */
   def unigramKL(docs: DataFrame, groupCol: String, textCol: String,
       ga: String, gb: String, alpha: Double = 0.5): DataFrame = {
-    val tok = docs.where(col(groupCol) === ga || col(groupCol) === gb)
-      .select((col(groupCol) === ga).as("_a"),
-        explode(tokens(col(textCol))).as("_t"))
-      .where(col("_t") =!= "")
-    val cnt = tok.groupBy(col("_t"))
-      .agg(sum(when(col("_a"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("_a"), 1L).otherwise(0L)).as("cb"))
+    val cnt = twoSidedCounts(
+      docs.where(col(groupCol) === ga || col(groupCol) === gb),
+      col(groupCol) === ga, textCol)
     val tot = cnt.agg(count(lit(1)).as("v"), sum(col("ca")).as("na"),
       sum(col("cb")).as("nb"))
     val withTot = cnt.crossJoin(broadcast(tot))
@@ -1081,13 +1090,9 @@ object TextOps {
   def logOddsTerms(docs: DataFrame, groupCol: String, textCol: String,
       ga: String, gb: String, priorScale: Double = 10.0,
       minCount: Long = 5L): DataFrame = {
-    val tok = docs.where(col(groupCol) === ga || col(groupCol) === gb)
-      .select((col(groupCol) === ga).as("_a"),
-        explode(tokens(col(textCol))).as("_t"))
-      .where(col("_t") =!= "")
-    val cnt = tok.groupBy(col("_t"))
-      .agg(sum(when(col("_a"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("_a"), 1L).otherwise(0L)).as("cb"))
+    val cnt = twoSidedCounts(
+      docs.where(col(groupCol) === ga || col(groupCol) === gb),
+      col(groupCol) === ga, textCol)
       .where(col("ca") + col("cb") >= minCount)
     val tot = cnt.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
       sum(col("ca") + col("cb")).as("nn"))
@@ -1102,7 +1107,7 @@ object TextOps {
     val delta = log(oa) - log(ob)
     val sig2 = lit(1.0) / (col("ca").cast("double") + col("_aw")) +
       lit(1.0) / (col("cb").cast("double") + col("_aw"))
-    t.select(col("_t").as("token"), col("ca").as("c_a"), col("cb").as("c_b"),
+    t.select(col("tok").as("token"), col("ca").as("c_a"), col("cb").as("c_b"),
       delta.as("delta"), (delta / sqrt(sig2)).as("z"))
   }
 
@@ -1342,10 +1347,7 @@ object TextOps {
     * Output: keyCols..., n_toks (ranked tokens used), zipf_slope. */
   def zipfSlope(docs: DataFrame, keyCols: Seq[String], textCol: String,
       topN: Int): DataFrame = {
-    val toks = docs.select(keyCols.map(col) :+
-      explode(tokens(col(textCol))).as("tok"): _*)
-    val counts = toks.groupBy((keyCols :+ "tok").map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
+    val counts = tokenCounts(docs, keyCols.map(col), textCol)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col("cnt").desc, col("tok"))
     val ranked = counts.withColumn("rank", row_number().over(w))
@@ -1443,49 +1445,23 @@ object TextOps {
     * token itself. */
   private def lmGrams(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
-    lmGramsFromToks(df, idCol, tokens(col(textCol)), n)
+    lmGramsFromToks(df.select(col(idCol), tokens(col(textCol)).as("_t")),
+      idCol, col("_t"), n)
 
   /** [[lmGrams]] over an already-tokenized array column — the seam the
     * fused curation pass uses to avoid re-running the tokenizer. */
   private def lmGramsFromToks(df: DataFrame, idCol: String, t: Column,
-      n: Int): DataFrame = {
-    // higher-order-function lambdas are interpreted, not codegen'd, and
-    // this pipeline runs up to 3× per query inside broadcast-subquery
-    // jobs — so the bigram path (every production call) must do ZERO
-    // per-element expression work: two bulk slices zipped with an
-    // identity-struct lambda. The general-n path pays a per-gram
-    // interpreted concat; orders ≥ 3 are the rare, documented-cost case.
-    val win = if (n == 2)
-      zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-        (a, b) => struct(a.as("ctx"), b.as("w")))
-    else transform(
-      sequence(lit(1), size(t) - lit(n - 1)),
-      i => struct(
-        concat_ws(" ", (0 until n - 1).map(j =>
-          element_at(t, i + lit(j))): _*).as("ctx"),
-        element_at(t, i + lit(n - 1)).as("w")))
-    df.select(col(idCol), explode(when(size(t) >= n, win)
-      .otherwise(array())).as("g"))
+      n: Int): DataFrame =
+    df.select(col(idCol),
+        explode(wordGrams(t, n, (c, w) => struct(c.as("ctx"), w.as("w")))).as("g"))
       .select(col(idCol), col("g.ctx").as("ctx"), col("g.w").as("w"))
-  }
 
   /** Fit half of [[lmScore]] — two hash aggregations + one scalar. */
   def lmFit(corpus: DataFrame, idCol: String, textCol: String,
       n: Int = 2): LmModel = {
     require(n >= 2, s"LM order $n must be >= 2")
-    // gram-type-sized model, corpus-sized lineage (tokenize + explode +
-    // agg), and scoring reads it twice (the per-gram join + the cCtx
-    // roll-up) — persist so the corpus pipeline runs once. Persist, NOT
-    // a checkpoint leaf: the InMemoryRelation statistics are what let
-    // the scoring joins BROADCAST the model-sized count tables (a
-    // stats-less leaf dropped q102/q131 to sort-merge scoring joins,
-    // +0.4-0.8 s each — r14 measured). INTENTIONAL model-lifetime cache:
-    // the returned LmModel amortizes the fit across scoring batches by
-    // contract, so there is no in-function unpersist point; long-lived
-    // callers unpersist model.cGram when the model retires.
     val cGram = lmGrams(corpus, idCol, textCol, n)
       .groupBy("ctx", "w").agg(count(lit(1)).as("cGram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cCtx = cGram.groupBy("ctx").agg(sum("cGram").as("cCtx"))
     val vocab = corpus.select(explode(tokens(col(textCol))).as("tok"))
       .agg(countDistinct("tok")).head().getLong(0)
@@ -1508,10 +1484,7 @@ object TextOps {
           (coalesce(col("cCtx"), lit(0L)) + lit(k * model.vocab))))
       .groupBy(idCol)
       .agg(count(lit(1)).as("nGrams"), avg("nll").as("avgNll"))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nGrams"), lit(0L)).as("nGrams"),
-        coalesce(col("avgNll"), lit(0.0)).as("avgNll"))
+    everyDoc(docs, idCol, scored, "nGrams" -> lit(0L), "avgNll" -> lit(0.0))
   }
 
   /** The full curation flow (language gate ∧ quality gate ∧ LSH-dedup
@@ -1535,10 +1508,8 @@ object TextOps {
     * posexplode → groupBy reassembly that exists for incremental
     * signature storage).
     *
-    * The one eager action (vocab countDistinct, same as [[lmFit]]) also
-    * materializes the feature cache. The cache is corpus-sized
-    * (MEMORY_AND_DISK); there is no deterministic unpersist point for a
-    * lazily-returned result, per the convention at [[minhashPairsAcross]]. */
+    * The feature frame is materialized once; the one eager scalar is
+    * the vocab countDistinct, the same as [[lmFit]]'s. */
   def curationQuotaFused(docs: DataFrame, idCol: String, srcCol: String,
       textCol: String, shingleSize: Int = 3, numHashes: Int = 16,
       bandSize: Int = 4, minQuality: Double = 0.5, lang: String = "en",
@@ -1558,9 +1529,7 @@ object TextOps {
         langPredFrom(langCountExprs(toksC)).as("predLang"),
         call_function("minhash_sig", toksC,
           lit(shingleSize), lit(numHashes)).as("_sig"))
-      .localCheckpoint(true)
-    // the one eager scalar (same as lmFit's vocab) doubles as the cache
-    // materialization point
+      .transform(materialize)
     val vocab = feats.select(explode(toksC).as("tok"))
       .agg(countDistinct("tok")).head().getLong(0)
 
@@ -1624,12 +1593,7 @@ object TextOps {
     * Output: idCol, nGrams, dupGramFrac, topGram, topGramFrac. */
   def repetitionSignals(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 2): DataFrame = {
-    val toks = tokens(col(textCol))
-    val nt = size(toks)
-    val grams = when(nt >= n,
-      transform(sequence(lit(0), nt - n), i =>
-        concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    val grams = wordGrams(tokens(col(textCol)), n)
     val sorted = array_sort(grams)
     val zero = struct(lit("").as("prev"), lit(0).as("run"),
       lit(0).as("best"), lit("").as("bestGram"))
@@ -1832,10 +1796,7 @@ object TextOps {
     val t = tokens(col(textCol))
     val unis = transform(t, x =>
       struct(x.as("a"), lit(null).cast("string").as("b")))
-    val bis = when(size(t) >= 2,
-      zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-        (x, y) => struct(x.as("a"), y.as("b"))))
-      .otherwise(array().cast("array<struct<a:string,b:string>>"))
+    val bis = wordGrams(t, 2, (x, y) => struct(x.as("a"), y.as("b")))
     df.select(col(idCol), explode(concat(unis, bis)).as("g"))
       .select(col(idCol),
         (hash56(when(col("g.b").isNull, col("g.a"))
@@ -1862,29 +1823,16 @@ object TextOps {
     * scan+explode — no corpus-sized state is ever persisted.
     * Output: gram, cnt (exact) for cnt ≥ minCount. */
   /** One row per word n-gram OCCURRENCE (not distinct — counts matter).
-    * Shared by the batch and streaming heavy-hitter operators. The n=2
-    * path keeps all string work out of the interpreted HOF lambda
-    * (struct zip + codegen'd concat after the explode — the lmGrams
-    * lesson); general n pays the per-gram interpreted concat. */
+    * Shared by the batch and streaming heavy-hitter operators. The last
+    * token joins its prefix in the codegen'd projection after the
+    * explode, not in the interpreted lambda. */
   private[graft] def gramOccurrences(docs: DataFrame, textCol: String,
       n: Int): DataFrame = {
     val t = tokens(col(textCol))
-    if (n == 2) {
-      val pairs = when(size(t) >= 2,
-        zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-          (x, y) => struct(x.as("a"), y.as("b"))))
-        .otherwise(array().cast("array<struct<a:string,b:string>>"))
-      docs.select(explode(pairs).as("g"))
-        .select(concat(col("g.a"), lit(" "), col("g.b")).as("gram"))
-    } else {
-      val withT = docs.select(tokens(col(textCol)).as("_toks"))
-      val tt = col("_toks")
-      val gramArr = when(size(tt) >= n,
-        transform(sequence(lit(0), size(tt) - n),
-          i => concat_ws(" ", (0 until n).map(j => element_at(tt, i + j + 1)): _*)))
-        .otherwise(array())
-      withT.select(explode(gramArr).as("gram"))
-    }
+    if (n == 1) docs.select(explode(t).as("gram"))
+    else docs.select(explode(wordGrams(t, n, (x, y) => struct(x.as("a"), y.as("b"))))
+        .as("g"))
+      .select(concat(col("g.a"), lit(" "), col("g.b")).as("gram"))
   }
 
   def heavyHitterGrams(docs: DataFrame, idCol: String, textCol: String,
@@ -1942,11 +1890,10 @@ object TextOps {
       smoothing: Double = 1.0): DataFrame = {
     val k = smoothing
     // raw's hashed-gram pairs feed BOTH the bucket-count fit (an eager
-    // collect) and the per-doc scoring pass — persist them so the raw
-    // corpus is tokenized+hashed once, not twice; the fit collect
-    // doubles as the materialization point
+    // collect) and the per-doc scoring pass — materialized, so the raw
+    // corpus is tokenized and hashed once, not twice
     val rawGrams = hashedGrams(raw, idCol, textCol, nBuckets)
-      .localCheckpoint(true)
+      .transform(materialize)
     def bucketCounts(g: DataFrame): Map[Long, Long] =
       g.groupBy("b").agg(count(lit(1)).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1965,10 +1912,7 @@ object TextOps {
       .select(col(idCol), element_at(typedlit(lrM), col("b")).as("lr"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("nFeats"), sum("lr").as("logw"))
-    raw.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nFeats"), lit(0L)).as("nFeats"),
-        coalesce(col("logw"), lit(0.0)).as("logw"))
+    everyDoc(raw, idCol, scored, "nFeats" -> lit(0L), "logw" -> lit(0.0))
   }
 
   /** DSIR selection: Gumbel-top-k resampling without replacement over
@@ -2078,13 +2022,9 @@ object TextOps {
       .groupBy(idCol)
       .agg(count(lit(1)).as("nSpans"),
         sum(when(col("cnt") > 1, 1L).otherwise(0L)).as("nDupSpans"))
-    docs.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nSpans"), lit(0L)).as("nSpans"),
-        coalesce(col("nDupSpans"), lit(0L)).as("nDupSpans"),
-        when(coalesce(col("nSpans"), lit(0L)) > 0,
-          col("nDupSpans").cast("double") / col("nSpans"))
-          .otherwise(lit(0.0)).as("dupSpanFrac"))
+    everyDoc(docs, idCol, perDoc, "nSpans" -> lit(0L), "nDupSpans" -> lit(0L))
+      .withColumn("dupSpanFrac", when(col("nSpans") > 0,
+        col("nDupSpans").cast("double") / col("nSpans")).otherwise(lit(0.0)))
   }
 
   /** Exact duplicate-span REMOVAL (Lee et al., ACL'22 "ExactSubstr" —
@@ -2242,10 +2182,8 @@ object TextOps {
       .select("shingle").distinct()
     val hits = trainGrams.join(broadcast(evalGrams), "shingle")
       .groupBy(idCol).agg(count(lit(1)).as("nGramHits"))
-    train.select(col(idCol)).join(hits, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nGramHits"), lit(0L)).as("nGramHits"),
-        (coalesce(col("nGramHits"), lit(0L)) > 0).as("contaminated"))
+    everyDoc(train, idCol, hits, "nGramHits" -> lit(0L))
+      .withColumn("contaminated", col("nGramHits") > 0)
   }
 
   /** Bloom-prefiltered decontamination — the shape [[decontaminate]] takes
@@ -2271,12 +2209,10 @@ object TextOps {
     val evalGrams = shingles(evalDocs, idCol, textCol, n)
       .select("shingle").distinct()
       // the sizing count, the bloom build AND the exact confirm join all
-      // consume the eval grams — one cached computation instead of up to
-      // three tokenize/explode/distinct passes. The blocks stay cached for
-      // the (lazy) confirm join; they are eval-sized (benchmark suites,
-      // not crawls) and MEMORY_AND_DISK evicts under pressure, so there is
-      // no deterministic unpersist point worth blocking the caller for.
-      .localCheckpoint(true)
+      // consume the eval grams — one materialization instead of up to
+      // three tokenize/explode/distinct passes (eval-sized: benchmark
+      // suites, not crawls)
+      .transform(materialize)
     val nGrams =
       if (expectedGrams > 0) expectedGrams
       else math.max(evalGrams.count(), 1L)
@@ -2288,10 +2224,8 @@ object TextOps {
       .where(mightContain(col("shingle")))
     val hits = candidates.join(evalGrams, "shingle")
       .groupBy(idCol).agg(count(lit(1)).as("nGramHits"))
-    train.select(col(idCol)).join(hits, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nGramHits"), lit(0L)).as("nGramHits"),
-        (coalesce(col("nGramHits"), lit(0L)) > 0).as("contaminated"))
+    everyDoc(train, idCol, hits, "nGramHits" -> lit(0L))
+      .withColumn("contaminated", col("nGramHits") > 0)
   }
 
   /** Corpus-overlap matrix: exact pairwise Jaccard between the distinct
@@ -2314,10 +2248,11 @@ object TextOps {
       docs.select(col(groupCol).cast("string").as("grp"), col(textCol)),
       "grp", textCol, n)
     val g = sort_array(collect_set("grp"))
-    // cached: the set sizes are derived from THIS aggregate (gram-sized,
-    // never a second corpus scan) and the pair explosion reuses it lazily
+    // materialized: the set sizes are derived from THIS aggregate
+    // (gram-sized, never a second corpus scan) and the pair explosion
+    // reuses it lazily
     val perGram = grams.groupBy("shingle").agg(g.as("gs"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val sizes = perGram.select(explode(col("gs")).as("grp"))
       .groupBy("grp").agg(count(lit(1)).as("sz"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2412,11 +2347,8 @@ object TextOps {
     * exchange. */
   def sourceSignature(docs: DataFrame, groupCol: String, textCol: String,
       topK: Int, minCount: Long): DataFrame = {
-    val counts = docs
-      .select(col(groupCol).cast("string").as("grp"),
-        explode(tokens(col(textCol))).as("tok"))
-      .groupBy("grp", "tok").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    val counts = materialize(
+      tokenCounts(docs, Seq(col(groupCol).cast("string").as("grp")), textCol))
     val grpTotals = counts.groupBy("grp").agg(sum("cnt").as("gt"))
     val tokTotals = counts.groupBy("tok").agg(sum("cnt").as("tt"))
     // sum over an empty corpus is SQL NULL — the output is empty then, so
@@ -2431,7 +2363,7 @@ object TextOps {
     // aggregates (never corpus-sized) for web-scale vocabularies where a
     // forced broadcast would OOM the executors. The minCount filter prunes
     // the cnt=1 long tail before the join on the probe side.
-    val out = counts.where(col("cnt") >= minCount)
+    counts.where(col("cnt") >= minCount)
       .join(broadcast(grpTotals), "grp")
       .join(tokTotals, "tok")
       .withColumn("lift",
@@ -2439,12 +2371,6 @@ object TextOps {
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= topK)
       .select(col("grp"), col("tok"), col("cnt"), col("lift"), col("rank"))
-    // counts stays cached for the lazy result (same precedent as the bloom
-    // eval-gram block above): it feeds grpTotals, tokTotals AND the final
-    // join — an eager unpersist here would force a full recompute of the
-    // corpus tokenize at execution time. Token-cardinality-sized,
-    // MEMORY_AND_DISK evicts under pressure.
-    out
   }
 
   /** CCNet-style text normalization for hash dedup (Wenzek et al.,
@@ -2572,26 +2498,25 @@ object TextOps {
   /** Fit [[NbModel]] on a labeled seed set: ONE tokenize + hash-agg pass
     * builds the per-token class counts (shuffle carries (tok, 2 longs));
     * the class totals/priors/vocab come from one model-sized roll-up of
-    * that aggregate — the corpus is read once. tokTable stays persisted
-    * (the totals action above materializes it; every nbScore call joins
-    * it) — long-lived callers unpersist it when the model retires. */
+    * that aggregate — the corpus is read once. tokTable is materialized
+    * once; every nbScore call joins it. An empty seed fails here; a
+    * one-class seed fits, and [[nbScore]] refuses it. */
   def nbFitModel(seed: DataFrame, idCol: String, textCol: String,
       labelCol: String, posLabel: String): NbModel = {
     val isPos = col(labelCol) === lit(posLabel)
-    val tokTable = seed
-      .select(isPos.as("p"), explode(tokens(col(textCol))).as("tok"))
-      .groupBy("tok")
-      .agg(sum(when(col("p"), 1L).otherwise(0L)).as("cPos"),
-        sum(when(!col("p"), 1L).otherwise(0L)).as("cNeg"))
-      .localCheckpoint(true)
-    val tot = tokTable.agg(sum("cPos"), sum("cNeg"), count(lit(1))).collect()(0)
     val docs = seed.agg(
-      sum(when(isPos, 1L).otherwise(0L)),
-      sum(when(!isPos, 1L).otherwise(0L))).collect()(0)
+      coalesce(sum(when(isPos, 1L).otherwise(0L)), lit(0L)),
+      coalesce(sum(when(!isPos, 1L).otherwise(0L)), lit(0L))).collect()(0)
+    val (nPos, nNeg) = (docs.getLong(0), docs.getLong(1))
+    require(nPos + nNeg > 0,
+      s"nbFitModel needs a non-empty seed (pos=$nPos, neg=$nNeg)")
+    val tokTable = materialize(twoSidedCounts(seed, isPos, textCol)
+      .select(col("tok"), col("ca").as("cPos"), col("cb").as("cNeg")))
+    val tot = tokTable.agg(sum("cPos"), sum("cNeg"), count(lit(1))).collect()(0)
     NbModel(tokTable,
       if (tot.isNullAt(0)) 0L else tot.getLong(0),
       if (tot.isNullAt(1)) 0L else tot.getLong(1),
-      docs.getLong(0), docs.getLong(1), tot.getLong(2))
+      nPos, nNeg, tot.getLong(2))
   }
 
   /** Score docs with a fitted [[NbModel]]: per-token Laplace log-odds
@@ -2669,32 +2594,11 @@ object TextOps {
     val d = featCols.length
     val proj = featCols.map(c => col(c).cast("double")) :+
       col(labelCol).cast("double").as("_y")
-    val cached0 = data.select(proj: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // scale-adaptive iteration parallelism: each GD round is a full-frame
-    // aggregate, so on a SMALL cached training set the round cost is pure
-    // task scheduling (32 partitions × 60 rounds for q513's fixture).
-    // Coalesce the cached frame to ~64k rows/task, floored at 1, capped
-    // at the session's parallelism — large inputs keep full parallelism,
-    // the row threshold (not a host constant) decides.
-    val nCache = cached0.count()
-    val targetParts = math.max(1L, math.min(
-      data.sparkSession.sparkContext.defaultParallelism.toLong,
-      (nCache + 65535L) / 65536L)).toInt
-    val cached =
-      if (targetParts < cached0.rdd.getNumPartitions)
-        cached0.coalesce(targetParts)
-      else cached0
+    val (handle, cached, _) = graft.core.iterCache(data.select(proj: _*))
     try {
       // weights as a broadcast 1-row frame → round-invariant codegen
-      def wFrame(w: Array[Double]) = {
-        val schema = org.apache.spark.sql.types.StructType(
-          w.indices.map(j => org.apache.spark.sql.types.StructField(
-            s"_w$j", org.apache.spark.sql.types.DoubleType, nullable = false)))
-        spark.createDataFrame(
-          java.util.Collections.singletonList(
-            org.apache.spark.sql.Row.fromSeq(w.toSeq)), schema)
-      }
+      def wFrame(w: Array[Double]) =
+        graft.core.paramRow(spark, w.indices.map(j => s"_w$j" -> w(j)))
       def z = featCols.zipWithIndex
         .map { case (c, j) => col(s"_w$j") * col(c) }.reduce(_ + _)
       def zLit(w: Array[Double]) = featCols.zipWithIndex
@@ -2728,7 +2632,7 @@ object TextOps {
       w.zipWithIndex.map { case (wj, j) =>
         (j, featCols(j), wj, ok, n, ok.toDouble / n)
       }.toSeq.toDF("j", "feature", "weight", "n_correct", "n", "accuracy")
-    } finally { cached0.unpersist(false) }
+    } finally { handle.unpersist(false) }
   }
 
   /** BPE tokenizer trainer (Sennrich et al. 2016): learn `nMerges` merge
@@ -2851,17 +2755,16 @@ object TextOps {
       terms: Seq[String], topK: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25Search needs at least one query term")
-    // Persisted: the tokenize scan is the dominant cost and three actions
-    // read it (the corpus-stats agg, the broadcast df-table build, the
-    // final scoring plan) — unpersisted, each re-runs the regex over the
-    // whole corpus (measured 3× the per-scan cost at 16× sf0.1). Stays
-    // cached for the lazy result like sourceSignature's counts; token
-    // arrays only, MEMORY_AND_DISK evicts under pressure. Single-shot
-    // convenience face: the postings here are pre-filtered to the query
-    // terms, so nothing term-agnostic is built. Repeated-query callers
-    // should [[bm25Build]] once and [[bm25SearchWith]] per term bag.
+    // Materialized: the tokenize scan is the dominant cost and three
+    // actions read it (the corpus-stats agg, the broadcast df-table
+    // build, the final scoring plan) — lazily, each re-runs the regex
+    // over the whole corpus (measured 3× the per-scan cost at 16×
+    // sf0.1). Single-shot convenience face: the postings here are
+    // pre-filtered to the query terms, so nothing term-agnostic is
+    // built. Repeated-query callers should [[bm25Build]] once and
+    // [[bm25SearchWith]] per term bag.
     val base = docs.select(col(idCol), tokens(col(textCol)).as("toks"))
-      .localCheckpoint(true)
+      .transform(materialize)
     // avgdl as one exact long sum ÷ one exact long count (single final
     // division) — an engine-internal double-accumulating avg() could
     // diverge in the last ulp and flip a 6dp contribution boundary
@@ -2886,12 +2789,11 @@ object TextOps {
     * into row-group skipping instead of a corpus scan. */
   case class Bm25Index(postings: DataFrame, n: Long, avgdl: Double)
 
-  /** ONE tokenize pass builds the whole index: doc lengths ride the
-    * explode, the per-(id, tok) roll-up is the only exchange, and the
-    * corpus scalars come from the same cached projection. */
+  /** The index: doc lengths ride the explode, the per-(id, tok) roll-up
+    * is the only exchange, and the corpus scalars are one eager
+    * aggregate over the same token projection. */
   def bm25Build(docs: DataFrame, idCol: String, textCol: String): Bm25Index = {
     val base = docs.select(col(idCol), tokens(col(textCol)).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats = base.agg(count(lit(1)),
       sum(size(col("toks")).cast("long"))).collect()(0)
     val n = stats.getLong(0)
@@ -2901,7 +2803,6 @@ object TextOps {
       .select(col(idCol), size(col("toks")).as("dl"),
         explode(col("toks")).as("tok"))
       .groupBy(idCol, "tok", "dl").agg(count(lit(1)).as("tf"))
-    base.unpersist(blocking = false)
     Bm25Index(postings, n, avgdl)
   }
 
@@ -2999,18 +2900,11 @@ object TextOps {
       smoothing: Double = 1.0): DataFrame = {
     val k = smoothing
     def counts(c: DataFrame, name: String): DataFrame =
-      c.select(explode(tokens(col(textCol))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as(name))
-    val cIn = counts(inDomain, "cIn")
-    val cGen = counts(general, "cGen")
-    // INTENTIONAL retained cache (r14 measured): persist keeps the
-    // vocab-sized model's statistics (broadcastable scoring join) and
-    // the lazy result; the eager checkpoint variant cost q487
-    // 0.11→0.44 s. Catalog-managed — clearCache/session end reclaims.
-    val model = cIn.join(cGen, Seq("tok"), "full_outer")
+      tokenCounts(c, Nil, textCol).withColumnRenamed("cnt", name)
+    val model = counts(inDomain, "cIn")
+      .join(counts(general, "cGen"), Seq("tok"), "full_outer")
       .select(col("tok"), coalesce(col("cIn"), lit(0L)).as("cIn"),
         coalesce(col("cGen"), lit(0L)).as("cGen"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = model.agg(sum("cIn").as("tIn"), sum("cGen").as("tGen"),
       count(lit(1)).as("v"))
     val toks = docs.select(col(idCol),
@@ -3032,9 +2926,7 @@ object TextOps {
         col("_s8").cast("double") / 1e8 / col("nTok").cast("double"))
       .select(col(idCol), col("nTok"), col("ceDiff"))
     // empty docs never reach the explode — restore them at ceDiff 0
-    docs.select(col(idCol)).join(agg, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("nTok"), lit(0L)).as("nTok"),
-        coalesce(col("ceDiff"), lit(0.0)).as("ceDiff"))
+    everyDoc(docs, idCol, agg, "nTok" -> lit(0L), "ceDiff" -> lit(0.0))
   }
 
   /** Interpolated Kneser–Ney bigram LM perplexity per document (Kneser
@@ -3056,27 +2948,13 @@ object TextOps {
     * tokens). */
   def knLmScore(docs: DataFrame, idCol: String, textCol: String,
       lmCorpus: DataFrame = null, discount: Double = 0.75): DataFrame = {
-    def grams(df: DataFrame): DataFrame = df
-      .select(col(idCol), tokens(col(textCol)).as("_t"))
-      .select(col(idCol), explode(when(size(col("_t")) >= 2, zip_with(
-        slice(col("_t"), lit(1), size(col("_t")) - 1),
-        slice(col("_t"), lit(2), size(col("_t")) - 1),
-        (a, b) => struct(a.as("ctx"), b.as("w")))).otherwise(array()))
-        .as("g"))
-      .select(col(idCol), col("g.ctx").as("ctx"), col("g.w").as("w"))
-    // the self-fit default tokenizes ONCE: the scoring grams double as
-    // the fit input. INTENTIONAL retained caches (r14 measured): persist
-    // keeps the count tables' statistics (broadcastable scoring joins)
-    // AND the lazy result (count-only consumers prune the scoring
-    // joins); an eager bounded variant measured q488 0.1→2.6 s.
-    // Catalog-managed — clearCache/session end reclaims.
-    val docGrams = grams(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the self-fit default builds the grams once: the scoring grams
+    // double as the fit input
+    val docGrams = lmGrams(docs, idCol, textCol, 2)
     val fitGrams =
       if (lmCorpus == null || (lmCorpus eq docs)) docGrams
-      else grams(lmCorpus)
+      else lmGrams(lmCorpus, idCol, textCol, 2)
     val cAB = fitGrams.groupBy("ctx", "w").agg(count(lit(1)).as("cab"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // per-context total + distinct successor count, one model-sized pass
     val ctxStats = cAB.groupBy("ctx")
       .agg(sum("cab").as("ca"), count(lit(1)).as("n1fwd"))
@@ -3107,9 +2985,7 @@ object TextOps {
       .withColumn("avgNll",
         col("_s8").cast("double") / 1e8 / col("nGrams").cast("double"))
       .select(col(idCol), col("nGrams"), col("avgNll"))
-    docs.select(col(idCol)).join(agg, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("nGrams"), lit(0L)).as("nGrams"),
-        coalesce(col("avgNll"), lit(0.0)).as("avgNll"))
+    everyDoc(docs, idCol, agg, "nGrams" -> lit(0L), "avgNll" -> lit(0.0))
   }
   /** PPMI word-association pairs (Church & Hanks, CL 1990): unordered
     * token pairs co-occurring within `window` positions, scored by
@@ -3131,14 +3007,11 @@ object TextOps {
   def ppmi(docs: DataFrame, idCol: String, textCol: String,
       window: Int = 2, minCount: Long = 5): DataFrame = {
     require(window >= 1 && window <= 8, "1 <= window <= 8")
-    // eager localCheckpoint, not persist: read by both join sides and
-    // there is no post-materialization unpersist point for the lazy
-    // result — checkpoint blocks are GC-cleaned when the result drops
-    // (the chiSquare contingency-table convention; r11 advice item)
+    // materialized: read by both join sides
     val toks = docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("_d"),
         posexplode(tokens(col(textCol))).as(Seq("_p", "_w")))
-      .localCheckpoint(true)
+      .transform(materialize)
     val right = toks.select(col("_d"), col("_p").as("_p2"),
       col("_w").as("_w2"))
     val pc = toks
@@ -3148,7 +3021,7 @@ object TextOps {
       .select(least(col("_w"), col("_w2")).as("wa"),
         greatest(col("_w"), col("_w2")).as("wb"))
       .groupBy("wa", "wb").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val m = pc.select(col("wa").as("w"), col("c"))
       .unionByName(pc.select(col("wb").as("w"), col("c")))
       .groupBy("w").agg(sum(col("c")).as("m"))
@@ -3183,11 +3056,10 @@ object TextOps {
     require(topV >= 1 && topV <= 4096, "1 <= topV <= 4096")
     val fp8 = (c: Column) =>
       graft.core.fixedPointLong(c, 8).cast("decimal(38,0)")
-    // eager localCheckpoint (GC-cleaned), not an unpersist-less persist
     val toks = docs.where(col(textCol).isNotNull)
       .select(col(groupCol).as("_g"),
         explode(tokens(col(textCol))).as("_w"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val vocab = toks.groupBy("_w").agg(count(lit(1)).as("_cf"))
       .orderBy(col("_cf").desc, col("_w").asc).limit(topV)
       .select(col("_w"), lit(true).as("_inv"))
@@ -3333,15 +3205,9 @@ object TextOps {
       bCol: String, n: Int = 2): DataFrame = {
     require(n >= 1 && n <= 8, "1 <= n <= 8")
     val ids = idCols.map(col)
-    def grams(c: Column): Column = {
-      val toks = tokens(c)
-      expr(s"""transform(sequence(1, greatest(size(_toks) - ${n - 1}, 0)),
-        | i -> array_join(slice(_toks, i, $n), ' '))"""
-        .stripMargin.replace("\n", " "))
-    }
     def side(c: String, tag: String) = pairs
       .select(ids :+ tokens(col(c)).as("_toks"): _*)
-      .select(ids :+ explode(grams(col(c))).as("_g"): _*)
+      .select(ids :+ explode(wordGrams(col("_toks"), n)).as("_g"): _*)
       .groupBy(ids :+ col("_g"): _*)
       .agg(count(lit(1)).as(s"_c$tag"))
     val j = side(aCol, "a").join(side(bCol, "b"), idCols :+ "_g", "full")

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * count (rank via the banded device — no data-sized sort), so φ is
   * model-sized and broadcasts; θ rides a hash join keyed by doc. Per
   * round: one pairs⋈θ⋈broadcast(φ) join materialized once
-  * (localCheckpoint, the als2 pattern — no iteration-growing lineage)
-  * feeding two hash aggregates (by doc, by word). Pairs are counted
-  * once and checkpointed.
+  * (`core.materialize`, the als2 pattern — no iteration-growing
+  * lineage) feeding two hash aggregates (by doc, by word). Pairs are
+  * counted once and materialized.
   *
   * Output per doc: idCol, n_terms, theta0 (P(topic 0 | doc)), topic
   * (argmax, ties → 0). */
@@ -36,21 +36,20 @@ object Topics {
       vocab: Int = 2000, iters: Int = 3, eps: Double = 1e-6): DataFrame = {
     require(iters >= 1 && iters <= 8, "1 <= iters <= 8")
     require(vocab >= 16, "vocab >= 16")
-    def r6(c: Column): Column =
-      (when(c >= 0, floor(c * 1e6 + 0.5)).otherwise(-floor(-c * 1e6 + 0.5)))
-        .cast("double") / 1e6
+    def r6(c: Column): Column = fixedPointLong(c, 6).cast("double") / 1e6
     def d9(c: Column) = fixedPointLong(c, 9).cast("decimal(38,0)")
-    val tok = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("_d"),
-        explode(TextOps.tokens(col(textCol))).as("_w"))
-      .where(col("_w") =!= "")
-    val wc = tok.groupBy(col("_w")).agg(count(lit(1)).as("_wc"))
+    val texts = docs.where(col(textCol).isNotNull)
+    val wc = TextOps.tokenCounts(texts, Nil, textCol)
+      .select(col("tok").as("_w"), col("cnt").as("_wc"))
     val top = bandedRowNumber(wc, band = col("_wc"), bandAsc = false,
       tie = Seq(col("_w").asc), out = "_rk", maxRank = vocab.toLong)
       .select(col("_w"))
-    val pairs = tok.join(broadcast(top), "_w")
+    // the top-vocabulary filter runs before the (doc, word) count
+    val pairs = texts
+      .select(col(idCol).as("_d"), explode(TextOps.tokens(col(textCol))).as("_w"))
+      .join(broadcast(top), "_w")
       .groupBy(col("_d"), col("_w")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true)
+      .transform(materialize)
     // exact-integer jittered init: n_zw ∈ [10000, 10999], φ_z = n/Σn
     def nInit(z: Int): Column =
       lit(10000L) + pmod(TextOps.hash56(concat(lit(s"plsa$z:"), col("_w"))),
@@ -90,7 +89,7 @@ object Topics {
         .select(col("_d"), col("_w"),
           d9(col("_c").cast("double") * col("_r0")).as("_m0"),
           d9(col("_c").cast("double") * (lit(1.0) - col("_r0"))).as("_m1"))
-        .localCheckpoint(true)
+        .transform(materialize)
       theta = resp.groupBy(col("_d"))
         .agg(sum(col("_m0")).as("_s0"), sum(col("_m1")).as("_s1"))
         .select(col("_d"), r6(col("_s0").cast("double") /

@@ -4,15 +4,15 @@ import graft.SparkEntry
 import java.io.File
 import scala.collection.mutable
 import scala.util.matching.Regex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Runs `SparkEntry` queries by name in one session from [[Session]]:
   *
   * {{{
-  * runMain graft.tools.Run time <sfDir> <reps> [q...]    build + count() each query, reps times
+  * runMain graft.tools.Run time <sfDir> <reps> [q...]    build + run each query, reps times
   * runMain graft.tools.Run explain <sfDir> [q...]        formatted physical plans, normalized
   * runMain graft.tools.Run plans <sfDir>                 write PLANS.md (static plan audit)
   * runMain graft.tools.Run windows <sfDir> [q...]        unpartitioned-window audit
@@ -66,7 +66,7 @@ object Run {
     sys.exit(2)
   }
 
-  /** Warm-up, then per rep and query: build + `count()`, timed; the
+  /** Warm-up, then per rep and query: build + [[runAll]], timed; the
     * cleanup between queries is untimed. Prints seconds, rows and the
     * persistent RDDs the query left behind. */
   def time(spark: SparkSession, sfDir: String, reps: Int, names: Seq[String]): Unit = {
@@ -74,12 +74,22 @@ object Run {
     for (r <- 1 to reps; n <- names) {
       val t0 = System.nanoTime()
       val rows =
-        try SparkEntry.queries(n)(spark, sfDir).count().toString
+        try runAll(SparkEntry.queries(n)(spark, sfDir)).toString
         catch { case t: Throwable => s"FAILED ${t.getClass.getName}: ${t.getMessage}" }
       val s = (System.nanoTime() - t0) / 1e9
       val left = Session.cleanUp(spark)
       println(f"[time] $n%-28s #$r $s%7.3f s rows=$rows rdds=$left")
     }
+  }
+
+  /** Runs every operator of `df`'s plan, as writing its rows would, and
+    * returns the row count. The rows go to the `noop` sink and the count
+    * is an observed metric of the same job. `count()` is not used: the
+    * optimizer drops from its plan every join the count does not need. */
+  def runAll(df: DataFrame): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n")).write.format("noop").mode("overwrite").save()
+    rows.get("n").asInstanceOf[Long]
   }
 
   /** Per query: its formatted physical plan, [[normalized]] so two
@@ -94,9 +104,11 @@ object Run {
     }
 
   /** `plan` with its session-global numbering taken out: expression ids
-    * (`#n`), RDD ids (`RDD[n]`), exchange plan ids (`plan_id=n`) and
-    * lambda-variable suffixes (`lambda x_n`) renumbered in order of first use; lambda class
-    * names, object hashes and source line numbers dropped. */
+    * (`#n`), RDD ids (`RDD[n]`, also in names such as
+    * `ZippedPartitionsRDD2[n]`), exchange plan ids (`plan_id=n`) and
+    * lambda-variable suffixes (`lambda x_n`) renumbered in order of first
+    * use; lambda class names, object hashes and source line numbers
+    * dropped. */
   def normalized(plan: String): String = {
     def renumber(s: String, re: Regex): String = {
       val ids = mutable.HashMap.empty[String, Int]
@@ -108,7 +120,7 @@ object Run {
       """(?<=[\w;$\[])@[0-9a-f]{1,8}\b""".r -> "@",
       """(\w\.scala):\d+""".r -> "$1")
       .foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
-    Seq("""(#)(\d+)""".r, """(RDD\[)(\d+)(?=\])""".r, """(plan_id=)(\d+)""".r,
+    Seq("""(#)(\d+)""".r, """(RDD\d*\[)(\d+)(?=\])""".r, """(plan_id=)(\d+)""".r,
       """(lambda \w+?_)(\d+)\b""".r).foldLeft(dropped)(renumber)
   }
 

@@ -291,4 +291,15 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(out("c")._2 - 1.0 / 3) < 1e-12)
     assert(out("d") == ((2L, 0.0)) && out("e") == ((1L, 0.0)))
   }
+
+  test("eigenvector centrality: the plan's join count grows at most linearly in iters") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "a"))
+      .toDF("src", "dst")
+    def joins(iters: Int): Int = Graph.eigenvectorCentrality(edges, "src", "dst", iters = iters)
+      .queryExecution.optimizedPlan.collect { case j: Join => j }.size
+    val js = (1 to 4).map(joins)
+    val steps = js.zip(js.tail).map { case (a, b) => b - a }
+    assert(steps.distinct.size == 1 && steps.head >= 0, s"joins by iters: $js")
+  }
 }

@@ -410,4 +410,17 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(over.isEmpty, over.mkString("; "))
   }
+
+  test("materialize: one build job, and the leaf reports its exact row count and size") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val df = spark.range(1000).where(col("id") % 7 === 0)
+      .select(col("id"), (col("id") * 2).as("x"))
+    val (leaf, jobs) = withBuildJobs(core.materialize(df))
+    assert(jobs == 1)
+    val stats = leaf.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(143)))
+    // 8 bytes of row overhead + two 8-byte longs per row
+    assert(stats.sizeInBytes == BigInt(143 * 24))
+    assert(leaf.count() == 143L && leaf.agg(sum("x")).head().getLong(0) == 2L * 7 * 142 * 143 / 2)
+  }
 }

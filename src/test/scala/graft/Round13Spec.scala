@@ -78,6 +78,14 @@ class Round13Spec extends SparkSpec {
     assert(ov3 == 1L && math.abs(f13 - 2.0 * (1.0 / 3) * (1.0 / 2) / (1.0 / 3 + 1.0 / 2)) < 1e-9)
   }
 
+  test("rougeN: a side with fewer than n tokens has no grams") {
+    val pairs = Seq((4L, "a", "a b c")).toDF("pid", "ta", "tb")
+    val r = TextOps.rougeN(pairs, Seq("pid"), "ta", "tb", n = 2).collect().head
+    assert(r.getAs[Long]("overlap") == 0L && r.getAs[Long]("n_a") == 0L &&
+      r.getAs[Long]("n_b") == 2L)
+    assert(r.isNullAt(r.fieldIndex("recall")) && r.getAs[Double]("precision") == 0.0)
+  }
+
   test("plsa2: disjoint-vocabulary clusters separate into opposite topics") {
     val sports = "goal match team player score league season coach stadium win"
     val cooking = "recipe oven butter flour sugar bake dough salt pepper simmer"

@@ -77,4 +77,24 @@ class RunSpec extends SparkSpec {
     assert(Run.planRow("q05_zscore", SparkEntry.queries("q05_zscore")(s, sfDir)) ==
       "| q05_zscore | 2 | 1 | 1 | 0 | 0 | 0 | 4 |  |")
   }
+
+  test("explain: numbered RDD names are renumbered like RDD[n]") {
+    assert(Run.normalized("ZippedPartitionsRDD2[5176] MapPartitionsRDD[5180] RDD[5176]") ==
+      "ZippedPartitionsRDD2[1] MapPartitionsRDD[2] RDD[1]")
+  }
+
+  test("time: runAll runs the joins count() prunes, and counts the same rows") {
+    import org.apache.spark.sql.functions.{lit, max, udf}
+    val touched = spark.sparkContext.longAccumulator("right side rows")
+    val touch = udf { (x: Long) => touched.add(1L); x }
+    val left = spark.range(10).toDF("id")
+    val right = spark.range(10).select((col("id") % 3).as("k"), touch(col("id")).as("v"))
+      .groupBy("k").agg(max("v").as("mv"))
+    val joined = left.join(right, left("id") === right("k"), "left")
+      .select(left("id"), right("mv"))
+    assert(joined.count() == 10L)
+    assert(touched.value == 0L, "count() is expected to prune the left join")
+    assert(Run.runAll(joined) == 10L)
+    assert(touched.value == 10L)
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.sim.Similarity
 import graft.text.TextOps
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class TextSpec extends SparkSpec {
@@ -1178,5 +1179,71 @@ class TextSpec extends SparkSpec {
       .map(r => r.getAs[String]("qid") -> r.getAs[Long]("doc_id")).toMap
     assert(out("q1") == 10L) // 1/61 ties with 99's 1/61 → id wins
     assert(out("q2") == 10L)
+  }
+
+  test("word grams: the shifted-slice builder equals the per-gram sequence form") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    // the form every gram builder used before: one index lambda per gram
+    def reference(t: Column, n: Int): Column = when(size(t) >= n,
+      transform(sequence(lit(0), size(t) - n),
+        i => concat_ws(" ", (0 until n).map(j => element_at(t, i + j + 1)): _*)))
+      .otherwise(array())
+    val word = Gen.oneOf("a", "b", "ab", "c", "Δ", "x1")
+    // n = 1…5; token arrays of length 0…n+3, and a null array
+    val row = for {
+      n <- Gen.choose(1, 5)
+      len <- Gen.choose(0, n + 3)
+      toks <- Gen.listOfN(len, word)
+      isNull <- Gen.frequency(1 -> true, 9 -> false)
+    } yield (n, if (isNull) null else toks.toArray)
+    val prop = Prop.forAll(Gen.listOfN(80, row)) { rows =>
+      val df = rows.toDF("n", "t")
+      def byN(f: (Column, Int) => Column) =
+        (1 to 5).foldLeft(lit(null).cast("array<string>"))(
+          (acc, k) => when(col("n") === k, f(col("t"), k)).otherwise(acc))
+      val out = df.select(col("n"), col("t"),
+        byN(TextOps.wordGrams(_, _)).as("got"), byN(reference).as("want")).collect()
+      out.forall { r =>
+        val len = if (r.isNullAt(1)) 0 else r.getSeq[String](1).length
+        val got = r.getSeq[String](2)
+        got == r.getSeq[String](3) && got.length == math.max(len - r.getInt(0) + 1, 0)
+      }
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("text model builders leave no cache entry behind") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val d = Seq((1L, "the cat sat on the mat", "a"), (2L, "the dog sat on the log", "b"),
+      (3L, "a cat and a dog", "a"), (4L, "the mat and the log", "b"))
+      .toDF("doc_id", "text", "label")
+    TextOps.lmScore(d, "doc_id", "text").collect()
+    TextOps.mooreLewisScore(d, "doc_id", "text", d.where(col("label") === "a"),
+      d).collect()
+    TextOps.knLmScore(d, "doc_id", "text").collect()
+    val idx = TextOps.bm25Build(d, "doc_id", "text")
+    TextOps.bm25SearchWith(idx, "doc_id", Seq("cat", "log"), topK = 2).collect()
+    TextOps.collocations(d, "doc_id", "text", minCount = 1L).collect()
+    val nb = TextOps.nbFitModel(d, "doc_id", "text", "label", "a")
+    TextOps.nbScore(d, "doc_id", "text", nb, "a", "b").collect()
+    assert(cacheManager.isEmpty)
+  }
+
+  test("nb fit: an empty seed fails in nbFitModel, naming both class counts") {
+    val empty = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "label")
+    val e = intercept[IllegalArgumentException] {
+      TextOps.nbFitModel(empty, "doc_id", "text", "label", "tech")
+    }
+    assert(e.getMessage.contains("nbFitModel") && e.getMessage.contains("pos=0, neg=0"))
+    // a one-class seed fits; scoring refuses it with both counts
+    val one = Seq((1L, "only one class here", "tech")).toDF("doc_id", "text", "label")
+    val m = TextOps.nbFitModel(one, "doc_id", "text", "label", "tech")
+    val e2 = intercept[IllegalArgumentException] {
+      TextOps.nbScore(one, "doc_id", "text", m, "tech", "poem")
+    }
+    assert(e2.getMessage.contains("pos=1, neg=0"))
   }
 }
