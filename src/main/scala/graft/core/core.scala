@@ -173,9 +173,10 @@ package object core {
     * Signed zero is normalized to +0.0: a value that differs from the
     * oracle's only below the rounding threshold must not leak its sign
     * through the hash compare (the oracle SQL normalizes the same way
-    * where a -0.0 can arise). */
+    * where a -0.0 can arise). One native expression
+    * ([[graft.expr.RoundLikeDuck]]) over the child cast to double. */
   def roundLikeDuck(c: Column, p: Int): Column = {
-    // The 1e12 passthrough below is only sub-ulp-safe when 1e12·10^p
+    // The 1e12 passthrough is only sub-ulp-safe when 1e12·10^p
     // exceeds 2^53 (so no genuine rounding is skipped) — that needs
     // p >= 4. For p <= 3 the guard would silently skip real rounding
     // between 1e12 and ~9e15 (advice r7); no caller uses p < 4, and
@@ -183,17 +184,13 @@ package object core {
     require(p >= 4 && p <= 9, s"roundLikeDuck requires 4 <= p <= 9, got $p " +
       "(the 1e12 overflow guard is calibrated for that range; " +
       "oracle mirrors replay the same shape)")
-    val f = math.pow(10, p)
-    val r = when(c.isNull, c)
-      .when(c >= 0, floor(c * f + 0.5) / f)
-      .otherwise(-floor(-c * f + 0.5) / f)
     // Spark's floor() yields LONG — |x|·10^p past 2⁶³ clamps to
     // Long.MaxValue and silently corrupts the value (seen on epoch-nanos
     // magnitudes). Above 1e12 a 4–6dp round is below the double's ulp
-    // anyway: pass the value through and mirror the guard in any oracle
-    // that emits such magnitudes.
-    when(abs(c) >= 1e12, c)
-      .otherwise(when(r === 0.0, lit(0.0)).otherwise(r))
+    // anyway: the value passes through, and any oracle that emits such
+    // magnitudes mirrors the guard.
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.expr.RoundLikeDuck(expression(c.cast("double")), p))
   }
 
   /** p-dp fixed-point long: floor(|x|·10^p + 0.5) with the sign restored —
@@ -273,6 +270,12 @@ package object core {
       java.util.Collections.singletonList(
         org.apache.spark.sql.Row.fromSeq(params.map(_._2))), schema)
   }
+
+  /** The session's `spark.sql.shuffle.partitions`: the FIXED task count
+    * of an exchange whose per-row cost is not its bytes, which AQE would
+    * otherwise coalesce by size onto a core or two. */
+  private[graft] def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Flat-window crossover bound for the banded devices (r12 verdict
     * item 3): a frame whose Catalyst size estimate is at most this many

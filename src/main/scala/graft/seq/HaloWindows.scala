@@ -165,7 +165,7 @@ object HaloWindows {
     import spark.implicits._
     val p =
       if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+      else graft.core.shufflePartitions(spark)
     data
       .where(col(valCol).isNotNull)
       .select(

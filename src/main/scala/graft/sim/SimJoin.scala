@@ -102,8 +102,8 @@ object SimJoin {
       // none, behind a single-partition rank window — left the whole
       // pair loop in one task. Hash-partitioned on the group key, the
       // aggregation below needs no second exchange.
-      .repartition(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        .toInt, col("_tk"), col("_bx"), col("_by"))
+      .repartition(graft.core.shufflePartitions(docs.sparkSession),
+        col("_tk"), col("_bx"), col("_by"))
       .groupBy(col("_tk"), col("_bx"), col("_by"))
       .agg(collect_list(struct(col("_id"), col("_sz"),
         (col("_p0") + 1).as("_pos"), col("_blk"), col("_r"))).as("_p"))

@@ -208,16 +208,23 @@ object StreamScorers {
       .dropDuplicatesWithinWatermark(idCols)
 
   /** The per-entity envelope of every event-at-a-time scorer below: events
-    * group by `key`; each micro-batch's events for one entity run sorted
-    * by `order` through `step(entity)` from the stored state (`init` on
-    * first sight), each emitting the rows its step returns, and the last
-    * state is stored back. Append output, no timeout. Executed as a batch
-    * query it is one exchange on the key and one fold per entity — the
-    * batch kernel's shape. */
+    * group by their string column `key`; each micro-batch's events for one
+    * entity run sorted by `order` through `step(entity)` from the stored
+    * state (`init` on first sight), each emitting the rows its step
+    * returns, and the last state is stored back. Append output, no
+    * timeout. Executed as a batch query it is one exchange on the key and
+    * one fold per entity — the batch kernel's shape. The exchange hashes
+    * the key column itself on a FIXED task count: a key lambda would
+    * deserialize every event only to compute its key and ship a copy of
+    * it, and AQE, sizing partitions by bytes, would squeeze the fold onto
+    * one or two tasks. Hash partitioning on the key already satisfies the
+    * grouping (and the streaming state's) distribution, so no second
+    * exchange follows. */
   private def perEntity[E, T: Ordering, S: Encoder, O: Encoder](
-      events: Dataset[E])(key: E => String, order: E => T, init: String => S)(
+      events: Dataset[E])(key: String, order: E => T, init: String => S)(
       step: String => (S, E) => (S, IterableOnce[O])): Dataset[O] =
-    events.groupByKey(key)(Encoders.STRING)
+    events.repartition(shufflePartitions(events.sparkSession), col(key))
+      .groupBy(col(key)).as[String, E](Encoders.STRING, events.encoder)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (entity: String, it: Iterator[E], gs: GroupState[S]) => {
           val next = step(entity)
@@ -238,7 +245,7 @@ object StreamScorers {
       step: String => (S, Double) => (S, Double)): Dataset[HoltOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    perEntity(events)(_.entity, e => (e.seq, e.value), init) { entity =>
+    perEntity(events)("entity", e => (e.seq, e.value), init) { entity =>
       val scoreNext = step(entity)
       (st, e) => {
         val (s, score) = scoreNext(st, e.value)
@@ -264,7 +271,7 @@ object StreamScorers {
         val p = c.toDouble / total
         acc - p * math.log(p)
       }
-    perEntity(events)(_.entity, _.seq, _ => HistState(Map.empty, 0L)) {
+    perEntity(events)("entity", _.seq, _ => HistState(Map.empty, 0L)) {
       entity => (st, e) =>
         val b = math.floor(e.value / bucketWidth).toLong
         val withB = st.counts.updated(b, st.counts.getOrElse(b, 0L) + 1)
@@ -508,7 +515,7 @@ object StreamScorers {
   def ddmStream(events: Dataset[ErrEvent]): Dataset[DdmOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    perEntity(events)(_.entity, _.seq,
+    perEntity(events)("entity", _.seq,
         _ => DdmState(0L, 0.0, Double.MaxValue, Double.MaxValue)) {
       entity => (st, e) =>
         val n = st.n + 1
@@ -556,7 +563,7 @@ object StreamScorers {
     // NOT BigDecimal HALF_UP — they disagree on half-boundary floats
     def r6(x: Double): Double = graft.text.TextOps.round6(x)
     def fp6(x: Double): Long = fixedPoint(x, 6).toLong
-    perEntity(events)(_.entity, _.seq,
+    perEntity(events)("entity", _.seq,
         _ => CusumSt(Nil, frozen = false, 0.0, 0.0, 0L, 0L, 0L)) { entity =>
       def step(st: CusumSt, seq: Long, v: Double): (CusumSt, CusumOut) = {
         val z = (v - st.mu0) / math.max(st.sd0, 1e-9)
@@ -612,7 +619,7 @@ object StreamScorers {
     val spark = events.sparkSession
     import spark.implicits._
     val deltaL = math.round(delta * 1e6)
-    perEntity(events)(_.entity, _.seq,
+    perEntity(events)("entity", _.seq,
         _ => PhSt(0L, 0L, 0L, 0L, Long.MaxValue, Long.MinValue)) {
       entity => (st, e) =>
         val n = st.n + 1
@@ -726,7 +733,7 @@ object StreamScorers {
       model: Map[String, (Double, Double, Long)]): Dataset[WeOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    perEntity(events)(_.entity, e => (e.seq, e.value), _ => WeSt(0, 0, 0, 0, Nil)) {
+    perEntity(events)("entity", e => (e.seq, e.value), _ => WeSt(0, 0, 0, 0, Nil)) {
       entity =>
         val (mu, sd, _) = model.getOrElse(entity, (0.0, 0.0, 0L))
         (st, e) => {
@@ -773,7 +780,7 @@ object StreamScorers {
     val spark = events.sparkSession
     import spark.implicits._
     val w = window
-    perEntity(events)(_.entity, _.seq, _ => CpBuf(Nil)) { entity => (st, e) =>
+    perEntity(events)("entity", _.seq, _ => CpBuf(Nil)) { entity => (st, e) =>
       val buf = (e.value :: st.window).take(2 * w)
       val stat =
         if (buf.size == 2 * w) {
@@ -835,7 +842,7 @@ object StreamScorers {
   def imputeLocfStream(events: Dataset[GapEvent]): Dataset[LocfOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    perEntity(events)(_.entity, _.seq, _ => LocfBuf(None)) { entity => (st, e) =>
+    perEntity(events)("entity", _.seq, _ => LocfBuf(None)) { entity => (st, e) =>
       val filled = e.value.orElse(st.lastSeen)
       (if (e.value.isDefined) LocfBuf(e.value) else st,
         Some(LocfOut(entity, e.seq, e.value, filled, e.value.isEmpty && filled.isDefined)))
@@ -858,7 +865,7 @@ object StreamScorers {
     require(motif.nonEmpty, "motif must have at least one state")
     val m = motif.toList
     val L = m.length
-    perEntity(events)(_.entity, _.seq, _ => MotifBuf(Nil, 0L)) { entity => (st, e) =>
+    perEntity(events)("entity", _.seq, _ => MotifBuf(Nil, 0L)) { entity => (st, e) =>
       val hist = e.state :: st.recent // newest-first, incl current
       val matched = hist.lengthCompare(L) >= 0 && hist.take(L).reverse == m
       val total = st.total + (if (matched) 1L else 0L)
@@ -877,7 +884,7 @@ object StreamScorers {
     val spark = events.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(transitions)
-    perEntity(events)(_.entity, _.seq, _ => MarkovBuf(null, Nil)) { _ => (st, e) =>
+    perEntity(events)("entity", _.seq, _ => MarkovBuf(null, Nil)) { _ => (st, e) =>
       val nll = Option(st.lastState)
         .map(ls => -math.log(bc.value.getOrElse((ls, e.state), 1e-12)))
       val win = (nll.toList ::: st.window).take(window)
@@ -1248,7 +1255,7 @@ object StreamScorers {
     require(steps.nonEmpty, "funnelStream needs at least one step")
     val spark = events.sparkSession
     import spark.implicits._
-    perEntity(events)(_.entity, e => (e.seq, e.typ), _ => FunnelSt(0, Long.MinValue)) {
+    perEntity(events)("entity", e => (e.seq, e.typ), _ => FunnelSt(0, Long.MinValue)) {
       entity => (st, e) =>
         if (st.step < steps.length && e.typ == steps(st.step) &&
           (st.step == 0 || e.seq > st.t))
@@ -1271,7 +1278,7 @@ object StreamScorers {
     val spark = events.sparkSession
     import spark.implicits._
     import graft.drift.Drift.{AdwinOut, AdwinState, adwinStep}
-    perEntity(events)(_.entity, _.seq, _ => AdwinState()) { entity => (st, e) =>
+    perEntity(events)("entity", _.seq, _ => AdwinState()) { entity => (st, e) =>
       val (next, drift) = adwinStep(delta, r)(st, e.value)
       (next, Some(AdwinOut(entity, e.seq, e.value, next.winStart, drift)))
     }
@@ -1288,7 +1295,7 @@ object StreamScorers {
       Dataset[graft.model.Preference.EloOut] = {
     val spark = matches.sparkSession
     import spark.implicits._
-    perEntity(matches)(_.league, _.ord, _ => Map.empty[String, Double]) { _ => (r, m) =>
+    perEntity(matches)("league", _.ord, _ => Map.empty[String, Double]) { _ => (r, m) =>
       val (next, row) = graft.model.Preference.eloStep(k, init)(r, m)
       (next, Some(row))
     }
@@ -1389,7 +1396,7 @@ object StreamScorers {
       col(ordCol).cast("long").as("o"),
       col(aCol).cast("double").as("a"), col(bCol).cast("double").as("b"))
       .as[(String, Long, Double, Double)]
-    perEntity(typed)(_._1, _._2, _ => MsprtState(0L, 0L, Double.NegativeInfinity)) {
+    perEntity(typed)("key", _._2, _ => MsprtState(0L, 0L, Double.NegativeInfinity)) {
       key => (st, row) =>
         val t = st.t + 1
         val sd4 = st.sd4 + rha((row._4 - row._3) * 1e4)

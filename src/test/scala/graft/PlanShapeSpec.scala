@@ -338,27 +338,34 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!scores(nonEqui.head), s"the score runs first: ${conds.head}")
   }
 
-  /** `build`'s frame and the jobs Spark started while building it (a
-    * local property tags the builder's thread; the listener bus is
-    * drained before the count is read). */
-  private def withBuildJobs(build: => DataFrame): (DataFrame, Int) = {
-    import java.util.concurrent.atomic.AtomicInteger
+  /** `body`'s result and the jobs Spark started while it ran (a local
+    * property tags the caller's thread; the listener bus is drained
+    * before the jobs are read). */
+  private def withJobs[A](body: => A): (A, Seq[org.apache.spark.scheduler.SparkListenerJobStart]) = {
+    import java.util.concurrent.ConcurrentLinkedQueue
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val phase = "graft.spec.phase"
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(phase) == "build")
-          jobs.incrementAndGet()
+        if (e.properties != null && e.properties.getProperty(phase) == "traced")
+          jobs.add(e)
     }
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty(phase, "build")
-      val df = try build finally sc.setLocalProperty(phase, null)
+      sc.setLocalProperty(phase, "traced")
+      val a = try body finally sc.setLocalProperty(phase, null)
       org.apache.spark.GraftTestBridge.drainListenerBus(sc)
-      (df, jobs.get)
+      (a, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `build`'s frame and the number of jobs Spark started while building it. */
+  private def withBuildJobs(build: => DataFrame): (DataFrame, Int) = {
+    val (df, jobs) = withJobs(build)
+    (df, jobs.size)
   }
 
   test("entity resolve: one lazy plan — no persisted or cached state, at most 3 build jobs") {
@@ -422,5 +429,28 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // 8 bytes of row overhead + two 8-byte longs per row
     assert(stats.sizeInBytes == BigInt(143 * 24))
     assert(leaf.count() == 143L && leaf.agg(sum("x")).head().getLong(0) == 2L * 7 * 142 * 143 / 2)
+  }
+
+  test("per-entity envelope: keyed on its column, one exchange, the fold on every shuffle partition") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // q197's frame: the Holt twin batch-executed over the events
+    val evd = core.table(spark, sfDir, "events")
+      .select(col("user_id").cast("string").as("entity"),
+        col("event_id").cast("long").as("seq"), col("value").cast("double").as("value"))
+      .as[graft.streaming.StreamScorers.ValueEvent]
+    val out = graft.streaming.StreamScorers.holtForecastStream(evd)
+    assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    val (rows, jobs) = withJobs(out.collect())
+    assert(rows.nonEmpty)
+    val p = out.queryExecution.executedPlan
+    assert(!p.toString.contains("AppendColumns"), s"the key is computed per event:\n$p")
+    val shuffles = collectWithSubqueries(p) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.length == 1, s"expected 1 exchange, got ${shuffles.length}:\n$p")
+    // the fold runs in the action's last stage; AQE must not coalesce it
+    val fold = jobs.flatMap(_.stageInfos).maxBy(_.stageId)
+    assert(fold.numTasks == core.shufflePartitions(spark),
+      s"the fold ran ${fold.numTasks} tasks")
   }
 }
