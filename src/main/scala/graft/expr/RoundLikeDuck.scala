@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** DuckDB's `round(x, p)` on a double as ONE native expression — the
   * body of [[graft.core.roundLikeDuck]], which every query's `canon`
-  * applies to each double column. The Column form it replaces was a
-  * ~50-node CASE/floor tree per column, and resolving those trees was a
+  * applies to each double column. As a Column, the same program is a
+  * ~50-node CASE/floor tree per column, and resolving those trees took a
   * quarter of the driver's DataFrame-build time on short queries.
   *
   * The float program is the tree's, op for op (see [[RoundLikeDuck.round]]):
