@@ -208,10 +208,13 @@ package object core {
     * zero, as a whole-valued double. `.toLong` gives the fixed-point long
     * (NaN → 0; ±∞ and |x|·10^p ≥ 2⁶³ clamp to the Long bounds), `/ 10^p`
     * the p-dp rounded value (NaN and ±∞ pass through). */
-  def fixedPoint(x: Double, p: Int): Double = {
-    val f = math.pow(10, p)
+  def fixedPoint(x: Double, p: Int): Double = scaledHalfAway(x, math.pow(10, p))
+
+  /** x·f rounded half away from zero as a whole-valued double: the one
+    * copy of the rule, for [[fixedPoint]] (f = 10^p) and
+    * [[graft.expr.RoundLikeDuck.round]]. */
+  private[graft] def scaledHalfAway(x: Double, f: Double): Double =
     if (x >= 0) math.floor(x * f + 0.5) else -math.floor(-x * f + 0.5)
-  }
 
   /** The one materialization seam: `df` computed once by one eager job
     * (the job `localCheckpoint(true)` runs), as a GC-cleaned leaf whose

@@ -39,12 +39,12 @@ case class RoundLikeDuck(child: Expression, p: Int) extends UnaryExpression {
 object RoundLikeDuck {
   /** Half away from zero on the float product x·f. Spark orders NaN above
     * every double, so the tree's `abs(x) >= 1e12` guard let NaN through
-    * too; `!(|x| < 1e12)` is that guard in Java comparisons. */
+    * too; `!(|x| < 1e12)` is that guard in Java comparisons. The tree
+    * negated after its LONG cast; negating before it differs only at the
+    * clamp (−Long.MaxValue vs Long.MinValue), which are one double. */
   def round(x: Double, f: Double): Double = {
     if (!(math.abs(x) < 1e12)) return x
-    val r =
-      if (x >= 0) math.floor(x * f + 0.5).toLong.toDouble / f
-      else (-math.floor(-x * f + 0.5).toLong).toDouble / f
+    val r = graft.core.scaledHalfAway(x, f).toLong.toDouble / f
     if (r == 0.0) 0.0 else r
   }
 }

@@ -218,8 +218,11 @@ object StreamScorers {
     * deserialize every event only to compute its key and ship a copy of
     * it, and AQE, sizing partitions by bytes, would squeeze the fold onto
     * one or two tasks. Hash partitioning on the key already satisfies the
-    * grouping (and the streaming state's) distribution, so no second
-    * exchange follows. */
+    * grouping distribution, and the streaming state's while the query runs
+    * under the partition count it was started with, so no second exchange
+    * follows. A query restarted from a checkpoint written under another
+    * `spark.sql.shuffle.partitions` keeps the checkpoint's state partition
+    * count, and a second exchange follows this one. */
   private def perEntity[E, T: Ordering, S: Encoder, O: Encoder](
       events: Dataset[E])(key: String, order: E => T, init: String => S)(
       step: String => (S, E) => (S, IterableOnce[O])): Dataset[O] =

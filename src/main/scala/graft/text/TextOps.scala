@@ -37,19 +37,15 @@ object TextOps {
   /** The word n-grams of token array `t`, in order. Gram i is
     * `last(prefix, t[i + n − 1])`, where the prefix is the n − 1 tokens
     * from i joined by spaces; by default `last` joins with a space too.
-    * Built from n shifted slices zipped in one pass, so no lambda indexes
-    * the array per gram and each prefix is joined once. n = 1 is `t`
-    * itself. Empty when `t` is null or has fewer than n tokens. */
+    * Built from n shifted slices zipped pairwise, so no lambda indexes
+    * the array per gram. n = 1 is `t` itself. Empty when `t` is null or
+    * has fewer than n tokens. */
   private[graft] def wordGrams(t: Column, n: Int,
       last: (Column, Column) => Column = concat_ws(" ", _, _)): Column = {
     require(n >= 1, s"n-gram order $n must be >= 1")
     def shifted(j: Int) = slice(t, lit(j + 1), size(t) - (n - 1))
-    val grams = n match {
-      case 1 => t
-      case 2 => zip_with(shifted(0), shifted(1), last)
-      case _ => transform(arrays_zip((0 until n).map(shifted): _*), g =>
-        last(concat_ws(" ", (0 until n - 1).map(j => g(j.toString)): _*), g((n - 1).toString)))
-    }
+    val grams = if (n == 1) t else zip_with((1 until n - 1).foldLeft(shifted(0))(
+      (g, j) => zip_with(g, shifted(j), concat_ws(" ", _, _))), shifted(n - 1), last)
     when(size(t) >= n, grams).otherwise(array())
   }
 
